@@ -55,20 +55,16 @@ object EmbeddingSignatureStore {
     * next store generation, and commit atomically. One pass over the
     * source; everything later (screen/admit/reingest/selfPairs) runs
     * from stored state alone. */
-  def ingest(embeddings: DataFrame, store: String, buckets: Int = 8): Unit = {
-    val s = embeddings.sparkSession
-    val g = StoreMeta.begin(s, store)
-    def gt(p: String) = StoreMeta.name(store, p, g)
-    parts.foreach(p => SignatureStore.dropStale(s, gt(p)))
-    val e = normalized(embeddings).persist(MEMORY_AND_DISK)
-    val n = try {
-      val n0 = e.count()
-      val (b, r) = DedupQueries.lshGeometry(n0)
-      writeGen(s, gt, e, b, r, n0, buckets)
-      n0
-    } finally e.unpersist()
-    StoreMeta.commit(s, store, g, parts, Some(n))
-  }
+  def ingest(embeddings: DataFrame, store: String, buckets: Int = 8): Unit =
+    StoreMeta.writeGeneration(embeddings.sparkSession, store, parts) { g =>
+      val e = normalized(embeddings).persist(MEMORY_AND_DISK)
+      try {
+        val n = e.count()
+        val (b, r) = DedupQueries.lshGeometry(n)
+        writeGen(g, e, b, r, n, buckets)
+        Some(n)
+      } finally e.unpersist()
+    }
 
   /** The store's frozen geometry (b, r) at generation `gen`. */
   private[analytics] def geometry(s: SparkSession, store: String,
@@ -92,9 +88,7 @@ object EmbeddingSignatureStore {
     val stored = s.table(StoreMeta.name(store, "bands", gen))
     val vecs = s.table(StoreMeta.name(store, "vectors", gen))
     val be = normalized(batch).persist(MEMORY_AND_DISK)
-    val bBands = be.select(col("vec_id"),
-      posexplode(VectorFunctions.lshBands(col("v"), b, r))
-        .as(Seq("band_idx", "band_val")))
+    val bBands = bands(be, b, r)
     val cand = stored.as("p")
       .join(bBands.as("q"),
         col("p.band_idx") === col("q.band_idx") &&
@@ -122,30 +116,14 @@ object EmbeddingSignatureStore {
   def admit(s: SparkSession, store: String, batch: DataFrame): Unit = {
     val gen = StoreMeta.genOrFail(s, store)
     val (b, r) = geometry(s, store, gen)
-    val vecT = StoreMeta.name(store, "vectors", gen)
-    val bandT = StoreMeta.name(store, "bands", gen)
     val be = normalized(batch).persist(MEMORY_AND_DISK)
     try {
       val n = be.count()
-      Bucketing.alignToBuckets(
-          be.select(col("vec_id"), col("v"), col("nrm")),
-          "vec_id", SignatureStore.bucketCount(s, vecT))
-        .write.format("parquet").mode("append")
-        .bucketBy(SignatureStore.bucketCount(s, vecT), "vec_id")
-        .sortBy("vec_id").saveAsTable(vecT)
-      Bucketing.alignToBuckets(
-          be.select(col("vec_id"),
-            posexplode(VectorFunctions.lshBands(col("v"), b, r))
-              .as(Seq("band_idx", "band_val"))),
-          "band_val", SignatureStore.bucketCount(s, bandT))
-        .write.format("parquet").mode("append")
-        .bucketBy(SignatureStore.bucketCount(s, bandT), "band_val")
-        .sortBy("band_val").saveAsTable(bandT)
+      StoreMeta.append(s, StoreMeta.name(store, "vectors", gen),
+        be.select(col("vec_id"), col("v"), col("nrm")))
+      StoreMeta.append(s, StoreMeta.name(store, "bands", gen), bands(be, b, r))
       StoreMeta.addDocs(s, store, n)
     } finally be.unpersist()
-    // refresh through the CALLER's session — inside foreachBatch the
-    // writes ran on the micro-batch clone (see SignatureStore.admit)
-    Seq(vecT, bandT).foreach(t => s.catalog.refreshTable(t))
   }
 
   /** Re-key the store when admits have outgrown the frozen geometry:
@@ -158,21 +136,15 @@ object EmbeddingSignatureStore {
     * way banding changes, so the change is an explicit, committed
     * generation instead of a silent per-run drift. */
   def reingest(s: SparkSession, store: String): Unit = {
-    val gen = StoreMeta.genOrFail(s, store)
-    val next = gen + 1
-    def nxt(p: String) = StoreMeta.name(store, p, next)
-    val buckets = SignatureStore.bucketCount(
-      s, StoreMeta.name(store, "vectors", gen))
-    val n = StoreMeta.docCount(s, store).getOrElse(
-      s.table(StoreMeta.name(store, "vectors", gen)).count())
+    val vecT = StoreMeta.table(s, store, "vectors")
+    val buckets = StoreMeta.bucketCount(s, vecT)
+    val n = StoreMeta.docCount(s, store).getOrElse(s.table(vecT).count())
     val (b, r) = DedupQueries.lshGeometry(n)
-    val e = s.table(StoreMeta.name(store, "vectors", gen))
-      .persist(MEMORY_AND_DISK)
-    try {
-      parts.foreach(p => SignatureStore.dropStale(s, nxt(p)))
-      writeGen(s, nxt, e, b, r, n, buckets)
+    val e = s.table(vecT).persist(MEMORY_AND_DISK)
+    try StoreMeta.writeGeneration(s, store, parts) { g =>
+      writeGen(g, e, b, r, n, buckets)
+      None
     } finally e.unpersist()
-    StoreMeta.commit(s, store, next, parts, None)
   }
 
   /** Full-corpus near-dup pairs from STORED state alone: the band
@@ -203,25 +175,21 @@ object EmbeddingSignatureStore {
       .filter(col("cos_sim") >= 0.4)
   }
 
+  /** (vec_id, band_idx, band_val) band rows of `e` under (b, r). */
+  private def bands(e: DataFrame, b: Int, r: Int): DataFrame =
+    e.select(col("vec_id"),
+      posexplode(VectorFunctions.lshBands(col("v"), b, r))
+        .as(Seq("band_idx", "band_val")))
+
   /** Write one complete generation's three part tables. */
-  private def writeGen(s: SparkSession, gt: String => String, e: DataFrame,
+  private def writeGen(g: StoreMeta.Generation, e: DataFrame,
       b: Int, r: Int, n: Long, buckets: Int): Unit = {
+    val s = e.sparkSession
     import s.implicits._
-    Seq((b, r, n)).toDF("b", "r", "n_ingest")
-      .write.mode("overwrite").format("parquet").saveAsTable(gt("geo"))
-    SignatureStore.markStoreTable(s, gt("geo"))
-    Bucketing.alignToBuckets(
-        e.select(col("vec_id"), col("v"), col("nrm")), "vec_id", buckets)
-      .write.bucketBy(buckets, "vec_id").sortBy("vec_id")
-      .format("parquet").mode("overwrite").saveAsTable(gt("vectors"))
-    SignatureStore.markStoreTable(s, gt("vectors"))
-    Bucketing.alignToBuckets(
-        e.select(col("vec_id"),
-          posexplode(VectorFunctions.lshBands(col("v"), b, r))
-            .as(Seq("band_idx", "band_val"))),
-        "band_val", buckets)
-      .write.bucketBy(buckets, "band_val").sortBy("band_val")
-      .format("parquet").mode("overwrite").saveAsTable(gt("bands"))
-    SignatureStore.markStoreTable(s, gt("bands"))
+    g.write("geo", Seq((b, r, n)).toDF("b", "r", "n_ingest"))
+    g.write("vectors", e.select(col("vec_id"), col("v"), col("nrm")),
+      Some(StoreMeta.Buckets("vec_id", buckets)))
+    g.write("bands", bands(e, b, r),
+      Some(StoreMeta.Buckets("band_val", buckets)))
   }
 }

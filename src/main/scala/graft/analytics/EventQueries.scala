@@ -784,7 +784,7 @@ object EventQueries {
     * broadcast theta join over day counts (the r13 rewrite — the
     * prior countByRank pipeline shuffled every per-user row through a
     * bucket exchange plus 5 derived stages; the histogram shuffles
-    * only map-side-combined day cells, 123 → 16 Exchanges in the
+    * only map-side-combined day cells, 123 → 68 Exchanges in the
     * committed plans). The hazard running sum rides a bounded
     * triangular join, never a partition-less window. */
   val qEventsSurvival = Q(

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -74,53 +74,41 @@ object SignatureStore {
     * the executor-core count. */
   def ingest(corpus: DataFrame, store: String, buckets: Int = 8): Unit = {
     val s = corpus.sparkSession
-    // Write the NEXT generation beside any current one; readers keep
-    // answering from the committed generation until the atomic pointer
-    // swap at the end. dropStale per target table covers crashed prior
-    // writers and cross-JVM leftovers (the in-memory catalog forgets a
-    // previous process's managed tables, whose still-on-disk locations
-    // would fail saveAsTable with LOCATION_ALREADY_EXISTS).
-    val g = StoreMeta.begin(s, store)
-    def gt(p: String) = StoreMeta.name(store, p, g)
-    parts.foreach(p => dropStale(s, gt(p)))
-    // the RAW corpus document count — persisted so reingest's
-    // df-threshold basis never drifts toward a stored-derived count
-    // that excludes all-stopped docs
-    val nDocs = corpus.count()
-    // ONE md5 per shingle instance yields both the minhash input v and
-    // the stored fingerprint h; nothing past this point carries text
-    val hsh0 = DedupQueries.hashedShingles(corpus).persist(MEMORY_AND_DISK)
-    try {
-      DedupQueries.stopFingerprints(hsh0, corpus)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(gt("stop"))
-      markStoreTable(s, gt("stop"))
-      // read the WRITTEN set back so ingest filters with exactly the
-      // bytes a later screen will read
-      val stop = s.table(gt("stop"))
-      val sh = hsh0.join(broadcast(stop), Seq("h"), "left_anti")
-        .persist(MEMORY_AND_DISK)
+    StoreMeta.writeGeneration(s, store, parts) { g =>
+      // the RAW corpus document count — persisted so reingest's
+      // df-threshold basis never drifts toward a stored-derived count
+      // that excludes all-stopped docs
+      val nDocs = corpus.count()
+      // ONE md5 per shingle instance yields both the minhash input v and
+      // the stored fingerprint h; nothing past this point carries text
+      val hsh0 = DedupQueries.hashedShingles(corpus).persist(MEMORY_AND_DISK)
       try {
-        Bucketing.writeBucketed(sh.select(col("doc_id"), col("h")),
-          gt("shingles"), "doc_id", buckets)
-        markStoreTable(s, gt("shingles"))
-        val mh = DedupQueries
-          .minhashAggV(sh.select(col("doc_id"), col("v")))
+        g.write("stop", DedupQueries.stopFingerprints(hsh0, corpus))
+        // read the WRITTEN set back so ingest filters with exactly the
+        // bytes a later screen will read
+        val sh = hsh0.join(broadcast(s.table(g("stop"))), Seq("h"), "left_anti")
           .persist(MEMORY_AND_DISK)
-        try {
-          mh.select(col("doc_id"), col("n"))
-            .write.mode("overwrite").format("parquet")
-            .saveAsTable(gt("sizes"))
-          markStoreTable(s, gt("sizes"))
-          Bucketing.alignToBuckets(DedupQueries.bandSig(mh), "bh", buckets)
-            .write.bucketBy(buckets, "bh").sortBy("bh")
-            .format("parquet").mode("overwrite")
-            .saveAsTable(gt("signatures"))
-          markStoreTable(s, gt("signatures"))
-        } finally mh.unpersist()
-      } finally sh.unpersist()
-    } finally hsh0.unpersist()
-    StoreMeta.commit(s, store, g, parts, Some(nDocs))
+        try writeSignatures(g, sh, col("v"), buckets)
+        finally sh.unpersist()
+      } finally hsh0.unpersist()
+      Some(nDocs)
+    }
+  }
+
+  /** The shingles, sizes and signatures parts of generation `g` from
+    * the post-stop shingle instances `sh` (doc_id, h, ...) and their
+    * minhash input `v` — shared by [[ingest]] and [[reingest]]. */
+  private def writeSignatures(g: StoreMeta.Generation, sh: DataFrame,
+      v: Column, buckets: Int): Unit = {
+    g.write("shingles", sh.select(col("doc_id"), col("h")),
+      Some(StoreMeta.Buckets("doc_id", buckets)))
+    val mh = DedupQueries.minhashAggV(sh.select(col("doc_id"), v))
+      .persist(MEMORY_AND_DISK)
+    try {
+      g.write("sizes", mh.select(col("doc_id"), col("n")))
+      g.write("signatures", DedupQueries.bandSig(mh),
+        Some(StoreMeta.Buckets("bh", buckets)))
+    } finally mh.unpersist()
   }
 
   /** Admit a (screened) batch into the store: append its shingles,
@@ -135,11 +123,8 @@ object SignatureStore {
     * [[reingest]] re-keys from stored state when drift warrants. */
   def admit(s: SparkSession, store: String, batch: DataFrame): Unit = {
     // one generation resolve for the whole operation (see StoreMeta)
-    val gen = StoreMeta.genOrFail(s, store)
-    def gt(p: String) = StoreMeta.name(store, p, gen)
-    val stop = s.table(gt("stop"))
-    val shB = gt("shingles")
-    val sigB = gt("signatures")
+    val t = StoreMeta.current(s, store)
+    val stop = s.table(t("stop"))
     // the raw doc count (for the persisted ndocs) and the shingle
     // pipeline both consume the batch — persist it so its upstream
     // lineage executes ONCE per admit, not once per consumer
@@ -153,19 +138,9 @@ object SignatureStore {
         .minhashAggV(bsh.select(col("doc_id"), col("v")))
         .persist(MEMORY_AND_DISK)
       try {
-        Bucketing.alignToBuckets(bsh.select(col("doc_id"), col("h")),
-            "doc_id", bucketCount(s, shB))
-          .write.format("parquet").mode("append")
-          .bucketBy(bucketCount(s, shB), "doc_id").sortBy("doc_id")
-          .saveAsTable(shB)
-        bmh.select(col("doc_id"), col("n"))
-          .write.format("parquet").mode("append")
-          .saveAsTable(gt("sizes"))
-        Bucketing.alignToBuckets(DedupQueries.bandSig(bmh),
-            "bh", bucketCount(s, sigB))
-          .write.format("parquet").mode("append")
-          .bucketBy(bucketCount(s, sigB), "bh").sortBy("bh")
-          .saveAsTable(sigB)
+        StoreMeta.append(s, t("shingles"), bsh.select(col("doc_id"), col("h")))
+        StoreMeta.append(s, t("sizes"), bmh.select(col("doc_id"), col("n")))
+        StoreMeta.append(s, t("signatures"), DedupQueries.bandSig(bmh))
       } finally bmh.unpersist()
     } finally {
       bsh.unpersist()
@@ -174,13 +149,6 @@ object SignatureStore {
     // keep the persisted raw-document count current — reingest's
     // df-threshold basis covers corpus + every admitted batch
     StoreMeta.addDocs(s, store, nBatch)
-    // The writes above ran on the BATCH's session — inside foreachBatch
-    // that is the micro-batch clone, whose automatic refreshTable only
-    // invalidates ITS OWN relation cache. Refresh through the caller's
-    // session too, or its next screen would read a stale cached file
-    // index and silently miss everything just admitted (caught live by
-    // the streaming daily-loop spec).
-    Seq(shB, gt("sizes"), sigB).foreach(n => s.catalog.refreshTable(n))
   }
 
   /** Refresh the store's frozen geometry from STORED state — no
@@ -208,17 +176,13 @@ object SignatureStore {
     * threshold) the refresh is a no-op: screens before and after
     * return identical pairs (spec-asserted). */
   def reingest(s: SparkSession, store: String): Unit = {
-    val gen = StoreMeta.genOrFail(s, store)
-    val next = gen + 1
-    def cur(p: String) = StoreMeta.name(store, p, gen)
-    def nxt(p: String) = StoreMeta.name(store, p, next)
-    val buckets = bucketCount(s, cur("shingles"))
-    // the refresh READS generation `gen` and WRITES generation `next`
+    // the refresh READS the committed generation and WRITES the next
     // — no snapshot/checkpoint needed: the source tables stay intact
     // until a later commit retires them, and racing readers keep
-    // answering from `gen` until the atomic pointer swap
+    // answering from the committed one until the atomic pointer swap
+    val cur = StoreMeta.current(s, store)
+    val buckets = StoreMeta.bucketCount(s, cur("shingles"))
     val sh = s.table(cur("shingles"))
-    val stopOld = s.table(cur("stop"))
     // the df-threshold basis is the PERSISTED raw document count
     // (corpus + admits), not a stored-derived count that would exclude
     // docs whose shingles were all stopped and compound toward
@@ -235,31 +199,12 @@ object SignatureStore {
       .select(col("h"))
     val sh2 = sh.join(broadcast(newStop), Seq("h"), "left_anti")
       .persist(MEMORY_AND_DISK)
-    try {
-      parts.foreach(p => dropStale(s, nxt(p)))
-      stopOld.union(newStop).distinct()
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(nxt("stop"))
-      markStoreTable(s, nxt("stop"))
-      Bucketing.writeBucketed(sh2.select(col("doc_id"), col("h")),
-        nxt("shingles"), "doc_id", buckets)
-      markStoreTable(s, nxt("shingles"))
-      val mh = DedupQueries.minhashAggV(sh2.select(col("doc_id"),
-          DedupQueries.minhashInputFromFingerprint.as("v")))
-        .persist(MEMORY_AND_DISK)
-      try {
-        mh.select(col("doc_id"), col("n"))
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(nxt("sizes"))
-        markStoreTable(s, nxt("sizes"))
-        Bucketing.alignToBuckets(DedupQueries.bandSig(mh), "bh", buckets)
-          .write.bucketBy(buckets, "bh").sortBy("bh")
-          .format("parquet").mode("overwrite")
-          .saveAsTable(nxt("signatures"))
-        markStoreTable(s, nxt("signatures"))
-      } finally mh.unpersist()
+    try StoreMeta.writeGeneration(s, store, parts) { g =>
+      g.write("stop", s.table(cur("stop")).union(newStop).distinct())
+      writeSignatures(g, sh2,
+        DedupQueries.minhashInputFromFingerprint.as("v"), buckets)
+      None
     } finally sh2.unpersist()
-    StoreMeta.commit(s, store, next, parts, None)
   }
 
   /** Upgrade a pre-generation store layout in place (see
@@ -273,47 +218,6 @@ object SignatureStore {
     // not a table-not-found from an eager count
     StoreMeta.migrate(s, store, parts,
       Some(s.table(s"${store}_sizes").count()))
-
-  /** The bucket count an append must match (reads the catalog — the
-    * ingest-time `buckets` choice is authoritative). */
-  private[analytics] def bucketCount(s: SparkSession, name: String): Int =
-    s.sql(s"DESCRIBE EXTENDED $name").collect()
-      .collectFirst {
-        case r if r.getString(0) == "Num Buckets" => r.getString(1).trim.toInt
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"$name is not a bucketed store table — run ingest first"))
-
-  /** Brand `name` as a graft store table (TBLPROPERTIES marker) —
-    * called after every store write so [[dropStale]] can tell a stale
-    * store generation from an UNRELATED table whose name happens to
-    * collide with the prefix, and refuse to destroy the latter. */
-  private[analytics] def markStoreTable(s: SparkSession, name: String): Unit =
-    s.sql(s"ALTER TABLE $name SET TBLPROPERTIES ('graft.store' = 'true')")
-
-  private[analytics] def dropStale(s: SparkSession, name: String): Unit = {
-    val cat = s.sessionState.catalog
-    val id = org.apache.spark.sql.catalyst.TableIdentifier(name)
-    // a catalog-known table WITHOUT the ingest-time marker is not ours
-    // to drop: fail loudly instead of silently destroying a user table
-    // that collides with the store prefix
-    if (cat.tableExists(id) &&
-        !cat.getTableMetadata(id).properties.contains("graft.store"))
-      throw new IllegalStateException(
-        s"table $name exists but was not written by a graft store " +
-          "(missing 'graft.store' table property) — refusing to drop it; " +
-          "choose a different store name")
-    s.sql(s"DROP TABLE IF EXISTS $name")
-    // ask the CATALOG where the managed table would land — the conf's
-    // warehouse dir diverges from it when a persistent metastore (e.g.
-    // spark-shell's Hive+derby default) pinned the default database's
-    // location in an earlier session
-    val path = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)))
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
 
   /** Screen an arriving `batch` (doc_id, text; ids unique vs the
     * stored corpus) against a previously [[ingest]]ed store. Returns
@@ -335,11 +239,11 @@ object SignatureStore {
     // committed generation, so a concurrent refresh can never blend
     // into this screen's answer (keep-two retention guarantees the
     // resolved tables survive one racing swap — see StoreMeta)
-    val gen = StoreMeta.genOrFail(s, store)
-    val stop = s.table(StoreMeta.name(store, "stop", gen))
-    val corpusSig = s.table(StoreMeta.name(store, "signatures", gen))
-    val corpusSh = s.table(StoreMeta.name(store, "shingles", gen))
-    val corpusSizes = s.table(StoreMeta.name(store, "sizes", gen))
+    val t = StoreMeta.current(s, store)
+    val stop = s.table(t("stop"))
+    val corpusSig = s.table(t("signatures"))
+    val corpusSh = s.table(t("shingles"))
+    val corpusSizes = s.table(t("sizes"))
     // batch-side signatures under the stored (frozen) geometry; the
     // batch shingle table feeds the verify join AND the batch size
     // lookup, so persist it for the query's lifetime. One md5 per

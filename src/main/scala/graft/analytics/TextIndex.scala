@@ -3,8 +3,9 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted BM25 inverted index — the LEXICAL member of the store
-  * trio ([[SignatureStore]] dedup / [[VectorIndex]] ANN / this): the
+/** Persisted BM25 inverted index — the LEXICAL member of the four
+  * stores ([[SignatureStore]] and [[EmbeddingSignatureStore]] dedup,
+  * [[VectorIndex]] ANN, this): the
   * inline [[TextQueries.qTextBm25]] rebuilds postings, document
   * frequencies, and corpus statistics from the corpus on every run; a
   * production search pipeline builds them ONCE at ingest and serves
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Layout (generation-suffixed via [[StoreMeta]], atomic pointer swap,
   * keep-two retention — identical lifecycle guarantees to the other
-  * two stores):
+  * three stores):
   *   - `{store}_post`  (w, doc_id, n, dl) — the postings, bucketed by
   *     term so a query's probe reads inverted lists in place; the doc
   *     length is DENORMALIZED into each posting (the impact-ordered-
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
   *   - `{store}_stats` one row (n_docs, n_total) — the BM25 corpus
   *     constants, FROZEN at ingest
   *
-  * Drift contract — the trio's full spectrum, now explicit in code:
+  * Drift contract — the stores' full spectrum, now explicit in code:
   * postings are LOSSLESS (unlike [[VectorIndex]]'s PQ codes), so
   * [[reingest]] refreshes dictionary and statistics entirely from the
   * stored postings with NO corpus re-read — the same stored-state
@@ -38,7 +39,7 @@ object TextIndex {
 
   private[analytics] val parts = Seq("post", "dict", "stats")
 
-  /** (doc_id, w, n, dl) term frequencies with the doc length attached,
+  /** (w, doc_id, n, dl) term frequencies with the doc length attached,
     * plus the persisted tf handle the caller unpersists after its
     * write action — the tf aggregation feeds both the doc-length
     * reduction and the join probe, so the corpus tokenizes once.
@@ -52,7 +53,8 @@ object TextIndex {
       .persist(MEMORY_AND_DISK)
     val dl = tf.groupBy(col("doc_id"))
       .agg(sum(col("n")).cast("long").as("dl"))
-    (tf.join(dl, "doc_id"), tf)
+    (tf.join(dl, "doc_id")
+      .select(col("w"), col("doc_id"), col("n"), col("dl")), tf)
   }
 
   /** Build and persist the index for a (doc_id, text) corpus frame:
@@ -61,43 +63,28 @@ object TextIndex {
     * back, so the three parts are consistent by construction).
     * `buckets` sizes the postings/dictionary tables (at scale: vocab
     * shards of a few hundred MB, multiple of executor cores). */
-  def ingest(docs: DataFrame, store: String, buckets: Int = 8): Unit = {
-    val s = docs.sparkSession
-    val g = StoreMeta.begin(s, store)
-    def gt(p: String) = StoreMeta.name(store, p, g)
-    parts.foreach(p => SignatureStore.dropStale(s, gt(p)))
-    val (post, tfHandle) = postings(docs)
-    try Bucketing.alignToBuckets(
-        post.select(col("w"), col("doc_id"), col("n"), col("dl")),
-        "w", buckets)
-      .write.bucketBy(buckets, "w").sortBy("w")
-      .format("parquet").mode("overwrite").saveAsTable(gt("post"))
-    finally tfHandle.unpersist()
-    SignatureStore.markStoreTable(s, gt("post"))
-    writeDerived(s, store, g, buckets)
-  }
+  def ingest(docs: DataFrame, store: String, buckets: Int = 8): Unit =
+    StoreMeta.writeGeneration(docs.sparkSession, store, parts) { g =>
+      val (post, tfHandle) = postings(docs)
+      try g.write("post", post, Some(StoreMeta.Buckets("w", buckets)))
+      finally tfHandle.unpersist()
+      writeDerived(docs.sparkSession, g, buckets)
+    }
 
-  /** Dictionary + statistics from generation `g`'s postings table,
-    * then the atomic commit — shared by [[ingest]] (postings just
-    * written) and [[reingest]] (postings copied forward). */
-  private def writeDerived(s: SparkSession, store: String, g: Long,
-      buckets: Int): Unit = {
-    def gt(p: String) = StoreMeta.name(store, p, g)
-    val post = s.table(gt("post"))
-    Bucketing.alignToBuckets(
-        post.groupBy(col("w"))
-          .agg(count(lit(1)).as("df"), sum(col("n")).cast("long").as("n_w")),
-        "w", buckets)
-      .write.bucketBy(buckets, "w").sortBy("w")
-      .format("parquet").mode("overwrite").saveAsTable(gt("dict"))
-    SignatureStore.markStoreTable(s, gt("dict"))
+  /** Dictionary + statistics from generation `g`'s postings table;
+    * returns the document count the commit records — shared by
+    * [[ingest]] (postings just written) and [[reingest]] (postings
+    * copied forward). */
+  private def writeDerived(s: SparkSession, g: StoreMeta.Generation,
+      buckets: Int): Option[Long] = {
+    val post = s.table(g("post"))
+    g.write("dict", post.groupBy(col("w"))
+        .agg(count(lit(1)).as("df"), sum(col("n")).cast("long").as("n_w")),
+      Some(StoreMeta.Buckets("w", buckets)))
     val dl = post.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-    dl.agg(count(lit(1)).as("n_docs"),
-        sum(col("dl")).cast("long").as("n_total"))
-      .write.format("parquet").mode("overwrite").saveAsTable(gt("stats"))
-    SignatureStore.markStoreTable(s, gt("stats"))
-    val ndocs = s.table(gt("stats")).select(col("n_docs")).head.getLong(0)
-    StoreMeta.commit(s, store, g, parts, Some(ndocs))
+    g.write("stats", dl.agg(count(lit(1)).as("n_docs"),
+      sum(col("dl")).cast("long").as("n_total")))
+    Some(s.table(g("stats")).select(col("n_docs")).head.getLong(0))
   }
 
   /** Admit a batch of new documents under the store's FROZEN
@@ -112,22 +99,10 @@ object TextIndex {
     * the store (append-only; dedup upstream — that is what
     * [[SignatureStore]] is for). */
   def admit(s: SparkSession, store: String, batch: DataFrame): Unit = {
-    val gen = StoreMeta.genOrFail(s, store)
-    val postT = StoreMeta.name(store, "post", gen)
-    val buckets = SignatureStore.bucketCount(s, postT)
     val (post, tfHandle) = postings(batch)
-    try Bucketing.alignToBuckets(
-        post.select(col("w"), col("doc_id"), col("n"), col("dl")),
-        "w", buckets)
-      .write.format("parquet").mode("append")
-      .bucketBy(buckets, "w").sortBy("w")
-      .saveAsTable(postT)
+    try StoreMeta.append(s, StoreMeta.table(s, store, "post"), post)
     finally tfHandle.unpersist()
     StoreMeta.addDocs(s, store, batch.select(col("doc_id")).distinct.count)
-    // invalidate the CALLER session's relation cache — inside
-    // foreachBatch the write runs on the micro-batch session clone
-    // (see SignatureStore.admit)
-    s.catalog.refreshTable(postT)
   }
 
   /** Refresh dictionary and statistics from STORED STATE ONLY — no
@@ -141,18 +116,12 @@ object TextIndex {
     * proves the refresh exact: ingest-minus-batch + admit + reingest
     * hash-matches the from-scratch full-corpus oracle. */
   def reingest(s: SparkSession, store: String): Unit = {
-    val gen = StoreMeta.genOrFail(s, store)
-    val buckets = SignatureStore.bucketCount(
-      s, StoreMeta.name(store, "post", gen))
-    val g = gen + 1
-    def gt(p: String) = StoreMeta.name(store, p, g)
-    parts.foreach(p => SignatureStore.dropStale(s, gt(p)))
-    Bucketing.alignToBuckets(
-        s.table(StoreMeta.name(store, "post", gen)), "w", buckets)
-      .write.bucketBy(buckets, "w").sortBy("w")
-      .format("parquet").mode("overwrite").saveAsTable(gt("post"))
-    SignatureStore.markStoreTable(s, gt("post"))
-    writeDerived(s, store, g, buckets)
+    val postT = StoreMeta.table(s, store, "post")
+    val buckets = StoreMeta.bucketCount(s, postT)
+    StoreMeta.writeGeneration(s, store, parts) { g =>
+      g.write("post", s.table(postT), Some(StoreMeta.Buckets("w", buckets)))
+      writeDerived(s, g, buckets)
+    }
   }
 
   /** Upgrade a pre-generation layout in place (see
@@ -168,8 +137,7 @@ object TextIndex {
     * dictionary, so the query set is stable under admits. Returns
     * (qid, w). */
   def derivedQueries(s: SparkSession, store: String): DataFrame = {
-    val gen = StoreMeta.genOrFail(s, store)
-    s.table(StoreMeta.name(store, "dict", gen))
+    s.table(StoreMeta.table(s, store, "dict"))
       .orderBy(col("n_w").desc, col("w")).limit(24)
       .agg(sort_array(collect_list(
         struct((-col("n_w")).as("negn"), col("w")))).as("ts"))
@@ -190,8 +158,7 @@ object TextIndex {
       topk: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // one generation resolve for the whole search (see StoreMeta)
-    val gen = StoreMeta.genOrFail(s, store)
-    def gt(p: String) = StoreMeta.name(store, p, gen)
+    val gt = StoreMeta.current(s, store)
     val stats = s.table(gt("stats"))
     val qt = s.table(gt("dict")).join(broadcast(queries), "w")
       .crossJoin(broadcast(stats))

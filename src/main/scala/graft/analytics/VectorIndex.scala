@@ -56,51 +56,51 @@ object VectorIndex {
   def ingest(e: DataFrame, store: String, k: Int = 16,
       buckets: Int = 8): Unit = {
     val s = e.sparkSession
-    // next generation beside the current one; atomic pointer swap at
-    // the end — racing searches keep answering from the committed
-    // generation (see StoreMeta)
-    val g = StoreMeta.begin(s, store)
-    def gt(p: String) = StoreMeta.name(store, p, g)
-    parts.foreach(p => SignatureStore.dropStale(s, gt(p)))
-    // coarse centroids, stored pre-assembled in the broadcast shape
-    e.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-      .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm")))
-        .as("cents"))
-      .write.mode("overwrite").format("parquet").saveAsTable(gt("ivf"))
-    SignatureStore.markStoreTable(s, gt("ivf"))
-    // PQ codebook over normalized vectors (position = code)
-    val en = e.select(col("vec_id"),
-      expr("transform(v, x -> x / sqrt(nrm))").as("v"))
-    en.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(64)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(cid, cv))), c -> c.cv)")
-        .as("cs"))
-      .write.mode("overwrite").format("parquet").saveAsTable(gt("pq"))
-    SignatureStore.markStoreTable(s, gt("pq"))
-    // per-vector coarse assignment + codes, bucketed by the list id
-    val assigned = rankCentroids(e, s.table(gt("ivf")))
+    StoreMeta.writeGeneration(s, store, parts) { g =>
+      // coarse centroids, stored pre-assembled in the broadcast shape
+      g.write("ivf", e
+        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+        .limit(k)
+        .select(col("vec_id").as("cid"), col("v").as("cv"),
+          col("nrm").as("cnrm"))
+        .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm")))
+          .as("cents")))
+      // PQ codebook over normalized vectors (position = code)
+      g.write("pq", unit(e)
+        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+        .limit(64)
+        .select(col("vec_id").as("cid"), col("v").as("cv"))
+        .agg(expr(
+          "transform(array_sort(collect_list(struct(cid, cv))), c -> c.cv)")
+          .as("cs")))
+      // per-vector coarse assignment + codes, bucketed by the list id.
+      // NOT alignToBuckets-aligned: cid has only ~k distinct values, so
+      // hash-aligning into `buckets` partitions collides the few keys
+      // into fewer tasks (guide §2.5 synthetic-key skew) and the write
+      // loses its parallelism for no file-count gain (each task already
+      // writes at most |cids| files). r13 A/B: alignment read +0.3 s.
+      g.write("codes", encode(e, s.table(g("ivf")), s.table(g("pq"))),
+        Some(StoreMeta.Buckets("cid", buckets, align = false)))
+      None
+    }
+  }
+
+  /** (vec_id, v) with `v` scaled to unit length — the PQ domain. */
+  private def unit(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), expr("transform(v, x -> x / sqrt(nrm))").as("v"))
+
+  /** (vec_id, cid, codes): each row's coarse assignment against the
+    * stored centroids and its PQ codes against the stored codebook. */
+  private def encode(e: DataFrame, ivf: DataFrame, pq: DataFrame): DataFrame = {
+    val assigned = rankCentroids(e, ivf)
       .select(col("vec_id"),
         element_at(col("ranked"), size(col("ranked")))
           .getField("cid").as("cid"))
-    val coded = en.crossJoin(broadcast(s.table(gt("pq"))))
+    val coded = unit(e).crossJoin(broadcast(pq))
       .select(col("vec_id"),
         graft.functions.VectorFunctions.pqCodes(col("v"), col("cs"), 2)
           .as("codes"))
-    // NOT alignToBuckets-aligned: cid has only ~k distinct values, so
-    // hash-aligning into `buckets` partitions collides the few keys
-    // into fewer tasks (guide §2.5 synthetic-key skew) and the write
-    // loses its parallelism for no file-count gain (each task already
-    // writes at most |cids| files). r13 A/B: alignment read +0.3 s.
     assigned.join(coded, "vec_id")
-      .write.bucketBy(buckets, "cid").sortBy("cid")
-      .format("parquet").mode("overwrite").saveAsTable(gt("codes"))
-    SignatureStore.markStoreTable(s, gt("codes"))
-    StoreMeta.commit(s, store, g, parts, None)
   }
 
   /** Refresh the index geometry — the deliberate ASYMMETRY with
@@ -116,12 +116,9 @@ object VectorIndex {
     * generation swap means searches racing the refresh still answer
     * consistently from the old geometry. */
   def reingest(s: SparkSession, store: String, originals: DataFrame): Unit = {
-    val gen = StoreMeta.genOrFail(s, store)
-    val k = s.table(StoreMeta.name(store, "ivf", gen))
-      .select(size(col("cents"))).head.getInt(0)
-    val buckets = SignatureStore.bucketCount(
-      s, StoreMeta.name(store, "codes", gen))
-    ingest(originals, store, k, buckets)
+    val t = StoreMeta.current(s, store)
+    val k = s.table(t("ivf")).select(size(col("cents"))).head.getInt(0)
+    ingest(originals, store, k, StoreMeta.bucketCount(s, t("codes")))
   }
 
   /** Upgrade a pre-generation index layout in place (see
@@ -145,28 +142,10 @@ object VectorIndex {
     * ≡ search-after-full-re-ingest under equal geometry). */
   def admit(s: SparkSession, store: String, batch: DataFrame): Unit = {
     // one generation resolve for the whole append (see StoreMeta)
-    val gen = StoreMeta.genOrFail(s, store)
-    val codesT = StoreMeta.name(store, "codes", gen)
-    val assigned = rankCentroids(batch,
-        s.table(StoreMeta.name(store, "ivf", gen)))
-      .select(col("vec_id"),
-        element_at(col("ranked"), size(col("ranked")))
-          .getField("cid").as("cid"))
-    val coded = batch
-      .select(col("vec_id"), expr("transform(v, x -> x / sqrt(nrm))").as("v"))
-      .crossJoin(broadcast(s.table(StoreMeta.name(store, "pq", gen))))
-      .select(col("vec_id"),
-        graft.functions.VectorFunctions.pqCodes(col("v"), col("cs"), 2)
-          .as("codes"))
+    val t = StoreMeta.current(s, store)
     // not aligned — low-cardinality cid, see the ingest-side note
-    assigned.join(coded, "vec_id")
-      .write.format("parquet").mode("append")
-      .bucketBy(SignatureStore.bucketCount(s, codesT), "cid").sortBy("cid")
-      .saveAsTable(codesT)
-    // invalidate the CALLER session's relation cache — the write ran on
-    // the batch's session, which inside foreachBatch is the micro-batch
-    // clone (see SignatureStore.admit)
-    s.catalog.refreshTable(codesT)
+    StoreMeta.append(s, t("codes"),
+      encode(batch, s.table(t("ivf")), s.table(t("pq"))), align = false)
   }
 
   /** Rank the stored centroid array per row of `e` (ascending by
@@ -215,18 +194,16 @@ object VectorIndex {
     // one generation resolve per search (see StoreMeta): all three
     // tables from the same committed generation, so a racing refresh
     // can never blend geometries into one answer
-    val gen = StoreMeta.genOrFail(s, store)
-    val codes = s.table(StoreMeta.name(store, "codes", gen))
-    val probes = rankCentroids(queries, s.table(StoreMeta.name(store, "ivf", gen)))
+    val t = StoreMeta.current(s, store)
+    val codes = s.table(t("codes"))
+    val probes = rankCentroids(queries, s.table(t("ivf")))
       .select(col("vec_id").as("qid"),
         explode(transform(
           slice(col("ranked"),
             greatest(size(col("ranked")) - (nprobe - 1), lit(1)),
             lit(nprobe)),
           p => p.getField("cid"))).as("cid"))
-    val qlut = queries
-      .select(col("vec_id"), expr("transform(v, x -> x / sqrt(nrm))").as("v"))
-      .crossJoin(broadcast(s.table(StoreMeta.name(store, "pq", gen))))
+    val qlut = unit(queries).crossJoin(broadcast(s.table(t("pq"))))
       // LUT entries 1..size(cs), not a hard 1..64: a corpus smaller
       // than the codebook capacity stores a shorter `cs`, and codes
       // only ever reference stored positions — an unconditional 64

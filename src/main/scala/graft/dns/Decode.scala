@@ -32,17 +32,6 @@ object Decode {
       .select(col("requestId"), col("timestamp"), col("record_idx"),
         col("record").getField("data").as("data"))
 
-  /** Full per-record decode+validate: adds
-    *  - `dns`     (struct from the ONE-pass native parse+validate
-    *               [[graft.functions.DnsRecordParse]] — reason +
-    *               strict event timestamp + all 14 typed fields),
-    *  - `reason`  (null = clean; else base64|json|schema|timestamp,
-    *               mirroring the reference's except-arm order,
-    *               app/app.py:255-263),
-    *  - `query_ts`(strictly parsed event-time timestamp). */
-  def decodeAndValidate(records: DataFrame): DataFrame =
-    decorate(parseRecords(records))
-
   /** The expensive half: strict decode + ONE parse per record (both
     * native single-pass expressions), persisted so they run exactly
     * once per record. The decoded `payload` text is an intermediate —

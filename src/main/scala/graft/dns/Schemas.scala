@@ -50,21 +50,12 @@ object Schemas {
     StructField("transport", StringType),
     StructField("srcids", MapType(StringType, StringType))))
 
-  /** [[dnsRecordSchema]] minus `srcids`, for the main `from_json` pass —
-    * `srcids` is parsed separately (see Decode.projectDnsFields). */
-  val dnsRecordSchemaSansSrcids: StructType =
-    StructType(dnsRecordSchema.filterNot(_.name == "srcids"))
-
   /** The 12 scalar string fields (everything but answers/srcids) whose
     * JSON type must be exactly `string` (app/app.py:177-192). */
   val stringFields: Seq[String] = Seq(
     "version", "account_id", "region", "vpc_id", "query_timestamp",
     "query_name", "query_type", "query_class", "rcode",
     "srcaddr", "srcport", "transport")
-
-  /** Strict ISO-8601 layout the reference's strptime demands — no
-    * fractional seconds, no offset (app/app.py:130,149). */
-  val timestampPattern = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
   /** Envelope capacity constants (app/app.py:42-43,50). */
   val minRecordsPerBatch = 1

@@ -84,8 +84,6 @@ object DnsValidation {
   private val strictTs: DateTimeFormatter =
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
 
-  private[functions] def strictTsFormat: DateTimeFormatter = strictTs
-
   /** Jackson's byte-source bootstrapper inspects the first bytes and
     * will happily SKIP a UTF-8 BOM or auto-detect UTF-16/32 — both of
     * which Python's json.loads rejects ("Unexpected UTF-8 BOM";
@@ -496,10 +494,6 @@ object DnsRecordParse {
 }
 
 object DnsFunctions {
-  /** Column form of the one-pass validator. */
-  def validityReason(payload: Column): Column =
-    ExprBridge.column(DnsRecordValidity(ExprBridge.expression(payload)))
-
   /** Column form of the one-pass parse+validate+extract. */
   def parseRecord(payload: Column): Column =
     ExprBridge.column(DnsRecordParse(ExprBridge.expression(payload)))

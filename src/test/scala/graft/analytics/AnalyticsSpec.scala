@@ -1281,12 +1281,18 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
   test("store migrate: a legacy unsuffixed layout upgrades in place") {
     def txt(tag: String) = (0 until 12).map(j => s"${tag}w$j").mkString(" ")
     val corpus = (1L to 9L).map(i => (i, txt(s"c$i"))).toDF("doc_id", "text")
-    SignatureStore.ingest(corpus, "sigstore_leg", buckets = 4)
     // devolve to the exact legacy layout: unsuffixed marked part
     // tables, no meta (what a pre-generation store left on disk)
-    SignatureStore.parts.foreach(p => spark.sql(
-      s"ALTER TABLE sigstore_leg_${p}_g1 RENAME TO sigstore_leg_$p"))
-    spark.sql("DROP TABLE sigstore_leg_meta")
+    def devolve(store: String, parts: Seq[String]): Unit = {
+      parts.foreach(p => spark.sql(
+        s"ALTER TABLE ${store}_${p}_g1 RENAME TO ${store}_$p"))
+      spark.sql(s"DROP TABLE ${store}_meta")
+    }
+    def buckets(table: String) = spark.sql(s"DESCRIBE EXTENDED $table")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      .get("Num Buckets")
+    SignatureStore.ingest(corpus, "sigstore_leg", buckets = 4)
+    devolve("sigstore_leg", SignatureStore.parts)
     // screens against the devolved store must fail loudly, with the
     // migrate pointer in the message
     val ex = intercept[IllegalStateException] {
@@ -1300,19 +1306,44 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
       Seq((101L, txt("c3"))).toDF("doc_id", "text"))
     assert(QueryScopedCache.releaseAfter(p, h).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((3L, 101L)))
-    val desc = spark.sql("DESCRIBE EXTENDED " +
-        StoreMeta.table(spark, "sigstore_leg", "shingles")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(desc.get("Num Buckets").contains("4"), s"bucketing lost: $desc")
+    assert(buckets(StoreMeta.table(spark, "sigstore_leg", "shingles"))
+      .contains("4"), "bucketing lost")
     // and the upgraded store refreshes like a native one
     SignatureStore.reingest(spark, "sigstore_leg")
     assert(StoreMeta.gen(spark, "sigstore_leg").contains(2L))
+    // the text and vector indexes migrate through the same skeleton:
+    // the upgraded store answers exactly as before the devolve, keeps
+    // its recorded document count and bucketing, and refreshes
+    TextIndex.ingest(corpus, "textidx_leg", buckets = 4)
+    def textHits() = TextIndex.search(spark, "textidx_leg",
+      TextIndex.derivedQueries(spark, "textidx_leg")).collect().toSeq
+    val textBefore = textHits()
+    devolve("textidx_leg", TextIndex.parts)
+    TextIndex.migrate(spark, "textidx_leg")
+    assert(StoreMeta.gen(spark, "textidx_leg").contains(1L))
+    assert(StoreMeta.docCount(spark, "textidx_leg").contains(9L))
+    assert(buckets(StoreMeta.table(spark, "textidx_leg", "post"))
+      .contains("4"), "bucketing lost")
+    assert(textHits() === textBefore)
+    TextIndex.reingest(spark, "textidx_leg")
+    assert(textHits() === textBefore)
+    val e = SimilarityQueries.emb(spark, sf).filter($"vec_id" <= 200)
+    VectorIndex.ingest(e, "vecidx_leg", buckets = 4)
+    def annHits() = VectorIndex.search(spark, "vecidx_leg",
+      e.filter($"vec_id" < 10)).collect().toSeq
+    val annBefore = annHits()
+    devolve("vecidx_leg", VectorIndex.parts)
+    VectorIndex.migrate(spark, "vecidx_leg")
+    assert(StoreMeta.gen(spark, "vecidx_leg").contains(1L))
+    assert(buckets(StoreMeta.table(spark, "vecidx_leg", "codes"))
+      .contains("4"), "bucketing lost")
+    assert(annHits() === annBefore)
+    VectorIndex.reingest(spark, "vecidx_leg", e)
+    assert(annHits() === annBefore)
     // migrate validates BEFORE renaming: a squatting _g1 target stops
     // the whole migration with nothing renamed (no stranded layouts)
     SignatureStore.ingest(corpus, "sigstore_leg2", buckets = 4)
-    SignatureStore.parts.foreach(p => spark.sql(
-      s"ALTER TABLE sigstore_leg2_${p}_g1 RENAME TO sigstore_leg2_$p"))
-    spark.sql("DROP TABLE sigstore_leg2_meta")
+    devolve("sigstore_leg2", SignatureStore.parts)
     Seq((1L, "squat")).toDF("k", "v")
       .write.format("parquet").saveAsTable("sigstore_leg2_sizes_g1")
     val ex2 = intercept[IllegalStateException] {
@@ -1362,26 +1393,44 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
   test("store ingest refuses to destroy an unrelated table colliding with the prefix") {
     def txt(tag: String) = (0 until 12).map(j => s"${tag}w$j").mkString(" ")
     val corpus = (1L to 9L).map(i => (i, txt(s"c$i"))).toDF("doc_id", "text")
-    // a user table that happens to sit where the store would write
-    // (the generation-1 physical name ingest targets first)
-    Seq((1L, "keep me")).toDF("k", "v")
-      .write.format("parquet").saveAsTable("sigstore_guard_stop_g1")
-    val ex = intercept[IllegalStateException] {
-      SignatureStore.ingest(corpus, "sigstore_guard", buckets = 4)
+    val e = SimilarityQueries.emb(spark, sf).filter($"vec_id" <= 50)
+    // every store writes through the same skeleton, so each refuses a
+    // squatting part table and a squatting meta table alike
+    val stores: Seq[(String, Seq[String], String, String => Unit)] = Seq(
+      ("sigstore_guard", SignatureStore.parts, "stop",
+        SignatureStore.ingest(corpus, _, buckets = 4)),
+      ("embstore_guard", EmbeddingSignatureStore.parts, "bands",
+        EmbeddingSignatureStore.ingest(
+          e.select($"vec_id", $"v".as("embedding")), _, buckets = 4)),
+      ("textidx_guard", TextIndex.parts, "dict",
+        TextIndex.ingest(corpus, _, buckets = 4)),
+      ("vecidx_guard", VectorIndex.parts, "codes",
+        VectorIndex.ingest(e, _, buckets = 4)))
+    stores.foreach { case (store, parts, part, ingest) =>
+      // a user table that happens to sit where the store would write
+      // (a generation-1 physical name ingest targets)
+      val squat = s"${store}_${part}_g1"
+      Seq((1L, "keep me")).toDF("k", "v")
+        .write.format("parquet").saveAsTable(squat)
+      val ex = intercept[IllegalStateException](ingest(store))
+      assert(ex.getMessage.contains(squat), ex.getMessage)
+      // the colliding table survives, data intact, and no other part
+      // was written before the refusal
+      val kept = spark.table(squat).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(kept === Set((1L, "keep me")))
+      parts.filter(_ != part).foreach(p =>
+        assert(!spark.catalog.tableExists(s"${store}_${p}_g1"), s"$store: $p"))
+      // same refusal for a foreign table squatting on the meta name —
+      // checked up front, before any generation work
+      val meta = s"${store}2_meta"
+      Seq((2L, "mine")).toDF("k", "v")
+        .write.format("parquet").saveAsTable(meta)
+      val ex2 = intercept[IllegalStateException](ingest(s"${store}2"))
+      assert(ex2.getMessage.contains(meta), ex2.getMessage)
+      parts.foreach(p =>
+        assert(!spark.catalog.tableExists(s"${store}2_${p}_g1"), s"$store: $p"))
     }
-    assert(ex.getMessage.contains("sigstore_guard_stop_g1"), ex.getMessage)
-    // the colliding table survives, data intact
-    val kept = spark.table("sigstore_guard_stop_g1").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(kept === Set((1L, "keep me")))
-    // same refusal for a foreign table squatting on the meta name —
-    // checked up front, before any generation work
-    Seq((2L, "mine")).toDF("k", "v")
-      .write.format("parquet").saveAsTable("sigstore_guard2_meta")
-    val ex2 = intercept[IllegalStateException] {
-      SignatureStore.ingest(corpus, "sigstore_guard2", buckets = 4)
-    }
-    assert(ex2.getMessage.contains("sigstore_guard2_meta"), ex2.getMessage)
   }
 
   test("dedup cluster: components consistent with pairs; one survivor each") {
