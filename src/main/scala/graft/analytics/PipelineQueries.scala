@@ -135,9 +135,8 @@ object PipelineQueries {
           col("event_id").as("timestamp"),
           array(struct(base64(encode(record, "UTF-8")).as("data")))
             .as("records"))
-      val (records, _) =
-        Pipeline.decodedRecordsScoped(envelopes, materialize = false)
-      val clean = records.filter(col("reason").isNull)
+      val clean =
+        Pipeline.decodedRecords(envelopes).filter(col("reason").isNull)
       Pipeline.microsoftDnsLines(clean)
         .select(col("requestId"), col("line"))
         .orderBy(col("requestId"))

@@ -33,13 +33,10 @@ object Decode {
         col("record").getField("data").as("data"))
 
   /** The expensive half: strict decode + ONE parse per record (both
-    * native single-pass expressions), persisted so they run exactly
-    * once per record. The decoded `payload` text is an intermediate —
-    * `reason` is folded in here and `payload` dropped BEFORE the
-    * materialization boundary, so the cache holds (data, dns, reason)
-    * and never a second full copy of every record's text (measured
-    * ~35% smaller cache at sf0.1; the spill-pressure this relieves is
-    * what matters at scale). */
+    * native single-pass expressions). The decoded `payload` text is an
+    * intermediate — `reason` is folded in here and `payload` dropped,
+    * so no later projection carries a second full copy of every
+    * record's text. */
   def parseRecords(records: DataFrame): DataFrame =
     records
       .withColumn("payload",
@@ -52,8 +49,7 @@ object Decode {
           .otherwise(col("dns").getField("reason")))
       .drop("payload")
 
-  /** The cheap half: query_ts as a plain field read — layered above
-    * the materialization boundary. */
+  /** The cheap half: query_ts as a plain field read. */
   def decorate(parsed: DataFrame): DataFrame =
     parsed.withColumn("query_ts", col("dns").getField("query_ts"))
 

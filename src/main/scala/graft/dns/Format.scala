@@ -58,36 +58,48 @@ object Format {
   def firstAnswerType(answers: Column): Column =
     coalesce(try_element_at(answers, lit(1)).getField("Type"), lit("A"))
 
-  /** Query line (app/app.py:160-161). `route53resolver:`, the ` + `
-    * flags field and `(127.0.0.1)` resolver address are constants. */
-  def bind9QueryLine(ts: Column, vpcId: Column, tag: Column, srcaddr: Column,
-      srcport: Column, queryName: Column, answers: Column): Column =
-    format_string(
-      "%s %s route53resolver: %s client %s %s#%s (%s): query: %s IN %s + (127.0.0.1)",
-      syslogTimestamp(ts), vpcId, bind9Timestamp(ts), tag, srcaddr, srcport,
-      queryName, queryName, firstAnswerType(answers))
+  /** The text every BIND9 line of a record starts with
+    * (app/app.py:160-171): `<syslog ts> <vpc> route53resolver: <bind9 ts>
+    * client <tag> <srcaddr>#<srcport> (<query name>): `. The
+    * `route53resolver:` program name and ` client ` are constants.
+    * Project it in its own column before [[bind9PrefixedLines]] so it is
+    * computed once per record, not once per line. */
+  def bind9Prefix(ts: Column, vpcId: Column, tag: Column, srcaddr: Column,
+      srcport: Column, queryName: Column): Column =
+    concat(syslogTimestamp(ts), lit(" "), vpcId, lit(" route53resolver: "),
+      bind9Timestamp(ts), lit(" client "), tag, lit(" "), srcaddr, lit("#"),
+      srcport, lit(" ("), queryName, lit("): "))
 
-  /** Reply lines — one per answer (app/app.py:163-171). Zero answers →
-    * empty array. A JSON-null `Rdata` prints `None`: the reference's
+  /** Array of 1 + |answers| lines after a record's [[bind9Prefix]], query
+    * line first then answers in array order — the order the reference
+    * emits datagrams (app/app.py:158-173,251-253).
+    *
+    * Query line (app/app.py:160-161): the ` + ` flags field and
+    * `(127.0.0.1)` resolver address are constants.
+    *
+    * Reply lines, one per answer (app/app.py:163-171); zero answers → no
+    * reply line. A JSON-null `Rdata` prints `None`: the reference's
     * `.get('Rdata', 'N/A')` default is dead code (the key is required
     * by validation, app/app.py:208), so a null value flows through the
-    * f-string as Python's `None` — matched byte-for-byte. */
-  def bind9ReplyLines(ts: Column, vpcId: Column, tag: Column, srcaddr: Column,
-      srcport: Column, queryName: Column, answers: Column): Column =
-    transform(answers, a =>
-      format_string(
-        "%s %s route53resolver: %s client %s %s#%s (%s): reply: %s is %s",
-        syslogTimestamp(ts), vpcId, bind9Timestamp(ts), tag, srcaddr, srcport,
-        queryName, queryName, coalesce(a.getField("Rdata"), lit("None"))))
+    * f-string as Python's `None` — matched byte-for-byte.
+    *
+    * `concat` is null when any part is; every part is non-null on a
+    * validated record (the type and `Rdata` are coalesced). */
+  def bind9PrefixedLines(prefix: Column, queryName: Column,
+      answers: Column): Column =
+    concat(
+      array(concat(prefix, lit("query: "), queryName, lit(" IN "),
+        firstAnswerType(answers), lit(" + (127.0.0.1)"))),
+      transform(answers, a =>
+        concat(prefix, lit("reply: "), queryName, lit(" is "),
+          coalesce(a.getField("Rdata"), lit("None")))))
 
-  /** Array of 1 + |answers| lines, query line first then answers in
-    * array order — the order the reference emits datagrams
-    * (app/app.py:158-173,251-253). */
+  /** [[bind9PrefixedLines]] of the record's [[bind9Prefix]]. */
   def bind9Lines(ts: Column, vpcId: Column, tag: Column, srcaddr: Column,
       srcport: Column, queryName: Column, answers: Column): Column =
-    concat(
-      array(bind9QueryLine(ts, vpcId, tag, srcaddr, srcport, queryName, answers)),
-      bind9ReplyLines(ts, vpcId, tag, srcaddr, srcport, queryName, answers))
+    bind9PrefixedLines(
+      bind9Prefix(ts, vpcId, tag, srcaddr, srcport, queryName),
+      queryName, answers)
 
   /** Microsoft DNS debug-log line (app/app.py:126-144). Thread id
     * `0D2C`, two spaces after PACKET, packet id `0000000001ED00C0`, and

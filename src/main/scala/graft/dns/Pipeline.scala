@@ -1,6 +1,6 @@
 package graft.dns
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch composition of the reference pipeline
@@ -16,19 +16,20 @@ object Pipeline {
 
   /** Result of one batch: the three disjoint outputs the reference
     * produces implicitly (emit / drop-record / reject-batch), plus the
-    * persist handle backing the shared decode stage (empty when
+    * persist handle backing the shared [[routed]] frame (empty when
     * `materializeDecode = false` — the registered single-output
     * queries run cache-free). Multi-output callers call [[Outputs
     * .release]] (or hand `cacheHandles` to
-    * `QueryScopedCache.releaseAfter`) once the outputs are consumed —
-    * `Streaming.start` does so per batch; a long-lived session that
-    * never releases accumulates cache entries (round-3 verdict). */
+    * `QueryScopedCache.releaseAfter`) once the outputs are consumed; a
+    * long-lived session that never releases accumulates cache entries
+    * (round-3 verdict). */
   final case class Outputs(
       lines: DataFrame,      // requestId, record_idx, line_idx, line
       quarantine: DataFrame, // requestId, record_idx, data, reason
       rejectedEnvelopes: DataFrame, // requestId, reject_reason
       cacheHandles: Seq[DataFrame] = Nil) {
-    /** Unpersist the decode cache (no-op on streaming batches). */
+    /** Unpersist the routed-frame cache (no-op when nothing was
+      * persisted). */
     def release(): Unit = cacheHandles.foreach(_.unpersist(blocking = false))
   }
 
@@ -65,12 +66,13 @@ object Pipeline {
           lit("data_invalid"))
         .otherwise(lit(null).cast("string"))
     // Raw-JSON ingest carries the type-strict verdict from
-    // parseEnvelopes (strictly stronger than the structural checks);
-    // envelopes built as structured DataFrames are correctly typed by
-    // construction and keep the structural gate.
+    // parseEnvelopes, which checks every structural rule as well, so
+    // it replaces the structural gate (whose per-record length lambda
+    // runs interpreted); envelopes built as structured DataFrames are
+    // correctly typed by construction and keep the structural gate.
     val reason =
       if (df.columns.contains("envelope_strict_reason"))
-        coalesce(col("envelope_strict_reason"), structural)
+        col("envelope_strict_reason")
       else structural
     df.withColumn("reject_reason", reason)
       .drop("envelope_strict_reason")
@@ -83,50 +85,64 @@ object Pipeline {
     * Intra-plan parse duplication is solved at the expression level
     * (`DnsRecordParse.deterministic = false` stops CollapseProject
     * from cloning the parse into every field reference — it used to
-    * make 42 copies). The optional persist (MEMORY_AND_DISK) exists
-    * for MULTI-OUTPUT consumers only: `process()` exposes lines +
-    * quarantine + rejects, and a caller draining more than one would
-    * otherwise re-run the decode per output. Single-output consumers
-    * pass `materialize = false` and pay zero cache build.
-    *
-    * This thin wrapper is therefore cache-FREE: it cannot return the
-    * persist handle, and a dropped handle is a session-lifetime cache
-    * leak (the round-3 bug class). Multi-output callers use
-    * [[process]] (scoped release built in) or
-    * [[decodedRecordsScoped]] and unpersist the handles themselves. */
+    * make 42 copies). Cache-free: a caller that needs more than one
+    * output of a batch uses [[process]], which shares one [[routed]]
+    * frame between them. */
   def decodedRecords(envelopes: DataFrame): DataFrame =
-    decodedRecordsScoped(envelopes, materialize = false)._1
+    Decode.decorate(Decode.parseRecords(Decode.explodeRecords(envelopes)))
 
-  /** [[decodedRecords]] plus the persist handle (empty for streaming
-    * plans or `materialize = false`), so callers can unpersist once
-    * their action completes instead of leaving the cache to
-    * session-lifetime `clearCache`. */
-  def decodedRecordsScoped(envelopes: DataFrame,
-      materialize: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    val parsed = Decode.parseRecords(Decode.explodeRecords(envelopes))
-    // Streaming plans can't persist; their per-batch plans are consumed
-    // once inside foreachBatch anyway (which runs this on the batch DF).
-    if (parsed.isStreaming || !materialize) (Decode.decorate(parsed), Nil)
-    else {
-      val materialized =
-        parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (Decode.decorate(materialized), Seq(materialized))
-    }
+  /** Adds `lines`, the BIND9 line array of each row where `clean` holds
+    * (null elsewhere). The shared line prefix is projected first, so it
+    * is computed once per record rather than once per line. */
+  private def withLines(records: DataFrame, clean: Column): DataFrame = {
+    val dns = col("dns")
+    val queryName = dns.getField("query_name")
+    val tag = Format.deterministicHexTag(
+      col("requestId"), col("record_idx"), queryName,
+      dns.getField("query_timestamp"))
+    records
+      .withColumn("prefix", when(clean, Format.bind9Prefix(
+        col("query_ts"), dns.getField("vpc_id"), tag, dns.getField("srcaddr"),
+        dns.getField("srcport"), queryName)))
+      .withColumn("lines", when(clean, Format.bind9PrefixedLines(
+        col("prefix"), queryName, dns.getField("answers"))))
+      .drop("prefix")
   }
 
   /** Ops 7–12 over clean records: typed projection, deterministic client
     * tag, 1+|answers| BIND9 lines, exploded in emit order. */
-  def bind9Lines(cleanRecords: DataFrame): DataFrame = {
-    val dns = Decode.projectDnsFields(cleanRecords)
-    val tag = Format.deterministicHexTag(
-      col("requestId"), col("record_idx"), col("query_name"),
-      col("query_timestamp"))
-    dns
-      .withColumn("lines", Format.bind9Lines(
-        col("query_ts"), col("vpc_id"), tag, col("srcaddr"),
-        col("srcport"), col("query_name"), col("answers")))
-      .select(col("requestId"), col("record_idx"), posexplode(col("lines")))
+  def bind9Lines(cleanRecords: DataFrame): DataFrame =
+    explodeLines(withLines(cleanRecords, lit(true)))
+
+  private def explodeLines(df: DataFrame): DataFrame =
+    df.select(col("requestId"), col("record_idx"), posexplode(col("lines")))
       .withColumnsRenamed(Map("pos" -> "line_idx", "col" -> "line"))
+
+  /** Ops 2–12 as one frame, so one scan of a batch yields all three
+    * outputs: one row per record of an accepted envelope and one row per
+    * rejected envelope, columns `requestId, record_idx, lines, data,
+    * reason, reject_reason`. A row is exactly one of
+    *  - a clean record: `lines` holds its BIND9 lines, the rest is null;
+    *  - a quarantined record: `data` and `reason`, `lines` is null;
+    *  - a rejected envelope: `reject_reason`, everything else null
+    *    (`record_idx` too).
+    */
+  def routed(envelopes: DataFrame): DataFrame = {
+    val gated = envelopeRejectReason(envelopes)
+    // a rejected envelope's records are nulled, so the outer explode
+    // gives it exactly one row, with no record
+    val records = gated
+      .select(col("requestId"), col("reject_reason"), posexplode_outer(
+        when(col("reject_reason").isNull, col("records"))))
+      .select(col("requestId"), col("reject_reason"),
+        col("pos").as("record_idx"), col("col").getField("data").as("data"))
+    val accepted = col("reject_reason").isNull
+    val decoded = Decode.decorate(Decode.parseRecords(records))
+      .withColumn("reason", when(accepted, col("reason")))
+    withLines(decoded, accepted && col("reason").isNull)
+      .select(col("requestId"), col("record_idx"), col("lines"),
+        when(col("reason").isNotNull, col("data")).as("data"),
+        col("reason"), col("reject_reason"))
   }
 
   /** The dead-code Microsoft formatter surface (op 13) — same pipeline,
@@ -141,22 +157,25 @@ object Pipeline {
   /** Full batch: envelope gate → record decode/validate → split into
     * lines / quarantine / rejected envelopes (op 17 semantics: a poison
     * record quarantines alone; its batch keeps flowing,
-    * app/app.py:219-263). */
+    * app/app.py:219-263). All three outputs filter one [[routed]] frame;
+    * `materializeDecode` persists it (MEMORY_AND_DISK) so a caller
+    * draining more than one output decodes once. A caller consuming a
+    * single output passes `false`: nothing is shared, so the cache
+    * build would be pure overhead. */
   def process(envelopes: DataFrame,
       materializeDecode: Boolean = true): Outputs = {
-    val gated = envelopeRejectReason(envelopes)
-    val accepted = gated.filter(col("reject_reason").isNull)
-      .drop("reject_reason")
-    val rejected = gated.filter(col("reject_reason").isNotNull)
-      .select(col("requestId"), col("reject_reason"))
-    // materializeDecode = false for callers consuming a SINGLE output:
-    // each output re-parses independently, so sharing buys nothing and
-    // the cache build is pure overhead.
-    val (records, handles) = decodedRecordsScoped(accepted, materializeDecode)
-    val clean = records.filter(col("reason").isNull)
-    val dirty = records.filter(col("reason").isNotNull)
-      .select(col("requestId"), col("record_idx"), col("data"), col("reason"))
-    Outputs(bind9Lines(clean), dirty, rejected, handles)
+    val frame = routed(envelopes)
+    val handles =
+      if (materializeDecode && !frame.isStreaming)
+        Seq(frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      else Nil
+    Outputs(
+      explodeLines(frame.filter(col("lines").isNotNull)),
+      frame.filter(col("reason").isNotNull)
+        .select(col("requestId"), col("record_idx"), col("data"), col("reason")),
+      frame.filter(col("reject_reason").isNotNull)
+        .select(col("requestId"), col("reject_reason")),
+      handles)
   }
 
   /** Convenience: raw JSON documents straight to outputs. */

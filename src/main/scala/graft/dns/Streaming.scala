@@ -1,8 +1,11 @@
 package graft.dns
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import java.net.{DatagramPacket, DatagramSocket, InetAddress}
 import java.nio.charset.StandardCharsets
 
@@ -167,20 +170,55 @@ object Streaming {
     def send(lines: Dataset[String], host: String, port: Int,
         priority: Int = 30, appendNul: Boolean = true): Unit = {
       lines.foreachPartition { (it: Iterator[String]) =>
-        val socket = new DatagramSocket()
-        val addr = InetAddress.getByName(host)
-        val nul = if (appendNul) "\u0000" else ""
-        try it.foreach { line =>
-          val payload =
-            s"<$priority>$line$nul".getBytes(StandardCharsets.UTF_8)
-          socket.send(new DatagramPacket(payload, payload.length, addr, port))
-        } finally socket.close()
+        val out = new Datagrams(host, port, priority, appendNul)
+        try it.foreach(out.send) finally out.close()
       }
+    }
+
+    /** Sends the lines of every clean row of a [[Pipeline.routed]]
+      * frame from inside the scan that computes it, and passes on the
+      * other rows — quarantined records and rejected envelopes —
+      * without their (null) `lines`. Nothing is sent until an action
+      * runs the returned frame; each computation of a partition sends
+      * its lines again. */
+    private[dns] def sendRouted(routed: DataFrame, host: String,
+        port: Int): DataFrame = {
+      val lines = routed.schema.fieldIndex("lines")
+      val side = StructType(routed.schema.filterNot(_.name == "lines"))
+      routed.mapPartitions { (rows: Iterator[Row]) =>
+        val out = new Datagrams(host, port, 30, appendNul = true)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => out.close())
+        rows.filter { r =>
+          if (!r.isNullAt(lines)) r.getSeq[String](lines).foreach(out.send)
+          r.isNullAt(lines)
+        }.map(r => Row.fromSeq(r.toSeq.patch(lines, Nil, 1)))
+      }(Encoders.row(side))
+    }
+
+    /** One partition's socket and framing. */
+    private final class Datagrams(host: String, port: Int, priority: Int,
+        appendNul: Boolean) {
+      private val socket = new DatagramSocket()
+      private val addr = InetAddress.getByName(host)
+      private val nul = if (appendNul) "\u0000" else ""
+      def send(line: String): Unit = {
+        val payload = s"<$priority>$line$nul".getBytes(StandardCharsets.UTF_8)
+        socket.send(new DatagramPacket(payload, payload.length, addr, port))
+      }
+      def close(): Unit = socket.close()
     }
   }
 
   /** Full streaming job: envelope stream → pipeline → UDP lines +
     * parquet dead-letter/rejects, with checkpointed progress.
+    *
+    * One scan per micro-batch: the batch's [[Pipeline.routed]] frame is
+    * computed once, by the first side-output write. Inside that scan
+    * [[UdpSyslogSink]] sends each clean record's lines and passes on
+    * only the side rows (poison records and rejected envelopes), which
+    * are persisted so the second write reads them from the cache, and
+    * unpersisted once the batch is written. The spool is read once and
+    * each envelope parsed once; no cache holds the clean records.
     *
     * The parquet side outputs are IDEMPOTENT under replay: each batch
     * overwrites its own `batch_id=N` partition directory, so when the
@@ -188,9 +226,13 @@ object Streaming {
     * the rewrite lands on the same path instead of appending
     * duplicates — the foreachBatch batchId-keyed-overwrite pattern
     * that upgrades the parquet trail from at-least-once to
-    * effectively-once. (The UDP wire stays fire-and-forget; replayed
-    * datagrams are absorbed downstream by [[dedupRecords]].) Readers
-    * see `batch_id` as a discovered partition column.
+    * effectively-once. Readers see `batch_id` as a discovered
+    * partition column.
+    *
+    * The UDP wire is at-least-once and fire-and-forget: a replayed
+    * batch, a retried task, or a side-row cache block lost and
+    * recomputed re-sends that partition's datagrams; downstream
+    * [[dedupRecords]] absorbs the duplicates.
     *
     * Layout note: this partitioned layout is INCOMPATIBLE with
     * dead-letter directories written by the pre-round-4 append-mode
@@ -199,26 +241,26 @@ object Streaming {
     * parquet partition discovery loudly. */
   def start(envelopes: DataFrame, syslogHost: String, syslogPort: Int,
       deadLetterDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = envelopes.sparkSession
-    import spark.implicits._
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     envelopes.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = Pipeline.process(batch)
-        UdpSyslogSink.send(
-          out.lines.select(col("line")).as[String], syslogHost, syslogPort)
-        out.quarantine.write.mode("overwrite")
-          .parquet(s"$deadLetterDir/quarantine/batch_id=$batchId")
-        out.rejectedEnvelopes.write.mode("overwrite")
-          .parquet(s"$deadLetterDir/rejected/batch_id=$batchId")
-        // Drop this batch's decode cache only — scoped release instead
-        // of clearCache(), which would also evict any caches the
-        // embedding application holds in the same session.
-        out.release()
+        val side = UdpSyslogSink.sendRouted(
+          Pipeline.routed(batch), syslogHost, syslogPort)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          side.filter(col("reason").isNotNull)
+            .select(col("requestId"), col("record_idx"), col("data"),
+              col("reason"))
+            .write.mode("overwrite")
+            .parquet(s"$deadLetterDir/quarantine/batch_id=$batchId")
+          side.filter(col("reject_reason").isNotNull)
+            .select(col("requestId"), col("reject_reason"))
+            .write.mode("overwrite")
+            .parquet(s"$deadLetterDir/rejected/batch_id=$batchId")
+        } finally side.unpersist(blocking = false)
         ()
       }
       .start()
-  }
 }

@@ -237,6 +237,9 @@ class Bind9PipelineSpec extends AnyFunSuite with SparkTestBase {
       // timestamp optional; integer and integral float pass, else fail
       (s"""{"requestId":"r","timestamp":1,"records":[{"data":"$data"}]}""", true),
       (s"""{"requestId":"r","timestamp":1.5,"records":[{"data":"$data"}]}""", false),
+      // integral beyond Long range: an integer to jsonschema, while
+      // from_json cannot read it as a long
+      (s"""{"requestId":"r","timestamp":1e30,"records":[{"data":"$data"}]}""", true),
       (s"""{"requestId":"r","timestamp":true,"records":[{"data":"$data"}]}""", false),
       (s"""{"requestId":"r","timestamp":null,"records":[{"data":"$data"}]}""", false),
       // additionalProperties are allowed by the reference schema
@@ -260,6 +263,9 @@ class Bind9PipelineSpec extends AnyFunSuite with SparkTestBase {
       assert(accepted === shouldAccept,
         s"envelope $env: accepted=$accepted, want $shouldAccept " +
           s"(reason: ${out.rejectedEnvelopes.collect().mkString(",")})")
+      // an accepted envelope must reach the formatter: a from_json
+      // coercion that nulls it would otherwise pass as accepted
+      if (shouldAccept) assert(out.lines.count() > 0, s"envelope $env: no lines")
     }
   }
 

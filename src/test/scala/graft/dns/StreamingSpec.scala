@@ -1,7 +1,11 @@
 package graft.dns
 
 import graft.SparkTestBase
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +20,40 @@ import scala.collection.mutable
   * parquet dead-letter), and the watermarked windowed aggregation. */
 class StreamingSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
+
+  /** Counts the scans of a foreachBatch input (the micro-batch's
+    * envelope rows) that the session's queries executed, looking
+    * through AQE wrappers and into cached plans. A cached plan's scan is
+    * one object however many queries read the cache, so it counts once;
+    * a query that re-reads the batch brings a scan of its own. */
+  private final class BatchScans extends QueryExecutionListener {
+    // by identity: plans are case classes, and two scans of one batch
+    // are equal as values
+    private val ran = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[RDDScanExec, java.lang.Boolean]())
+    private val plans = mutable.Buffer[String]()
+
+    private def scans(plan: SparkPlan): Seq[RDDScanExec] = plan match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case s: RDDScanExec => Seq(s)
+      case p => p.children.flatMap(scans)
+    }
+
+    override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+      synchronized {
+        plans += qe.executedPlan.toString
+        scans(qe.executedPlan).filter(s =>
+          s.output.exists(_.name == "envelope_strict_reason") &&
+            s.metrics("numOutputRows").value > 0).foreach(ran.add)
+      }
+    override def onFailure(name: String, qe: QueryExecution,
+        e: Exception): Unit = ()
+
+    def executed: Int = synchronized(ran.size)
+    def sawWriteTo(path: String): Boolean =
+      synchronized(plans.exists(_.contains(path)))
+  }
 
   private def b64(s: String): String =
     Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
@@ -58,6 +96,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val inDir = Files.createTempDirectory("stream_in").toString
     val dlDir = Files.createTempDirectory("stream_dl").toString
     val ckDir = Files.createTempDirectory("stream_ck").toString
+    // registered (and the session started) before the collector's
+    // receive timeout starts running
+    val scans = new BatchScans
+    spark.listenerManager.register(scans)
     // loopback syslog collector
     val socket = new DatagramSocket(0, java.net.InetAddress.getByName("127.0.0.1"))
     socket.setSoTimeout(15000)
@@ -78,12 +120,28 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     Files.writeString(java.nio.file.Path.of(inDir, "batch0.json"),
       envelope("f0", b64(record("stream.example.")), b64("!!!bad???")) +
-        "\n" + envelope("f1", b64(record("other.example."))))
+        "\n" + envelope("f1", b64(record("other.example."))) +
+        // a numeric requestId rejects the whole envelope
+        "\n" + envelope("f2", b64(record("rejected.example.")))
+          .replace("\"f2\"", "7"))
     val q = Streaming.start(
       Streaming.envelopesFromJsonFiles(spark, inDir),
       "127.0.0.1", socket.getLocalPort, dlDir, ckDir,
       Trigger.AvailableNow())
     q.awaitTermination(60000)
+    // listener events arrive in order: the rejected write is the last
+    val seen = System.currentTimeMillis() + 10000
+    while (!scans.sawWriteTo(s"$dlDir/rejected") &&
+      System.currentTimeMillis() < seen) Thread.sleep(50)
+    spark.listenerManager.unregister(scans)
+    assert(scans.sawWriteTo(s"$dlDir/rejected"))
+    assert(scans.executed === 1,
+      "a micro-batch must scan its input once, not once per output")
+    // and that scan read each of the 3 input documents once
+    val read = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan
+      .collect { case f: FileSourceScanExec => f.metrics("numOutputRows").value }
+    assert(read === Seq(3L), "the spool must be read once")
     // two valid records × (1 query + 1 reply) = 4 datagrams
     val deadline = System.currentTimeMillis() + 10000
     while (received.synchronized(received.size) < 4 &&
@@ -91,6 +149,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     socket.close()
     val lines = received.synchronized(received.toList)
     assert(lines.size === 4, s"got: $lines")
+    assert(lines.distinct.size === 4, s"duplicated datagrams: $lines")
     assert(lines.forall(_.startsWith("<30>Oct 15 14:03:07 vpc-s route53resolver:")))
     // SysLogHandler parity: append_nul=True terminates each datagram
     assert(lines.forall(_.endsWith("\u0000")), "datagrams must be NUL-terminated")
@@ -101,6 +160,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(quarantined.select("reason").as[String].head() === "json")
     // batch_id is a discovered partition column of the idempotent sink
     assert(quarantined.columns.contains("batch_id"))
+    val rejected = spark.read.parquet(s"$dlDir/rejected")
+      .select("requestId", "reject_reason").as[(String, String)].collect()
+    assert(rejected.toSeq === Seq(("7", "requestId_type")))
   }
 
   test("replayed micro-batch overwrites its dead-letter partition (idempotent sink)") {
