@@ -1,11 +1,12 @@
 package graft.dns
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 import java.net.{DatagramPacket, DatagramSocket, InetAddress}
 import java.nio.charset.StandardCharsets
 
@@ -178,18 +179,26 @@ object Streaming {
     /** Sends the lines of every clean row of a [[Pipeline.routed]]
       * frame from inside the scan that computes it, and passes on the
       * other rows — quarantined records and rejected envelopes —
-      * without their (null) `lines`. Nothing is sent until an action
+      * without their (null) `lines`, adding each to `quarantined` or
+      * `rejected` as it goes. Nothing is sent or counted until an action
       * runs the returned frame; each computation of a partition sends
-      * its lines again. */
+      * its lines and adds its counts again, so the counts are
+      * at-least-once: a retry can raise a count but never make a zero
+      * count non-zero. */
     private[dns] def sendRouted(routed: DataFrame, host: String,
-        port: Int): DataFrame = {
+        port: Int, quarantined: LongAccumulator,
+        rejected: LongAccumulator): DataFrame = {
       val lines = routed.schema.fieldIndex("lines")
+      val reason = routed.schema.fieldIndex("reason")
+      val rejectReason = routed.schema.fieldIndex("reject_reason")
       val side = StructType(routed.schema.filterNot(_.name == "lines"))
       routed.mapPartitions { (rows: Iterator[Row]) =>
         val out = new Datagrams(host, port, 30, appendNul = true)
         TaskContext.get().addTaskCompletionListener[Unit](_ => out.close())
         rows.filter { r =>
           if (!r.isNullAt(lines)) r.getSeq[String](lines).foreach(out.send)
+          else if (!r.isNullAt(rejectReason)) rejected.add(1)
+          else if (!r.isNullAt(reason)) quarantined.add(1)
           r.isNullAt(lines)
         }.map(r => Row.fromSeq(r.toSeq.patch(lines, Nil, 1)))
       }(Encoders.row(side))
@@ -213,12 +222,21 @@ object Streaming {
     * parquet dead-letter/rejects, with checkpointed progress.
     *
     * One scan per micro-batch: the batch's [[Pipeline.routed]] frame is
-    * computed once, by the first side-output write. Inside that scan
-    * [[UdpSyslogSink]] sends each clean record's lines and passes on
-    * only the side rows (poison records and rejected envelopes), which
-    * are persisted so the second write reads them from the cache, and
-    * unpersisted once the batch is written. The spool is read once and
-    * each envelope parsed once; no cache holds the clean records.
+    * computed once, by a `noop` action. Inside that scan
+    * [[UdpSyslogSink]] sends each clean record's lines, and passes on,
+    * counted by kind, only the side rows (poison records and rejected
+    * envelopes), which are persisted until the batch is written. A
+    * dead-letter output is written only when its count is non-zero, as
+    * one parquet file (`coalesce(1)` over the cache), so a clean batch
+    * runs one Spark job and writes nothing, and a batch with dead
+    * letters adds one single-task write per non-empty output, however
+    * many partitions it scanned; a batch of nothing but poison writes
+    * all its quarantine rows in that one task. The counts are only
+    * compared with zero: a retried task adds its rows again, which
+    * cannot make a zero count non-zero, and a replayed batch reads the
+    * same offsets, so it makes the same write decisions. The spool is
+    * read once and each envelope parsed once; no cache holds the clean
+    * records.
     *
     * The parquet side outputs are IDEMPOTENT under replay: each batch
     * overwrites its own `batch_id=N` partition directory, so when the
@@ -227,7 +245,9 @@ object Streaming {
     * duplicates — the foreachBatch batchId-keyed-overwrite pattern
     * that upgrades the parquet trail from at-least-once to
     * effectively-once. Readers see `batch_id` as a discovered
-    * partition column.
+    * partition column. A batch with no dead letters of a kind leaves no
+    * `batch_id=N` directory for it, so `quarantine/` or `rejected/`
+    * does not exist until some batch has written one.
     *
     * The UDP wire is at-least-once and fire-and-forget: a replayed
     * batch, a retried task, or a side-row cache block lost and
@@ -246,19 +266,24 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val side = UdpSyslogSink.sendRouted(
-          Pipeline.routed(batch), syslogHost, syslogPort)
+        val sc = batch.sparkSession.sparkContext
+        val quarantined = sc.longAccumulator
+        val rejected = sc.longAccumulator
+        val side = UdpSyslogSink.sendRouted(Pipeline.routed(batch),
+          syslogHost, syslogPort, quarantined, rejected)
           .persist(StorageLevel.MEMORY_AND_DISK)
+        def deadLetters(n: LongAccumulator, kind: String, keep: Column,
+            cols: String*): Unit =
+          if (n.value > 0)
+            side.filter(keep).select(cols.map(col): _*).coalesce(1)
+              .write.mode("overwrite")
+              .parquet(s"$deadLetterDir/$kind/batch_id=$batchId")
         try {
-          side.filter(col("reason").isNotNull)
-            .select(col("requestId"), col("record_idx"), col("data"),
-              col("reason"))
-            .write.mode("overwrite")
-            .parquet(s"$deadLetterDir/quarantine/batch_id=$batchId")
-          side.filter(col("reject_reason").isNotNull)
-            .select(col("requestId"), col("reject_reason"))
-            .write.mode("overwrite")
-            .parquet(s"$deadLetterDir/rejected/batch_id=$batchId")
+          side.write.format("noop").mode("overwrite").save()
+          deadLetters(quarantined, "quarantine", col("reason").isNotNull,
+            "requestId", "record_idx", "data", "reason")
+          deadLetters(rejected, "rejected", col("reject_reason").isNotNull,
+            "requestId", "reject_reason")
         } finally side.unpersist(blocking = false)
         ()
       }

@@ -14,6 +14,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.Base64
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Streaming-layer specs: micro-batch semantics over MemoryStream, the
   * real file source end-to-end (UDP datagrams received on loopback +
@@ -53,6 +54,14 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     def executed: Int = synchronized(ran.size)
     def sawWriteTo(path: String): Boolean =
       synchronized(plans.exists(_.contains(path)))
+  }
+
+  /** The parquet part files directly under `dir`. */
+  private def parquetFiles(dir: String): Seq[String] = {
+    val files = Files.list(java.nio.file.Path.of(dir))
+    try files.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toList
+    finally files.close()
   }
 
   private def b64(s: String): String =
@@ -163,6 +172,34 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val rejected = spark.read.parquet(s"$dlDir/rejected")
       .select("requestId", "reject_reason").as[(String, String)].collect()
     assert(rejected.toSeq === Seq(("7", "requestId_type")))
+    // each non-empty dead-letter output is one file, not one per task
+    for (kind <- Seq("quarantine", "rejected"))
+      assert(parquetFiles(s"$dlDir/$kind/batch_id=0").size === 1, kind)
+  }
+
+  test("only the dead-letter kinds a batch has are written") {
+    val inDir = Files.createTempDirectory("kinds_in").toString
+    val dlDir = Files.createTempDirectory("kinds_dl").toString
+    val ckDir = Files.createTempDirectory("kinds_ck").toString
+    // one clean envelope and one rejected (numeric requestId): the only
+    // side row is the rejected envelope
+    Files.writeString(java.nio.file.Path.of(inDir, "k0.json"),
+      envelope("k0", b64(record("kept.example."))) + "\n" +
+        envelope("k1", b64(record("dropped.example.")))
+          .replace("\"k1\"", "8"))
+    val sink = new DatagramSocket(0,
+      java.net.InetAddress.getByName("127.0.0.1"))
+    val q = Streaming.start(Streaming.envelopesFromJsonFiles(spark, inDir),
+      "127.0.0.1", sink.getLocalPort, dlDir, ckDir, Trigger.AvailableNow())
+    q.awaitTermination(60000)
+    q.stop()
+    sink.close()
+    val rejected = spark.read.parquet(s"$dlDir/rejected")
+      .select("requestId", "reject_reason").as[(String, String)].collect()
+    assert(rejected.toSeq === Seq(("8", "requestId_type")))
+    assert(parquetFiles(s"$dlDir/rejected/batch_id=0").size === 1)
+    assert(!Files.exists(java.nio.file.Path.of(dlDir, "quarantine")),
+      "a batch with no poison record must write no quarantine output")
   }
 
   test("replayed micro-batch overwrites its dead-letter partition (idempotent sink)") {
@@ -264,6 +301,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(lines.count(_.contains("query: first.example.")) === 1,
       "restart must not re-emit the already-processed file")
     assert(lines.count(_.contains("query: second.example.")) === 1)
+    // clean batches have no dead letters, so they write none
+    for (kind <- Seq("quarantine", "rejected"))
+      assert(!Files.exists(java.nio.file.Path.of(dlDir, kind)),
+        s"a clean batch must leave no $kind output")
   }
 
   test("stream-static threat-list enrichment joins per micro-batch") {
