@@ -123,6 +123,27 @@ object DedupQueries {
              COUNT(*) AS n_copies
       FROM documents GROUP BY 1 ORDER BY keep_id"""))
 
+  /** The fingerprint self-join both exact-overlap screens share: every
+    * doc pair (ia < ib) with a common shingle fingerprint, its
+    * intersection size `ni`, and each side's shingle count as `sa.n` /
+    * `sb.n` (the two size joins' aliases), plus the shingle cache
+    * handles to release. [[qDedupNgramJaccard]] and
+    * [[qDedupContainment]] differ only in the arithmetic over it. */
+  private def shingleOverlap(s: SparkSession,
+      dir: String): (DataFrame, Seq[DataFrame]) = {
+    val (shh0, handles) = fingerShingles(docs(s, dir))
+    val shh = shh0.select(col("doc_id"), col("h"))
+    val sizes = shh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = shh.as("a")
+      .join(shh.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
+      .agg(count(lit(1)).as("ni"))
+    (inter
+      .join(sizes.as("sa"), col("ia") === col("sa.doc_id"))
+      .join(sizes.as("sb"), col("ib") === col("sb.doc_id")), handles)
+  }
+
   /** N-gram Jaccard near-dup pairs: |A∩B| via a shingle-keyed equi-join
     * (no cross product), ratio from exact integer counts.
     *
@@ -141,17 +162,8 @@ object DedupQueries {
   val qDedupNgramJaccard = Q(
     "q_dedup_ngram_jaccard",
     (s, dir) => {
-      val (shh0, handles) = fingerShingles(docs(s, dir))
-      val shh = shh0.select(col("doc_id"), col("h"))
-      val sizes = shh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = shh.as("a")
-        .join(shh.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-        .agg(count(lit(1)).as("ni"))
-      val result = inter
-        .join(sizes.as("sa"), col("ia") === col("sa.doc_id"))
-        .join(sizes.as("sb"), col("ib") === col("sb.doc_id"))
+      val (overlap, handles) = shingleOverlap(s, dir)
+      val result = overlap
         .select(col("ia"), col("ib"),
           round(col("ni") * lit(1.0) /
             (col("sa.n") + col("sb.n") - col("ni")), 6).as("jaccard"))
@@ -1546,23 +1558,13 @@ object DedupQueries {
     * A training-data pipeline that only Jaccard-dedups keeps every
     * quote-with-commentary duplicate; the containment screen is the
     * standard companion pass. Pairs flag when EITHER direction ≥ 0.9.
-    * Same scale shape as [[qDedupNgramJaccard]] (shared shingle
-    * machinery, fingerprint equi-join intersection, per-doc size
-    * join); only the final arithmetic differs. */
+    * Same scale shape as [[qDedupNgramJaccard]] — the one
+    * [[shingleOverlap]] self-join; only the final arithmetic differs. */
   val qDedupContainment = Q(
     "q_dedup_containment",
     (s, dir) => {
-      val (shh0, handles) = fingerShingles(docs(s, dir))
-      val shh = shh0.select(col("doc_id"), col("h"))
-      val sizes = shh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = shh.as("a")
-        .join(shh.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-        .agg(count(lit(1)).as("ni"))
-      val result = inter
-        .join(sizes.as("sa"), col("ia") === col("sa.doc_id"))
-        .join(sizes.as("sb"), col("ib") === col("sb.doc_id"))
+      val (overlap, handles) = shingleOverlap(s, dir)
+      val result = overlap
         .select(col("ia"), col("ib"), col("ni"),
           round(col("ni") * lit(1.0) / col("sa.n"), 6).as("contain_a"),
           round(col("ni") * lit(1.0) / col("sb.n"), 6).as("contain_b"))

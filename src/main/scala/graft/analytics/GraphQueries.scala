@@ -1,7 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Graph analytics over relations the star schema already implies —
   * here: entity importance by PageRank on the customer↔supplier
@@ -30,62 +31,217 @@ import org.apache.spark.sql.functions._
   * is bit-reproducible in any engine, so a 3-step distributed
   * PageRank hash-matches DuckDB's unrolled recursion exactly.
   * Truncation loss from the integer divisions is bounded by one unit
-  * per edge per iteration (spec-asserted conservation bound). */
+  * per edge per iteration (spec-asserted conservation bound).
+  *
+  * The queries share five primitives: one trading-edge builder
+  * ([[tradingEdges]]), one both-direction doubling ([[doubled]]), one
+  * lineage-truncating loop ([[iterate]]), one frontier BFS ([[bfs]])
+  * and one ranked top-k tail ([[topK]]); the first two have DuckDB
+  * mirrors, so an edge-definition change lands in exactly two places. */
 object GraphQueries {
   import RelationalQueries.Q
+
+  /** The customer–supplier trading edges from ONE orders⋈lineitem join
+    * on the order key: (c, s) per distinct customer–supplier pair.
+    * `namespaced` ids share one node space (customer = key·2, supplier
+    * = key·2+1); raw ids keep the keys. `subgraph` keeps customers
+    * below key 500. `coCounts` keeps every pair once with its
+    * order-line count `n_co` instead of deduplicating.
+    * [[tradingEdgesSql]] is the oracle-side mirror. */
+  private def tradingEdges(s: SparkSession, dir: String,
+      namespaced: Boolean = true, subgraph: Boolean = false,
+      coCounts: Boolean = false): DataFrame = {
+    val o = Tables(s, dir, "orders")
+    val l = Tables(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"))
+    val lines = (if (subgraph) o.filter(col("o_custkey") < 500) else o)
+      .select(col("o_orderkey"), col("o_custkey"))
+      .join(l, col("o_orderkey") === col("l_orderkey"))
+    val (c, sp) =
+      if (namespaced) (col("o_custkey") * 2, col("l_suppkey") * 2 + 1)
+      else (col("o_custkey"), col("l_suppkey"))
+    if (coCounts)
+      lines.groupBy(c.as("c"), sp.as("s")).agg(count(lit(1)).as("n_co"))
+    else lines.select(c.as("c"), sp.as("s")).distinct()
+  }
+
+  /** [[tradingEdges]]' oracle-side mirror (distinct pairs); `sAs`
+    * names the supplier column. */
+  private def tradingEdgesSql(namespaced: Boolean = true,
+      subgraph: Boolean = false, sAs: String = "s"): String = {
+    val ids = if (namespaced) "o_custkey * 2 AS c, l_suppkey * 2 + 1"
+      else "o_custkey AS c, l_suppkey"
+    s"""SELECT DISTINCT $ids AS $sAs
+        FROM orders JOIN lineitem ON l_orderkey = o_orderkey""" +
+      (if (subgraph) "\n        WHERE o_custkey < 500" else "")
+  }
+
+  /** Both directions of an undirected edge list in ONE scan: each
+    * (a, b) row explodes into (src = a, dst = b) and (src = b, dst = a),
+    * each carrying the `carry` columns. A self-union would evaluate the
+    * upstream graph build once per branch (r12 measured the two).
+    * [[doubledSql]] is the oracle-side mirror. */
+  private def doubled(und: DataFrame, a: String, b: String,
+      carry: String*): DataFrame = {
+    def oriented(x: String, y: String) =
+      struct(Seq(col(x).as("src"), col(y).as("dst")) ++ carry.map(col): _*)
+    und.select(explode(array(oriented(a, b), oriented(b, a))).as("e"))
+      .select(Seq(col("e.src").as("src"), col("e.dst").as("dst")) ++
+        carry.map(c => col(s"e.$c").as(c)): _*)
+  }
+
+  /** [[doubled]]'s oracle-side mirror. */
+  private def doubledSql(rel: String, a: String, b: String): String =
+    s"""SELECT $a AS src, $b AS dst FROM $rel
+        UNION ALL
+        SELECT $b AS src, $a AS dst FROM $rel"""
+
+  /** Traversal edge list: [[doubled]] trading edges hash-partitioned by
+    * `src` BEFORE the persist. Every BFS level and walk step joins on
+    * src, so the cached distribution is reused and the corpus-scale
+    * edge side shuffles ONCE per traversal (the frontier side is the
+    * only per-step exchange). Callers release it after their action. */
+  private def traversalEdges(eo: DataFrame): DataFrame =
+    doubled(eo, "c", "s").repartition(col("src")).persist(MEMORY_AND_DISK)
+
+  /** The one lineage-truncating loop behind every iterative graph query
+    * (the Pregel superstep shape): state_i = step(state_{i−1}, i) for
+    * i = 1 .. `maxSteps`, each output EAGERLY localCheckpointed —
+    * persist plus a flat LogicalRDD leaf in one call, on internal rows.
+    * Without the cut, step i's plan nests every earlier step, and plan
+    * analysis cost and stack depth scale with ITERATIONS, not data
+    * (measured: a 4-hop BFS plan printed 538k lines; k-core spent ~20
+    * of 32 s in driver-side re-analysis). `until(prev, next, i)` runs
+    * after step i is materialized — the one driver round-trip a
+    * convergence test needs; true ends the loop. Superseded leaves
+    * release via the context cleaner once unreferenced, so the loop
+    * keeps at most two live. Returns (last state, steps run). */
+  private[analytics] def iterate(init: DataFrame, maxSteps: Int,
+      until: (DataFrame, DataFrame, Int) => Boolean = (_, _, _) => false)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+    var state = init
+    var i = 0
+    var done = false
+    while (!done && i < maxSteps) {
+      i += 1
+      val next = step(state, i).localCheckpoint(true)
+      done = until(state, next, i)
+      state = next
+    }
+    (state, i)
+  }
+
+  /** The one frontier-BFS kernel: level d's frontier (the visited rows
+    * at dist d−1) equi-joins `edges` (src, dst), anti-joins the visited
+    * set, and dedups into level d — the textbook Pregel BFS as pure
+    * DataFrame algebra, all keyed on the node id so one hash
+    * partitioning carries every step. `sources` holds the `keys`
+    * columns plus `node`; key columns ride along, so k sources (e.g.
+    * closeness's `seed`) traverse jointly and multiply only the
+    * frontier rows, never the edge passes. Each level's visited frame
+    * is an [[iterate]] step. The traversal stops at the empty-frontier
+    * fixpoint, capped at `maxHops`: a level after an empty frontier
+    * adds nothing, so fixed-horizon callers get the same visited set.
+    * Returns (visited (keys, node, dist), levels that reached new
+    * nodes) — the eccentricity, or `maxHops` when that is smaller. */
+  private[analytics] def bfs(edges: DataFrame, sources: DataFrame,
+      keys: Seq[String], maxHops: Int): (DataFrame, Int) = {
+    val id = keys :+ "node"
+    // the newest level's row count, observed inside the level's own
+    // checkpoint job: the fixpoint test costs no extra Spark job
+    var level: Observation = null
+    var exhausted = false
+    val (visited, steps) = iterate(
+        sources.select(id.map(col) :+ lit(0L).as("dist"): _*), maxHops,
+        until = (_, _, _) => {
+          exhausted = level.get("n") == 0L
+          exhausted
+        }) { (visited, d) =>
+      val frontier = visited.filter(col("dist") === d - 1)
+      // visited-membership is a per-row predicate, so the anti-join
+      // commutes with distinct; running it BEFORE the distinct means
+      // the distinct exchange carries only never-visited expansion
+      // rows — at later levels the raw expansion is almost entirely
+      // already-visited, so this is the difference between exchanging
+      // |edges| and exchanging |new frontier| per level.
+      val next = edges.join(frontier, edges("src") === frontier("node"))
+        .select(keys.map(frontier(_)) :+ edges("dst").as("node"): _*)
+        .join(visited.select(id.map(col): _*), id, "left_anti")
+        .distinct()
+        .select(id.map(col) :+ lit(d.toLong).as("dist"): _*)
+      level = Observation()
+      visited.unionByName(next.observe(level, count(lit(1)).as("n")))
+    }
+    (visited, if (exhausted) steps - 1 else steps)
+  }
+
+  /** Ranked top-`k` without a partition-less window: TakeOrdered by
+    * `desc` (descending) then `asc` (ascending), then the k rows'
+    * structs sort in-row (desc fields negated) and posexplode into
+    * `rank` 1..k (the q_prep_tokenize discipline). Returns (rank,
+    * desc…, asc…, carry…) with the desc values restored. */
+  private def topK(df: DataFrame, k: Int, desc: Seq[String],
+      asc: Seq[String], carry: Seq[String] = Nil): DataFrame = {
+    val rest = asc ++ carry
+    df.orderBy(desc.map(col(_).desc) ++ asc.map(col): _*).limit(k)
+      .agg(sort_array(collect_list(struct(
+        desc.map(c => (-col(c)).as(s"neg$c")) ++ rest.map(col): _*)))
+        .as("ts"))
+      .select(posexplode(col("ts")))
+      .select((col("pos") + 1).cast("long").as("rank") +:
+        (desc.map(c => (-col(s"col.neg$c")).as(c)) ++
+          rest.map(c => col(s"col.$c").as(c))): _*)
+  }
 
   /** Integer PageRank over an undirected bipartite edge list `eo`
     * with columns (c, s): both directions are materialized, damping
     * 0.85, `iters` sweeps. Returns (node, r) in nano-units. Exposed
     * for the spec's fixture graphs. */
   private[analytics] def pagerank(eo: DataFrame, iters: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (edgesD, stats, r0) = pagerankSetup(eo, MEMORY_AND_DISK)
+    val (edgesD, stats, r0) = pagerankSetup(eo)
     var r = r0
-    for (_ <- 1 to iters) r = pagerankSweep(edgesD, stats, r)
+    for (_ <- 1 to iters)
+      r = pagerankSweep(edgesD, r, _.crossJoin(broadcast(stats)))
     QueryScopedCache.releaseAfter(r, Seq(edgesD, stats))
   }
 
   /** Shared setup: bidirectional edge list with denormalized
     * out-degrees (persisted), the one-row base-mass scalar, and the
     * uniform initial rank frame. */
-  private def pagerankSetup(eo: DataFrame,
-      level: org.apache.spark.storage.StorageLevel)
+  private def pagerankSetup(eo: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    // ONE scan of `eo` yields both edge directions (explode of the two
-    // oriented structs) instead of a self-union whose two branches each
-    // re-evaluate the upstream graph build; stats and r0 then derive
-    // from the PERSISTED edge relation, not from fresh `deg` subtrees.
-    // The previous shape re-ran the orders⋈lineitem distinct up to
-    // eight times per query (setup + stats + r0 + both union branches;
-    // r12 operator profile) — now the graph build runs at most twice
-    // (the degree join's two sides), and every later consumer is a
-    // cache read. `stats` persists too: each sweep broadcasts it, and
-    // un-persisted it would re-aggregate the cache per sweep. Callers
-    // release BOTH handles (edgesD, stats) after their action.
-    val edges = eo.select(explode(array(
-        struct(col("c").as("src"), col("s").as("dst")),
-        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    // ONE scan of `eo` yields both edge directions ([[doubled]]); stats
+    // and r0 then derive from the PERSISTED edge relation, not from
+    // fresh `deg` subtrees. The previous shape re-ran the
+    // orders⋈lineitem distinct up to eight times per query (setup +
+    // stats + r0 + both union branches; r12 operator profile) — now
+    // the graph build runs at most twice (the degree join's two
+    // sides), and every later consumer is a cache read. `stats`
+    // persists too: each sweep broadcasts it, and un-persisted it
+    // would re-aggregate the cache per sweep. Callers release BOTH
+    // handles (edgesD, stats) after their action.
+    val edges = doubled(eo, "c", "s")
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesD = edges.join(deg, "src").persist(level)
+    val edgesD = edges.join(deg, "src").persist(MEMORY_AND_DISK)
     val srcs = edgesD.select(col("src")).distinct()
     val stats = srcs.agg(
       expr("CAST(1000000000 DIV count(1) AS BIGINT)").as("base"))
-      .persist(level)
+      .persist(MEMORY_AND_DISK)
     val r0 = srcs.crossJoin(broadcast(stats))
       .select(col("src").as("node"), col("base").as("r"))
     (edgesD, stats, r0)
   }
 
-  /** One integer PageRank sweep: contribution join + in-sum + damping. */
-  private def pagerankSweep(edgesD: DataFrame, stats: DataFrame,
-      r: DataFrame): DataFrame =
-    edgesD.join(r, edgesD("src") === r("node"))
+  /** One integer PageRank sweep: contribution join + in-sum + damping.
+    * `teleport` attaches each node's teleport mass `base` to the
+    * (dst, insum) frame: the uniform one-row scalar for global
+    * PageRank, the seed-base table for [[qGraphPpr]]. */
+  private def pagerankSweep(edgesD: DataFrame, r: DataFrame,
+      teleport: DataFrame => DataFrame): DataFrame =
+    teleport(edgesD.join(r, edgesD("src") === r("node"))
       .select(col("dst"), expr("r DIV outdeg").as("contrib"))
       .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("insum"))
-      .crossJoin(broadcast(stats))
+      .agg(sum(col("contrib")).as("insum")))
       .select(col("dst").as("node"),
         expr("CAST((15 * base + 85 * insum) DIV 100 AS BIGINT)").as("r"))
 
@@ -96,50 +252,38 @@ object GraphQueries {
     * check is a driver-side single-row aggregate over the rank frame
     * (already bounded at ≤ |nodes| rows) — the one driver round-trip a
     * convergence test fundamentally needs; everything else stays pure
-    * dataflow. Each sweep's rank frame persists so the delta action
-    * and the next sweep share one materialization; the previous
-    * sweep's cache releases as soon as its successor is materialized,
-    * so at most two rank frames are ever live. Returns (ranks,
-    * sweepsRun). REGISTERED queries keep fixed horizons — the oracle
-    * gate needs a replayable iteration count; this variant is the
-    * production API for when the sweep budget should be data-driven. */
+    * dataflow. Each sweep is an [[iterate]] step, so the delta action
+    * and the next sweep share one flat materialization. Returns
+    * (ranks, sweepsRun). REGISTERED queries keep fixed horizons — the
+    * oracle gate needs a replayable iteration count; this variant is
+    * the production API for when the sweep budget should be
+    * data-driven. */
   def pagerankUntilConverged(eo: DataFrame, tolNano: Long,
       maxIters: Int): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (edgesD, stats, r0) = pagerankSetup(eo, MEMORY_AND_DISK)
-    // each sweep's frame is lineage-truncated via EAGER localCheckpoint
-    // (persist + flat LogicalRDD leaf in one call, on INTERNAL rows —
-    // no external-Row codec round-trip): an unbounded sweep count must
-    // not grow an unboundedly nested logical plan — analysis cost and
-    // stack depth would scale with ITERATIONS, not data. Superseded
-    // checkpoint blocks release via the context cleaner once the
-    // previous frame goes unreferenced; the loop keeps only two live.
-    var r = r0.localCheckpoint(true)
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val rNext = pagerankSweep(edgesD, stats, r).localCheckpoint(true)
-      val delta = rNext.join(r.withColumnRenamed("r", "rp"), "node")
+    val (edgesD, stats, r0) = pagerankSetup(eo)
+    val (r, iters) = iterate(r0, maxIters, until = (r, rNext, _) =>
+      rNext.join(r.withColumnRenamed("r", "rp"), "node")
         .agg(coalesce(sum(abs(col("r") - col("rp"))), lit(0L)).as("d"))
-        .head().getLong(0)
-      r = rNext
-      iters += 1
-      converged = delta <= tolNano
+        .head().getLong(0) <= tolNano) { (r, _) =>
+      pagerankSweep(edgesD, r, _.crossJoin(broadcast(stats)))
     }
     (QueryScopedCache.releaseAfter(r, Seq(edgesD, stats)), iters)
   }
 
-  /** One unrolled oracle iteration: `cur` from `prev`. */
-  private def iterSql(prev: String, cur: String): String = s"""
+  /** One unrolled oracle iteration: `cur` from `prev`, with the uniform
+    * teleport by default; [[qGraphPpr]] passes its seed-base one. */
+  private def iterSql(prev: String, cur: String,
+      base: String = "MIN(st.base)",
+      teleport: String = "CROSS JOIN stats st"): String = s"""
       $cur AS (
         SELECT e.dst AS node,
-               CAST((15 * MIN(st.base) +
+               CAST((15 * $base +
                      85 * CAST(SUM(r.r // d.outdeg) AS BIGINT)) // 100
                  AS BIGINT) AS r
         FROM edges e
         JOIN $prev r ON r.node = e.src
         JOIN deg d ON d.src = e.src
-        CROSS JOIN stats st
+        $teleport
         GROUP BY e.dst)"""
 
   /** Top-20 trading-graph entities by 3-sweep PageRank. Node ids are
@@ -147,63 +291,26 @@ object GraphQueries {
     * entity families share one graph without collision. */
   val qGraphPagerank = Q(
     "q_graph_pagerank",
-    (s, dir) => {
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"))
-        .distinct()
-      val r = pagerank(eo, 3)
-      // grouped-top-k without a partition-less window: TakeOrdered
-      // then in-row rank assignment (the q_prep_tokenize discipline)
-      r.orderBy(col("r").desc, col("node")).limit(20)
-        .agg(sort_array(collect_list(
-          struct((-col("r")).as("negr"), col("node")))).as("ts"))
-        .select(posexplode(col("ts")))
-        .select((col("pos") + 1).cast("long").as("rank"),
-          col("col.node").as("node"),
-          (-col("col.negr")).as("pr_nano"))
-        .orderBy(col("rank"))
-    },
+    (s, dir) =>
+      topK(pagerank(tradingEdges(s, dir), 3), 20, Seq("r"), Seq("node"))
+        .select(col("rank"), col("node"), col("r").as("pr_nano"))
+        .orderBy(col("rank")),
     Some(s"""
       WITH eo AS MATERIALIZED (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        ${tradingEdgesSql()}),
       edges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM eo
-        UNION ALL
-        SELECT s AS src, c AS dst FROM eo),
+        ${doubledSql("eo", "c", "s")}),
       deg AS MATERIALIZED (
         SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
       stats AS (
         SELECT CAST(1000000000 // COUNT(*) AS BIGINT) AS base FROM deg),
       r0 AS (SELECT src AS node, base AS r FROM deg CROSS JOIN stats),
-      ${iterSql("r0", "r1")},
-      ${iterSql("r1", "r2")},
-      ${iterSql("r2", "r3")}
+      ${(1 to 3).map(i => iterSql(s"r${i - 1}", s"r$i")).mkString(",")}
       SELECT rank, node, pr_nano FROM (
         SELECT node, r AS pr_nano,
                ROW_NUMBER() OVER (ORDER BY r DESC, node) AS rank
         FROM r3) x
       WHERE rank <= 20 ORDER BY rank"""))
-
-  /** One PERSONALIZED-PageRank iteration level for the oracle: like
-    * [[iterSql]] but the teleport mass lands only on the seed set
-    * (LEFT JOIN `seedbase`, zero elsewhere) instead of uniformly. */
-  private def pprIterSql(prev: String, cur: String): String = s"""
-      $cur AS (
-        SELECT e.dst AS node,
-               CAST((15 * COALESCE(MIN(sb.base), 0) +
-                     85 * CAST(SUM(r.r // d.outdeg) AS BIGINT)) // 100
-                 AS BIGINT) AS r
-        FROM edges e
-        JOIN $prev r ON r.node = e.src
-        JOIN deg d ON d.src = e.src
-        LEFT JOIN seedbase sb ON sb.snode = e.dst
-        GROUP BY e.dst)"""
 
   /** Personalized PageRank — [[qGraphPagerank]] with the teleport mass
     * redirected to a SEED set (the ten lowest-keyed customers): ranks
@@ -213,27 +320,19 @@ object GraphQueries {
     * (nano-unit mass, exact `DIV` contributions, damping in BIGINT),
     * so three sweeps hash-match DuckDB's unrolled recursion exactly.
     *
-    * Scale shape: identical to global PageRank — one node-keyed
-    * shuffle per sweep over the persisted degree-denormalized edge
-    * list — plus one broadcast left join per sweep against the
-    * seed-base frame (|seeds| rows; a personalization vector is small
-    * by definition). The only new frame is that seed table; the
-    * one-row seed-count scalar rides a broadcast cross join. */
+    * Scale shape: identical to global PageRank — the same
+    * [[pagerankSweep]] over the persisted degree-denormalized edge
+    * list — with the teleport a broadcast left join per sweep against
+    * the seed-base frame (|seeds| rows; a personalization vector is
+    * small by definition), zero mass off the seeds. The only new
+    * frame is that seed table; the one-row seed-count scalar rides a
+    * broadcast cross join. */
   val qGraphPpr = Q(
     "q_graph_ppr",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"))
-        .distinct()
       // reuse the shared setup for the persisted edge list; the
       // uniform r0 it also builds is lazy and never executed here
-      val (edgesD, stats, _) = pagerankSetup(eo, MEMORY_AND_DISK)
+      val (edgesD, stats, _) = pagerankSetup(tradingEdges(s, dir))
       // seeds from the PERSISTED edge relation, not a fresh `eo`
       // evaluation: customer nodes are the even ids by construction
       // (c = custkey·2), so {src even, src ≤ 20} ≡ {c ≤ 20} (r12)
@@ -248,38 +347,22 @@ object GraphQueries {
         .select(col("snode"),
           expr("CAST(1000000000 DIV ns AS BIGINT)").as("base"))
         .persist(MEMORY_AND_DISK)
-      val r0 = edgesD.select(col("src")).distinct()
-        .join(broadcast(seedBase), col("src") === col("snode"), "left")
-        .select(col("src").as("node"),
-          coalesce(col("base"), lit(0L)).as("r"))
-      var r = r0
-      for (_ <- 1 to 3)
-        r = edgesD.join(r, edgesD("src") === r("node"))
-          .select(col("dst"), expr("r DIV outdeg").as("contrib"))
-          .groupBy(col("dst"))
-          .agg(sum(col("contrib")).as("insum"))
-          .join(broadcast(seedBase), col("dst") === col("snode"), "left")
-          .select(col("dst").as("node"),
-            expr("CAST((15 * coalesce(base, 0) + 85 * insum) DIV 100" +
-              " AS BIGINT)").as("r"))
-      val res = r.orderBy(col("r").desc, col("node")).limit(20)
-        .agg(sort_array(collect_list(
-          struct((-col("r")).as("negr"), col("node")))).as("ts"))
-        .select(posexplode(col("ts")))
-        .select((col("pos") + 1).cast("long").as("rank"),
-          col("col.node").as("node"),
-          (-col("col.negr")).as("ppr_nano"))
+      def seeded(x: DataFrame, key: String): DataFrame =
+        x.join(broadcast(seedBase), col(key) === col("snode"), "left")
+          .withColumn("base", coalesce(col("base"), lit(0L)))
+      var r = seeded(edgesD.select(col("src")).distinct(), "src")
+        .select(col("src").as("node"), col("base").as("r"))
+      for (_ <- 1 to 3) r = pagerankSweep(edgesD, r, seeded(_, "dst"))
+      val res = topK(r, 20, Seq("r"), Seq("node"))
+        .select(col("rank"), col("node"), col("r").as("ppr_nano"))
         .orderBy(col("rank"))
       QueryScopedCache.releaseAfter(res, Seq(edgesD, stats, seedBase))
     },
     Some(s"""
       WITH eo AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        ${tradingEdgesSql()}),
       edges AS (
-        SELECT c AS src, s AS dst FROM eo
-        UNION ALL
-        SELECT s AS src, c AS dst FROM eo),
+        ${doubledSql("eo", "c", "s")}),
       deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
       seeds AS (SELECT DISTINCT c AS snode FROM eo WHERE c <= 20),
       ns AS (SELECT COUNT(*) AS ns FROM seeds),
@@ -289,9 +372,9 @@ object GraphQueries {
       r0 AS (
         SELECT d.src AS node, COALESCE(sb.base, 0) AS r
         FROM deg d LEFT JOIN seedbase sb ON sb.snode = d.src),
-      ${pprIterSql("r0", "r1")},
-      ${pprIterSql("r1", "r2")},
-      ${pprIterSql("r2", "r3")}
+      ${(1 to 3).map(i => iterSql(s"r${i - 1}", s"r$i",
+          "COALESCE(MIN(sb.base), 0)",
+          "LEFT JOIN seedbase sb ON sb.snode = e.dst")).mkString(",")}
       SELECT rank, node, ppr_nano FROM (
         SELECT node, r AS ppr_nano,
                ROW_NUMBER() OVER (ORDER BY r DESC, node) AS rank
@@ -319,18 +402,11 @@ object GraphQueries {
     * renorm consumes its input twice (total + scale), so without the
     * cut the four chained half-rounds re-derive upstream levels
     * exponentially (measured: 22.8 → 3.9 s at sf0.1). Top-20 per
-    * side via TakeOrdered, never a partition-less window. */
+    * side via [[topK]], never a partition-less window. */
   val qGraphHits = Q(
     "q_graph_hits",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-        .distinct()
+      val eo = tradingEdges(s, dir, namespaced = false)
         .persist(MEMORY_AND_DISK)
       def renorm(x0: DataFrame, key: String, v: String): DataFrame = {
         val x = x0.localCheckpoint(true)
@@ -346,22 +422,18 @@ object GraphQueries {
       for (_ <- 1 to 2) {
         a = renorm(
           eo.join(h, Seq("c"))
-            .groupBy(col("sup")).agg(sum(col("h")).as("a")),
-          "sup", "a")
+            .groupBy(col("s")).agg(sum(col("h")).as("a")),
+          "s", "a")
         h = renorm(
-          eo.join(a, Seq("sup"))
+          eo.join(a, Seq("s"))
             .groupBy(col("c")).agg(sum(col("a")).as("h")),
           "c", "h")
       }
       def top20(x: DataFrame, key: String, v: String, side: String) =
-        x.orderBy(col(v).desc, col(key)).limit(20)
-          .agg(sort_array(collect_list(
-            struct((-col(v)).as("neg"), col(key).as("node")))).as("ts"))
-          .select(posexplode(col("ts")))
-          .select(lit(side).as("side"),
-            (col("pos") + 1).cast("long").as("rank"),
-            col("col.node").as("node"), (-col("col.neg")).as("score_nano"))
-      val res = top20(a, "sup", "a", "authority")
+        topK(x, 20, Seq(v), Seq(key))
+          .select(lit(side).as("side"), col("rank"),
+            col(key).as("node"), col(v).as("score_nano"))
+      val res = top20(a, "s", "a", "authority")
         .unionByName(top20(h, "c", "h", "hub"))
         .orderBy(col("side"), col("rank"))
       QueryScopedCache.releaseAfter(res, Seq(eo))
@@ -373,8 +445,7 @@ object GraphQueries {
           AS BIGINT) AS v FROM $src)"""
       s"""
       WITH eo AS MATERIALIZED (
-        SELECT DISTINCT o_custkey AS c, l_suppkey AS sup
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        ${tradingEdgesSql(namespaced = false, sAs = "sup")}),
       nc AS (SELECT COUNT(DISTINCT c) AS nc FROM eo),
       h0 AS (SELECT DISTINCT c, CAST(1000000000 // nc AS BIGINT) AS v
              FROM eo CROSS JOIN nc),
@@ -406,24 +477,6 @@ object GraphQueries {
       ORDER BY side, rank"""
     })
 
-  /** Triangle participation on the part CO-OCCURRENCE graph (two
-    * parts are adjacent when some order contains both): the classic
-    * distributed triangle count — orient every edge low-id → high-id
-    * so each triangle materializes exactly once as an (a<b<c) wedge
-    * closed by a third edge lookup, never six times. Output: the 20
-    * parts participating in the most triangles (dense co-purchase
-    * neighborhoods — the "frequently bought together" backbone).
-    *
-    * Scale shape: the co-occurrence edge build is a self-join keyed on
-    * the order id (bounded fan-out: an order's line count), distinct
-    * once, persisted once, then reused by all three legs of the
-    * wedge-close join — equi-joins on node ids end to end, no
-    * cartesian anywhere. On a skewed degree distribution the
-    * refinement is DEGREE ordering instead of id ordering (orient
-    * edges toward the higher-degree endpoint so wedges enumerate at
-    * the low-degree node — same single-count guarantee, provably
-    * minimal wedge volume); id ordering keeps the oracle SQL identical
-    * and is the right call on this near-uniform graph. */
   /** Undirected part co-occurrence edge list (a < b, distinct —
     * two parts are adjacent when some order contains both): the ONE
     * graph construction shared by triangles, k-core, and label
@@ -446,10 +499,32 @@ object GraphQueries {
         FROM lineitem x JOIN lineitem y
           ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey"""
 
+  /** Per-node degree of an undirected (a, b) edge list: (n, d). */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(explode(array(col("a"), col("b"))).as("n"))
+      .groupBy(col("n")).agg(count(lit(1)).as("d"))
+
+  /** Triangle participation on the part CO-OCCURRENCE graph (two
+    * parts are adjacent when some order contains both): the classic
+    * distributed triangle count — orient every edge low-id → high-id
+    * so each triangle materializes exactly once as an (a<b<c) wedge
+    * closed by a third edge lookup, never six times. Output: the 20
+    * parts participating in the most triangles (dense co-purchase
+    * neighborhoods — the "frequently bought together" backbone).
+    *
+    * Scale shape: the co-occurrence edge build is a self-join keyed on
+    * the order id (bounded fan-out: an order's line count), distinct
+    * once, persisted once, then reused by all three legs of the
+    * wedge-close join — equi-joins on node ids end to end, no
+    * cartesian anywhere. On a skewed degree distribution the
+    * refinement is DEGREE ordering instead of id ordering (orient
+    * edges toward the higher-degree endpoint so wedges enumerate at
+    * the low-degree node — same single-count guarantee, provably
+    * minimal wedge volume); id ordering keeps the oracle SQL identical
+    * and is the right call on this near-uniform graph. */
   val qGraphTriangles = Q(
     "q_graph_triangles",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // persisted (ADVICE r8): the expensive self-join + distinct is
       // consumed twice — degree build AND orientation join — and would
       // recompute without the cache; released with `e` below
@@ -466,8 +541,7 @@ object GraphQueries {
       // never worse on uniform ones. Orientation changes only the
       // enumeration order, never the triangle set — the oracle's
       // ID-oriented plan still gates.
-      val deg = und.select(explode(array(col("a"), col("b"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
+      val deg = degrees(und)
       val lt = (col("da") < col("db")) ||
         (col("da") === col("db") && col("a") < col("b"))
       val e = und
@@ -507,13 +581,8 @@ object GraphQueries {
       val counts = tri
         .select(explode(array(col("a"), col("b"), col("c"))).as("part"))
         .groupBy(col("part")).agg(count(lit(1)).as("n_tri"))
-      val result = counts
-        .orderBy(col("n_tri").desc, col("part")).limit(20)
-        .agg(sort_array(collect_list(
-          struct((-col("n_tri")).as("negn"), col("part")))).as("ts"))
-        .select(posexplode(col("ts")))
-        .select((col("pos") + 1).cast("long").as("rank"),
-          col("col.part").as("part"), (-col("col.negn")).as("n_tri"))
+      val result = topK(counts, 20, Seq("n_tri"), Seq("part"))
+        .select(col("rank"), col("part"), col("n_tri"))
         .orderBy(col("rank"))
       QueryScopedCache.releaseAfter(result, Seq(und, e))
     },
@@ -535,6 +604,38 @@ object GraphQueries {
         FROM counts) x
       WHERE rank <= 20 ORDER BY rank"""))
 
+  /** BFS hop-distance histogram over an undirected bipartite edge
+    * list `eo` with columns (c, s), from the minimum node id, out to
+    * `maxHops`; unreached nodes report as `dist = -1`. Exposed for
+    * the spec's fixture graphs. */
+  private[analytics] def bfsHistogram(eo: DataFrame, maxHops: Int): DataFrame =
+    bfsHistogramUntilConverged(eo, maxHops)._1
+
+  /** Convergence-gated BFS (round-9, VERDICT item #6): the [[bfs]]
+    * kernel from the minimum node id, which stops as soon as a level's
+    * frontier is EMPTY — the natural fixpoint — capped at `maxHops` as
+    * a runaway bound. The per-level check reads the level's row count,
+    * observed inside the checkpoint job that materializes it (the
+    * materialization the next level needs anyway — no extra job). Levels
+    * past the fixpoint contribute nothing, so for any `maxHops` ≥ the
+    * component's eccentricity the histogram is the fixed-horizon one
+    * (spec-pinned). Returns (histogram, levelsRun). */
+  def bfsHistogramUntilConverged(eo: DataFrame,
+      maxHops: Int): (DataFrame, Int) = {
+    val edges = traversalEdges(eo)
+    val nodes = edges.select(col("src").as("node")).distinct()
+      .persist(MEMORY_AND_DISK)
+    val (visited, levels) =
+      bfs(edges, nodes.agg(min(col("node")).as("node")), Nil, maxHops)
+    val hist = visited.groupBy(col("dist"))
+      .agg(count(lit(1)).as("n_nodes"))
+    val unreached = nodes.join(visited, Seq("node"), "left_anti")
+      .agg(count(lit(1)).as("n_nodes"))
+      .select(lit(-1L).as("dist"), col("n_nodes"))
+    val result = hist.union(unreached).orderBy(col("dist"))
+    (QueryScopedCache.releaseAfter(result, Seq(edges, nodes)), levels)
+  }
+
   /** Breadth-first reachability on the trading graph: hop-distance
     * histogram from a deterministic source (the minimum node id) out
     * to 4 hops, plus the unreached remainder as `dist = -1` — the
@@ -542,151 +643,21 @@ object GraphQueries {
     * neighborhood questions, and the engine's equivalence to SQL's
     * recursive-CTE family (the oracle IS a `WITH RECURSIVE` query).
     *
-    * The distributed shape is frontier iteration — level d's frontier
-    * equi-joins the edge list, anti-joins the visited set, and dedups
-    * to become level d+1 — the textbook Pregel BFS expressed as pure
-    * DataFrame algebra. Each iteration is one join + one anti-join +
-    * one distinct, ALL keyed on the node id, so the same hash
-    * partitioning carries every step; per-level frontiers materialize
-    * as eager localCheckpoints (flat leaves, blocks released by the
-    * context cleaner once unreferenced — the PageRank discipline), so
-    * the growing visited union neither recomputes nor nests its plan.
-    * The horizon is FIXED (4) for the same oracle-parity reason as
+    * The distributed shape is the [[bfs]] frontier kernel. The
+    * horizon is FIXED (4) for the same oracle-parity reason as
     * [[pagerank]]'s fixed sweeps: BFS level sets are deterministic, so
     * visited-at-level equals the oracle's MIN(dist) per node exactly.
     * At 100 TB the identical loop runs with the frontier bucketed by
     * node id; nothing here is driver-side (the source node is a
-    * one-row broadcast, never a collect). */
-  /** BFS hop-distance histogram over an undirected bipartite edge
-    * list `eo` with columns (c, s), from the minimum node id, out to
-    * `maxHops`; unreached nodes report as `dist = -1`. Exposed for
-    * the spec's fixture graphs. */
-  private[analytics] def bfsHistogram(eo: DataFrame, maxHops: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // partitioned by src BEFORE the persist: every level's frontier
-    // join keys on src, so the cached hash distribution is reused and
-    // the corpus-scale edge side shuffles ONCE for the whole traversal
-    // (the frontier side is the only per-level exchange)
-    val edges = eo.select(col("c").as("src"), col("s").as("dst"))
-      .union(eo.select(col("s").as("src"), col("c").as("dst")))
-      .repartition(col("src"))
-      .persist(MEMORY_AND_DISK)
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .persist(MEMORY_AND_DISK)
-    val source = nodes.agg(min(col("node")).as("node"))
-    // Each level is lineage-truncated via EAGER localCheckpoint (the
-    // same discipline as [[pagerankUntilConverged]]): level d's plan
-    // references `visited` — the union of ALL prior levels — so with
-    // plain persist the NESTED logical plan doubles per level
-    // (measured: the 4-hop result plan printed 538k lines, and every
-    // action re-analyzed it). With flat LogicalRDD leaves each level's
-    // plan is edges ⋈ leaf − (union of ≤ d leaves): analysis cost
-    // scales with LEVELS, not 2^levels. The checkpoint materializes
-    // the level eagerly — work BFS needs level-by-level anyway.
-    var visited = source.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = visited
-    val persisted = Seq.newBuilder[DataFrame]
-    persisted ++= Seq(edges, nodes)
-    for (d <- 1 to maxHops) {
-      // visited-membership is a per-row predicate, so the anti-join
-      // commutes with distinct; running it BEFORE the distinct means
-      // the distinct exchange carries only never-visited expansion
-      // rows — at later levels the raw expansion is almost entirely
-      // already-visited, so this is the difference between exchanging
-      // |edges| and exchanging |new frontier| per level.
-      val next = edges
-        .join(frontier, edges("src") === frontier("node"))
-        .select(edges("dst").as("node"))
-        .join(visited, Seq("node"), "left_anti")
-        .distinct()
-        .select(col("node"), lit(d.toLong).as("dist"))
-        .localCheckpoint(true)
-      visited = visited.union(next)
-      frontier = next
-    }
-    val hist = visited.groupBy(col("dist"))
-      .agg(count(lit(1)).as("n_nodes"))
-    val unreached = nodes.join(visited, Seq("node"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"))
-      .select(lit(-1L).as("dist"), col("n_nodes"))
-    val result = hist.union(unreached).orderBy(col("dist"))
-    QueryScopedCache.releaseAfter(result, persisted.result())
-  }
-
-  /** Convergence-gated BFS (round-9, VERDICT item #6): identical
-    * frontier iteration, but the traversal stops as soon as a level's
-    * frontier is EMPTY — the natural fixpoint — instead of running a
-    * fixed horizon, capped at `maxHops` as a runaway bound. The
-    * per-level check is a count on the just-persisted frontier (the
-    * materialization the next level needs anyway — the check itself
-    * adds no extra pass, only the driver round-trip). Semantics are
-    * unchanged: levels past the fixpoint contribute nothing in the
-    * fixed-horizon variant, so for any `maxHops` ≥ the component's
-    * eccentricity the two return identical histograms (spec-pinned).
-    * Returns (histogram, levelsRun). Registered queries keep the
-    * fixed horizon for oracle replayability. */
-  def bfsHistogramUntilConverged(eo: DataFrame,
-      maxHops: Int): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = eo.select(col("c").as("src"), col("s").as("dst"))
-      .union(eo.select(col("s").as("src"), col("c").as("dst")))
-      .repartition(col("src"))
-      .persist(MEMORY_AND_DISK)
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .persist(MEMORY_AND_DISK)
-    val source = nodes.agg(min(col("node")).as("node"))
-    // flat per-level leaves, as in bfsHistogram; doubly important here
-    // because the per-level isEmpty action re-analyzes the plan
-    var visited = source.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = visited
-    val persisted = Seq.newBuilder[DataFrame]
-    persisted ++= Seq(edges, nodes)
-    var d = 0
-    var exhausted = false
-    while (!exhausted && d < maxHops) {
-      d += 1
-      val next = edges
-        .join(frontier, edges("src") === frontier("node"))
-        .select(edges("dst").as("node"))
-        .join(visited, Seq("node"), "left_anti") // before distinct — see bfsHistogram
-        .distinct()
-        .select(col("node"), lit(d.toLong).as("dist"))
-        .localCheckpoint(true)
-      if (next.isEmpty) { exhausted = true; d -= 1 }
-      else { visited = visited.union(next); frontier = next }
-    }
-    val hist = visited.groupBy(col("dist"))
-      .agg(count(lit(1)).as("n_nodes"))
-    val unreached = nodes.join(visited, Seq("node"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"))
-      .select(lit(-1L).as("dist"), col("n_nodes"))
-    val result = hist.union(unreached).orderBy(col("dist"))
-    (QueryScopedCache.releaseAfter(result, persisted.result()), d)
-  }
-
+    * one-row frame, never a collect). */
   val qGraphBfs = Q(
     "q_graph_bfs",
-    (s, dir) => {
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"))
-        .distinct()
-      bfsHistogram(eo, 4)
-    },
-    Some("""
+    (s, dir) => bfsHistogram(tradingEdges(s, dir), 4),
+    Some(s"""
       WITH RECURSIVE eo AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        ${tradingEdgesSql()}),
       edges AS (
-        SELECT c AS src, s AS dst FROM eo
-        UNION ALL
-        SELECT s AS src, c AS dst FROM eo),
+        ${doubledSql("eo", "c", "s")}),
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       srcn AS (SELECT MIN(node) AS node FROM nodes),
       reach AS (
@@ -718,53 +689,36 @@ object GraphQueries {
     * aggregated per pair; degrees come from the same cached edge
     * relation. At skew, the hot-customer fan-out is the salting
     * candidate, same playbook as [[qGraphTriangles]]'s orientation.
-    * Top-k is TakeOrdered (no partition-less window), ranked via the
-    * sorted-struct explode. */
+    * Top-k is [[topK]] (no partition-less window). */
   val qGraphJaccard = Q(
     "q_graph_jaccard",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
       // consumed twice (degrees + wedge self-join): persist so the
       // join+distinct materializes once
-      val ce = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
-        .distinct()
+      val ce = tradingEdges(s, dir, namespaced = false)
         .persist(MEMORY_AND_DISK)
-      val deg = ce.groupBy(col("sp")).agg(count(lit(1)).as("d"))
+      val deg = ce.groupBy(col("s")).agg(count(lit(1)).as("d"))
       val pairs = ce.as("x").join(ce.as("y"),
-          col("x.c") === col("y.c") && col("x.sp") < col("y.sp"))
-        .groupBy(col("x.sp").as("s1"), col("y.sp").as("s2"))
+          col("x.c") === col("y.c") && col("x.s") < col("y.s"))
+        .groupBy(col("x.s").as("s1"), col("y.s").as("s2"))
         .agg(count(lit(1)).as("common"))
       val scored = pairs
-        .join(deg.select(col("sp").as("s1"), col("d").as("d1")), "s1")
-        .join(deg.select(col("sp").as("s2"), col("d").as("d2")), "s2")
+        .join(deg.select(col("s").as("s1"), col("d").as("d1")), "s1")
+        .join(deg.select(col("s").as("s2"), col("d").as("d2")), "s2")
         .select(col("s1"), col("s2"), col("common"),
           (col("d1") + col("d2") - col("common")).as("union_size"))
         .withColumn("jaccard_micro",
           expr("common * 1000000L div union_size"))
-      val result = scored
-        .orderBy(col("jaccard_micro").desc, col("s1"), col("s2"))
-        .limit(20)
-        .agg(sort_array(collect_list(struct(
-          (-col("jaccard_micro")).as("negj"), col("s1"), col("s2"),
-          col("common"), col("union_size")))).as("ts"))
-        .select(posexplode(col("ts")))
-        .select((col("pos") + 1).cast("long").as("rank"),
-          col("col.s1").as("s1"), col("col.s2").as("s2"),
-          col("col.common").as("common"),
-          col("col.union_size").as("union_size"),
-          (-col("col.negj")).as("jaccard_micro"))
+      val result = topK(scored, 20, Seq("jaccard_micro"), Seq("s1", "s2"),
+          Seq("common", "union_size"))
+        .select(col("rank"), col("s1"), col("s2"), col("common"),
+          col("union_size"), col("jaccard_micro"))
         .orderBy(col("rank"))
       QueryScopedCache.releaseAfter(result, Seq(ce))
     },
-    Some("""
+    Some(s"""
       WITH ce AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        ${tradingEdgesSql(namespaced = false, sAs = "sp")}),
       deg AS (SELECT sp, CAST(COUNT(*) AS BIGINT) AS d
               FROM ce GROUP BY sp),
       pairs AS (
@@ -806,13 +760,7 @@ object GraphQueries {
   val qGraphAssortativity = Q(
     "q_graph_assortativity",
     (s, dir) => {
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
+      val eo = tradingEdges(s, dir, namespaced = false)
       val degc = eo.groupBy(col("c")).agg(count(lit(1)).as("dc"))
       val degs = eo.groupBy(col("s")).agg(count(lit(1)).as("ds"))
       val agg = eo.join(degc, Seq("c")).join(degs, Seq("s"))
@@ -831,10 +779,9 @@ object GraphQueries {
             sqrt(col("syy").cast("double") / md - my * my)), 6)
           .as("assortativity"))
     },
-    Some("""
+    Some(s"""
       WITH eo AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        ${tradingEdgesSql(namespaced = false)}),
       degc AS (SELECT c, COUNT(*) AS dc FROM eo GROUP BY c),
       degs AS (SELECT s, COUNT(*) AS ds FROM eo GROUP BY s),
       agg AS (
@@ -875,64 +822,55 @@ object GraphQueries {
     * Scale shape: each round is one degree aggregation keyed on the
     * node + two node-keyed LEFT SEMI joins back onto the edge list —
     * never an explode beyond the 2-direction degree scan; the
-    * threshold is a one-row broadcast; per-round edge frames persist
-    * and release with the result action (QueryScopedCache). Output:
-    * one bounded row per round (surviving nodes / induced edges). */
+    * threshold is a one-row broadcast; each round's surviving edge
+    * list is an [[iterate]] step and its surviving node set a flat
+    * leaf too, and the census frames persist and release with the
+    * result action (QueryScopedCache). Output: one bounded row per
+    * round (surviving nodes / induced edges). */
   val qGraphKcore = Q(
     "q_graph_kcore",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val und = partCoEdges(s, dir).persist(MEMORY_AND_DISK)
       // the round-1 degree table doubles as the graph census: one row
       // per node (nn = its count) and Σd = 2m — so k derives from it
       // directly, with no separate edge-count or node-distinct pass
       // (the first draft ran both, ~2 extra corpus passes at sf0.1)
-      val deg1 = und.select(explode(array(col("a"), col("b"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        .persist(MEMORY_AND_DISK)
+      val deg1 = degrees(und).persist(MEMORY_AND_DISK)
       // persisted: kdf is referenced by all four rounds' filters plus
       // the final projection; unpersisted, each evaluation re-runs
       // its aggregation
       val kdf = deg1.agg(count(lit(1)).as("nn"), sum(col("d")).as("m2"))
         .select(expr("CAST((m2 + nn - 1) DIV nn AS BIGINT)").as("k"))
         .persist(MEMORY_AND_DISK)
-      var edges = und
-      val handles = List[org.apache.spark.sql.DataFrame](und, deg1, kdf)
-      val rounds = (1 to 4).map { r =>
-        val deg = if (r == 1) deg1
-        else edges.select(explode(array(col("a"), col("b"))).as("n"))
-          .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        // keep and next are lineage-truncated via EAGER
-        // localCheckpoint (the BFS/pagerank discipline): with plain
-        // persist the round-r plan nests every prior round, and the
-        // whole query spent ~20 of 32 s in DRIVER-SIDE re-analysis —
-        // the 50-job listener profile summed only 12 s of cluster
-        // time. Flat LogicalRDD leaves make each round's plan
-        // edges-leaf ⋈ keep-leaf; analysis cost scales with ROUNDS.
-        // The semi joins stay on the shuffle path (A/B'd: explicit
-        // broadcast of the node set read 18.9–22.7 s vs 16.3 s
-        // shuffled — per-round driver broadcast construction cost
-        // more than the edge exchanges it saved at this scale).
-        val keep = deg.crossJoin(broadcast(kdf))
-          .filter(col("d") >= col("k")).select(col("n"))
-          .localCheckpoint(true)
-        val next = edges
-          .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-          .localCheckpoint(true)
-        val row = keep.agg(count(lit(1)).as("n_nodes"))
+      // Each round's row counts its flat surviving-node leaf `keep` and
+      // its materialized edge list, read in the after-step hook. The
+      // semi joins stay on the shuffle path (A/B'd: explicit broadcast
+      // of the node set read 18.9–22.7 s vs 16.3 s shuffled — per-round
+      // driver broadcast construction cost more than the edge
+      // exchanges it saved at this scale).
+      var keep: DataFrame = null
+      val rounds = Seq.newBuilder[DataFrame]
+      iterate(und, 4, until = (_, next, r) => {
+        rounds += keep.agg(count(lit(1)).as("n_nodes"))
           .crossJoin(next.agg(count(lit(1)).as("n_edges")))
           .select(lit(r.toLong).as("round"), col("n_nodes"),
             col("n_edges"))
-        edges = next
-        row
+        false
+      }) { (edges, r) =>
+        keep = (if (r == 1) deg1 else degrees(edges))
+          .crossJoin(broadcast(kdf))
+          .filter(col("d") >= col("k")).select(col("n"))
+          .localCheckpoint(true)
+        edges
+          .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
+          .select(col("a"), col("b"))
       }
-      val result = rounds.reduce(_.unionByName(_))
+      val result = rounds.result().reduce(_.unionByName(_))
         .crossJoin(broadcast(kdf))
         .select(col("round"), col("k"), col("n_nodes"), col("n_edges"))
         .orderBy(col("round"))
-      QueryScopedCache.releaseAfter(result, handles)
+      QueryScopedCache.releaseAfter(result, Seq(und, deg1, kdf))
     },
     Some {
       // every CTE is MATERIALIZED and the induced-subgraph filter is a
@@ -969,14 +907,19 @@ object GraphQueries {
       ORDER BY round"""
     })
 
+  /** Label-propagation input: the part co-occurrence edges both ways,
+    * as a flat leaf — every sweep joins it, and un-cut each would
+    * re-run the co-occurrence self-join. */
+  private def lpEdges(und: DataFrame): DataFrame =
+    doubled(und, "a", "b").localCheckpoint(true)
+
   /** `rounds` sweeps of argmax label propagation over a directed edge
     * list (src, dst): every node adopts its neighbors' plurality
     * label, ties to the smallest label (a total order, so every sweep
-    * is deterministic and cross-engine replayable). Each round's
-    * label table eager-localCheckpoints — the sweep output feeds the
-    * next round's join AND any downstream consumer, and flat leaves
-    * keep plan analysis linear in rounds (the [[bfsHistogram]]
-    * discipline). Shared by [[qGraphLabelProp]] and
+    * is deterministic and cross-engine replayable). Each sweep is an
+    * [[iterate]] step — the label table feeds the next round's join
+    * AND any downstream consumer, and flat leaves keep plan analysis
+    * linear in rounds. Shared by [[qGraphLabelProp]] and
     * [[qGraphModularity]]. */
   private def lpLabels(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"lpLabels needs >= 1 round, got $rounds")
@@ -991,24 +934,47 @@ object GraphQueries {
       .groupBy(col("src"))
       .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("t"))
       .select(col("src").as("node"), (-col("t.nl")).as("label"))
-      .localCheckpoint(true)
     // Sweep 1 against the IDENTITY labeling (every node its own label)
     // needs no label join and no distinct-node scan: label(dst) = dst,
     // so the neighbor-label counts are just the edge multiset grouped
     // by (src, dst). Identical result; one exchange+distinct and one
-    // join cheaper than materializing l0 and joining it.
-    var labels = argmax(
-      edges.groupBy(col("src"), col("dst").as("label"))
-        .agg(count(lit(1)).as("n")))
-    for (_ <- 2 to rounds) {
-      labels = argmax(
-        edges
+    // join cheaper than materializing l0 and joining it — so the
+    // loop's initial identity frame is never evaluated.
+    val identity = edges.select(col("src").as("node"), col("src").as("label"))
+    iterate(identity, rounds) { (labels, r) =>
+      argmax(
+        if (r == 1) edges.groupBy(col("src"), col("dst").as("label"))
+          .agg(count(lit(1)).as("n"))
+        else edges
           .join(labels.select(col("node").as("dst"), col("label")),
             Seq("dst"))
           .groupBy(col("src"), col("label"))
           .agg(count(lit(1)).as("n")))
-    }
-    labels
+    }._1
+  }
+
+  /** [[lpLabels]]' oracle-side mirror at two sweeps: the CTEs `und`,
+    * `edges` and the label tables `l0` … `l2`. */
+  private val lp2Sql: String = {
+    def sweep(i: Int): String = s"""
+      c$i AS MATERIALIZED (
+        SELECT e.src, l.label, COUNT(*) AS n
+        FROM edges e JOIN l${i - 1} l ON l.node = e.dst
+        GROUP BY e.src, l.label),
+      l$i AS MATERIALIZED (
+        SELECT src AS node, label FROM (
+          SELECT src, label,
+                 ROW_NUMBER() OVER (PARTITION BY src
+                   ORDER BY n DESC, label) AS rk
+          FROM c$i) x WHERE rk = 1)"""
+    s"""
+      WITH und AS MATERIALIZED (
+        ${partCoEdgesSql}),
+      edges AS MATERIALIZED (
+        ${doubledSql("und", "a", "b")}),
+      l0 AS MATERIALIZED (
+        SELECT DISTINCT src AS node, src AS label FROM edges),""" +
+      (1 to 2).map(sweep).mkString(",")
   }
 
   /** Two-sweep label propagation (community detection) on the part
@@ -1016,54 +982,23 @@ object GraphQueries {
     * frequent label among its neighbors, ties to the smallest label
     * (the deterministic synchronous LPA variant; the async/random
     * variant is not gateable). Fixed two-sweep horizon for oracle
-    * parity, sweeps lineage-truncated via eager localCheckpoint (the
+    * parity, sweeps lineage-truncated by [[iterate]] (the
     * [[qGraphKcore]] lesson — nested sweep plans cost driver analysis
     * time, not cluster time). Output: the 20 largest label groups.
     *
     * Scale shape per sweep: one exchange of the (node, neighbor-label)
-    * pairs for the count aggregation, one node-partitioned window for
-    * the argmax — label state is one row per node, never a neighbor
-    * list. */
+    * pairs for the count aggregation, which the argmax reuses — a
+    * `max(struct(n, −label))` hash aggregation on the same node key,
+    * partially combined map-side; label state is one row per node,
+    * never a neighbor list. */
   val qGraphLabelProp = Q(
     "q_graph_label_prop",
-    (s, dir) => {
-      val und = partCoEdges(s, dir)
-      val edges = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint(true)
-      lpLabels(edges, 2)
+    (s, dir) =>
+      lpLabels(lpEdges(partCoEdges(s, dir)), 2)
         .groupBy(col("label")).agg(count(lit(1)).as("community_size"))
         .orderBy(col("community_size").desc, col("label"))
-        .limit(20)
-    },
-    Some(s"""
-      WITH und AS MATERIALIZED (
-        ${partCoEdgesSql}),
-      edges AS MATERIALIZED (
-        SELECT a AS src, b AS dst FROM und
-        UNION ALL SELECT b AS src, a AS dst FROM und),
-      l0 AS MATERIALIZED (
-        SELECT DISTINCT src AS node, src AS label FROM edges),
-      c1 AS MATERIALIZED (
-        SELECT e.src, l.label, COUNT(*) AS n
-        FROM edges e JOIN l0 l ON l.node = e.dst
-        GROUP BY e.src, l.label),
-      l1 AS MATERIALIZED (
-        SELECT src AS node, label FROM (
-          SELECT src, label,
-                 ROW_NUMBER() OVER (PARTITION BY src
-                   ORDER BY n DESC, label) AS rk
-          FROM c1) x WHERE rk = 1),
-      c2 AS MATERIALIZED (
-        SELECT e.src, l.label, COUNT(*) AS n
-        FROM edges e JOIN l1 l ON l.node = e.dst
-        GROUP BY e.src, l.label),
-      l2 AS MATERIALIZED (
-        SELECT src AS node, label FROM (
-          SELECT src, label,
-                 ROW_NUMBER() OVER (PARTITION BY src
-                   ORDER BY n DESC, label) AS rk
-          FROM c2) x WHERE rk = 1)
+        .limit(20),
+    Some(s"""$lp2Sql
       SELECT label, COUNT(*) AS community_size
       FROM l2 GROUP BY label
       ORDER BY community_size DESC, label LIMIT 20"""))
@@ -1077,14 +1012,12 @@ object GraphQueries {
     * and this is that operator for k seeds at once).
     *
     * The joint traversal carries (seed, node) state through ONE
-    * shared frontier iteration — the [[qGraphBfs]] machinery with a
-    * seed column: the edge relation still shuffles once for the whole
+    * shared frontier iteration — the [[bfs]] kernel with a seed key
+    * column: the edge relation still shuffles once for the whole
     * traversal (partitioned-by-src persist), each level is one
-    * frontier join + anti-join + distinct keyed the same way, and
-    * per-level lineage truncates via eager localCheckpoint (the
-    * plan-doubling fix). k seeds multiply only the frontier rows,
-    * never the edge passes — the reason landmark batching beats k
-    * separate traversals.
+    * frontier join + anti-join + distinct keyed the same way. k seeds
+    * multiply only the frontier rows, never the edge passes — the
+    * reason landmark batching beats k separate traversals.
     *
     * Centrality arithmetic is all-integer: harmonic_micro sums
     * `1000000 DIV d` (exact truncated reciprocals), closeness_micro
@@ -1093,40 +1026,13 @@ object GraphQueries {
   val qGraphCloseness = Q(
     "q_graph_closeness",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val o = Tables(s, dir, "orders")
-        .filter(col("o_custkey") < 500)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"))
-        .distinct()
-      val edges = eo.select(col("c").as("src"), col("s").as("dst"))
-        .union(eo.select(col("s").as("src"), col("c").as("dst")))
-        .repartition(col("src"))
-        .persist(MEMORY_AND_DISK)
+      val edges = traversalEdges(tradingEdges(s, dir, subgraph = true))
       // 4 lowest-id customer nodes (even ids): TakeOrdered, bounded
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 2 === 0)
         .orderBy(col("node")).limit(4)
-        .select(col("node").as("seed"))
-      var visited = seeds.select(col("seed"), col("seed").as("node"),
-          lit(0L).as("dist"))
-        .localCheckpoint(true)
-      var frontier = visited
-      for (d <- 1 to 4) {
-        val next = edges
-          .join(frontier, edges("src") === frontier("node"))
-          .select(frontier("seed"), edges("dst").as("node"))
-          .join(visited, Seq("seed", "node"), "left_anti")
-          .distinct()
-          .select(col("seed"), col("node"), lit(d.toLong).as("dist"))
-          .localCheckpoint(true)
-        visited = visited.union(next)
-        frontier = next
-      }
+        .select(col("node").as("seed"), col("node"))
+      val (visited, _) = bfs(edges, seeds, Seq("seed"), 4)
       val result = visited.filter(col("dist") >= 1)
         .groupBy(col("seed"))
         .agg(count(lit(1)).as("n_reached"),
@@ -1138,15 +1044,11 @@ object GraphQueries {
         .orderBy(col("seed"))
       QueryScopedCache.releaseAfter(result, Seq(edges))
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE eo AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE o_custkey < 500),
+        ${tradingEdgesSql(subgraph = true)}),
       edges AS (
-        SELECT c AS src, s AS dst FROM eo
-        UNION ALL
-        SELECT s AS src, c AS dst FROM eo),
+        ${doubledSql("eo", "c", "s")}),
       seeds AS (
         SELECT src AS seed FROM (
           SELECT DISTINCT src FROM edges WHERE src % 2 = 0)
@@ -1194,12 +1096,8 @@ object GraphQueries {
   val qGraphModularity = Q(
     "q_graph_modularity",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val und = partCoEdges(s, dir).persist(MEMORY_AND_DISK)
-      val edges = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint(true)
-      val labels = lpLabels(edges, 2)
+      val labels = lpLabels(lpEdges(und), 2)
       val mrow = und.agg(count(lit(1)).as("m"))
       val sizes = labels.groupBy(col("label"))
         .agg(count(lit(1)).as("community_size"))
@@ -1250,34 +1148,7 @@ object GraphQueries {
         .orderBy(col("community_size").desc, col("label"))
       QueryScopedCache.releaseAfter(result, Seq(und, lab, contrib))
     },
-    Some(s"""
-      WITH und AS MATERIALIZED (
-        ${partCoEdgesSql}),
-      edges AS MATERIALIZED (
-        SELECT a AS src, b AS dst FROM und
-        UNION ALL SELECT b AS src, a AS dst FROM und),
-      l0 AS MATERIALIZED (
-        SELECT DISTINCT src AS node, src AS label FROM edges),
-      c1 AS MATERIALIZED (
-        SELECT e.src, l.label, COUNT(*) AS n
-        FROM edges e JOIN l0 l ON l.node = e.dst
-        GROUP BY e.src, l.label),
-      l1 AS MATERIALIZED (
-        SELECT src AS node, label FROM (
-          SELECT src, label,
-                 ROW_NUMBER() OVER (PARTITION BY src
-                   ORDER BY n DESC, label) AS rk
-          FROM c1) x WHERE rk = 1),
-      c2 AS MATERIALIZED (
-        SELECT e.src, l.label, COUNT(*) AS n
-        FROM edges e JOIN l1 l ON l.node = e.dst
-        GROUP BY e.src, l.label),
-      l2 AS MATERIALIZED (
-        SELECT src AS node, label FROM (
-          SELECT src, label,
-                 ROW_NUMBER() OVER (PARTITION BY src
-                   ORDER BY n DESC, label) AS rk
-          FROM c2) x WHERE rk = 1),
+    Some(s"""$lp2Sql,
       m AS (SELECT COUNT(*) AS m FROM und),
       sizes AS (SELECT label, COUNT(*) AS community_size
                 FROM l2 GROUP BY label),
@@ -1325,36 +1196,22 @@ object GraphQueries {
     * embeddings; this query is the distributed corpus-builder stage.
     *
     * Scale shape: the edge relation partitions by src once and
-    * persists ([[bfsHistogram]] discipline); each of the 4 steps is
-    * one frontier join on that same keying plus one seed-partitioned
-    * argmin window (never global), with the frontier
-    * eager-localCheckpointed per step so plans stay flat. Walk count
-    * scales with seed nodes, walk state is one row per seed. */
+    * persists ([[traversalEdges]]); each of the 4 steps is one
+    * frontier join on that same keying plus one seed-partitioned
+    * argmin window (never global), each step an [[iterate]] step so
+    * plans stay flat. Walk count scales with seed nodes, walk state is
+    * one row per seed. */
   val qGraphWalks = Q(
     "q_graph_walks",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val o = Tables(s, dir, "orders")
-        .filter(col("o_custkey") < 500)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val eo = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"))
-        .distinct()
-      val edges = eo.select(col("c").as("src"), col("s").as("dst"))
-        .union(eo.select(col("s").as("src"), col("c").as("dst")))
-        .repartition(col("src"))
-        .persist(MEMORY_AND_DISK)
+      val edges = traversalEdges(tradingEdges(s, dir, subgraph = true))
       val wS = Window.partitionBy(col("seed"))
-      var walk = edges.select(col("src").as("seed")).distinct()
+      val seeds = edges.select(col("src").as("seed")).distinct()
         .filter(col("seed") % 2 === 0)
         .withColumn("cur", col("seed"))
-        .localCheckpoint(true)
-      for (t <- 1 to 4) {
-        walk = walk
+      val (walk, _) = iterate(seeds, 4) { (walk, t) =>
+        walk
           .join(edges, col("cur") === col("src"))
           .withColumn("h",
             md5(concat_ws("-", col("cur"), lit(t), col("dst"))))
@@ -1364,54 +1221,37 @@ object GraphQueries {
           .drop("src", "h", "rk", "cur")
           .withColumnRenamed("dst", s"n$t")
           .withColumn("cur", col(s"n$t"))
-          .localCheckpoint(true)
       }
       val result = walk.select(col("seed"), col("n1"), col("n2"),
           col("n3"), col("n4"))
         .orderBy(col("seed"))
       QueryScopedCache.releaseAfter(result, Seq(edges))
     },
-    Some("""
+    Some {
+      def step(t: Int): String = {
+        val ns = (1 until t).map(i => s"n$i")
+        val cur = if (t == 1) "cur" else s"n${t - 1}"
+        val from = if (t == 1) "w0" else s"s${t - 1}"
+        s"""
+      s$t AS (
+        SELECT ${("seed" +: ns).mkString(", ")}, dst AS n$t FROM (
+          SELECT ${("w.seed" +: ns.map("w." + _)).mkString(", ")}, e.dst,
+                 ROW_NUMBER() OVER (PARTITION BY w.seed
+                   ORDER BY md5(concat_ws('-', w.$cur, $t, e.dst)), e.dst)
+                   AS rk
+          FROM $from w JOIN edges e ON e.src = w.$cur) x WHERE rk = 1)"""
+      }
+      s"""
       WITH eo AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE o_custkey < 500),
+        ${tradingEdgesSql(subgraph = true)}),
       edges AS (
-        SELECT c AS src, s AS dst FROM eo
-        UNION ALL
-        SELECT s AS src, c AS dst FROM eo),
+        ${doubledSql("eo", "c", "s")}),
       w0 AS (
         SELECT src AS seed, src AS cur FROM (
           SELECT DISTINCT src FROM edges WHERE src % 2 = 0)),
-      s1 AS (
-        SELECT seed, dst AS n1 FROM (
-          SELECT w.seed, e.dst,
-                 ROW_NUMBER() OVER (PARTITION BY w.seed
-                   ORDER BY md5(concat_ws('-', w.cur, 1, e.dst)), e.dst)
-                   AS rk
-          FROM w0 w JOIN edges e ON e.src = w.cur) x WHERE rk = 1),
-      s2 AS (
-        SELECT seed, n1, dst AS n2 FROM (
-          SELECT w.seed, w.n1, e.dst,
-                 ROW_NUMBER() OVER (PARTITION BY w.seed
-                   ORDER BY md5(concat_ws('-', w.n1, 2, e.dst)), e.dst)
-                   AS rk
-          FROM s1 w JOIN edges e ON e.src = w.n1) x WHERE rk = 1),
-      s3 AS (
-        SELECT seed, n1, n2, dst AS n3 FROM (
-          SELECT w.seed, w.n1, w.n2, e.dst,
-                 ROW_NUMBER() OVER (PARTITION BY w.seed
-                   ORDER BY md5(concat_ws('-', w.n2, 3, e.dst)), e.dst)
-                   AS rk
-          FROM s2 w JOIN edges e ON e.src = w.n2) x WHERE rk = 1),
-      s4 AS (
-        SELECT seed, n1, n2, n3, dst AS n4 FROM (
-          SELECT w.seed, w.n1, w.n2, w.n3, e.dst,
-                 ROW_NUMBER() OVER (PARTITION BY w.seed
-                   ORDER BY md5(concat_ws('-', w.n3, 4, e.dst)), e.dst)
-                   AS rk
-          FROM s3 w JOIN edges e ON e.src = w.n3) x WHERE rk = 1)
-      SELECT seed, n1, n2, n3, n4 FROM s4 ORDER BY seed"""))
+      ${(1 to 4).map(step).mkString(",")}
+      SELECT seed, n1, n2, n3, n4 FROM s4 ORDER BY seed"""
+    })
 
   /** Weighted single-source shortest paths (bounded Bellman–Ford) —
     * [[qGraphBfs]] counts HOPS; this weights each customer↔supplier
@@ -1426,49 +1266,42 @@ object GraphQueries {
     * probe asserts the fixture CONVERGES inside it (round 4 changes
     * nothing). All BIGINT: weights, path costs, min-plus.
     *
-    * Scale shape: one distinct co-order rollup builds the weighted
-    * edge list (persisted, both directions); each relaxation is one
-    * node-keyed join+aggregate over the distance frame — the BFS
-    * cost envelope with a cost column along for the ride. Output:
-    * the 25 cheapest reachable nodes (deterministic tiebreak). */
+    * Scale shape: one co-order rollup builds the weighted edge list
+    * (persisted, both directions via [[doubled]]); each relaxation is
+    * one node-keyed join+aggregate over the distance frame, an
+    * [[iterate]] step — the BFS cost envelope with a cost column along
+    * for the ride. Output: the 25 cheapest reachable nodes
+    * (deterministic tiebreak). */
   val qGraphSssp = Q(
     "q_graph_sssp",
     (s, dir) => {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val o = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val co = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy((col("o_custkey") * 2).as("c"),
-          (col("l_suppkey") * 2 + 1).as("s"))
-        .agg(count(lit(1)).as("n_co"))
-      val ed = co.select(col("c").as("src"), col("s").as("dst"),
-          expr("1000000 DIV n_co").as("w"))
-        .unionByName(co.select(col("s").as("src"), col("c").as("dst"),
-          expr("1000000 DIV n_co").as("w")))
-        .persist(MEMORY_AND_DISK)
-      var dist = ed.sparkSession.range(1)
-        .select(lit(2L).as("node"), lit(0L).as("cost"))
-      for (_ <- 1 to 4) {
-        dist = dist
-          .join(ed, col("node") === col("src"))
-          .select(col("dst").as("node"), (col("cost") + col("w"))
-            .as("cost"))
-          .unionByName(dist.select(col("node"), col("cost")))
-          .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-          .localCheckpoint()
+      val co = tradingEdges(s, dir, coCounts = true)
+        .withColumn("w", expr("1000000 DIV n_co"))
+      val ed = doubled(co, "c", "s", "w").persist(MEMORY_AND_DISK)
+      val (dist, _) = iterate(
+          s.range(1).select(lit(2L).as("node"), lit(0L).as("cost")), 4) {
+        (dist, _) =>
+          dist
+            .join(ed, col("node") === col("src"))
+            .select(col("dst").as("node"), (col("cost") + col("w"))
+              .as("cost"))
+            .unionByName(dist.select(col("node"), col("cost")))
+            .groupBy(col("node")).agg(min(col("cost")).as("cost"))
       }
-      val res = dist.orderBy(col("cost"), col("node")).limit(25)
-        .agg(sort_array(collect_list(struct(col("cost"), col("node"))))
-          .as("ts"))
-        .select(posexplode(col("ts")))
-        .select((col("pos") + 1).cast("long").as("rank"),
-          col("col.node").as("node"), col("col.cost").as("cost"))
+      val res = topK(dist, 25, Nil, Seq("cost", "node"))
+        .select(col("rank"), col("node"), col("cost"))
         .orderBy(col("rank"))
-      graft.analytics.QueryScopedCache.releaseAfter(res, Seq(ed))
+      QueryScopedCache.releaseAfter(res, Seq(ed))
     },
-    Some("""
+    Some {
+      def relax(i: Int): String = s"""
+      d$i AS (
+        SELECT node, MIN(cost) AS cost FROM (
+          SELECT e.dst AS node, d.cost + e.w AS cost
+          FROM d${i - 1} d JOIN ed e ON e.src = d.node
+          UNION ALL SELECT node, cost FROM d${i - 1}) u
+        GROUP BY node)"""
+      s"""
       WITH co AS (
         SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
                COUNT(*) AS n_co
@@ -1481,37 +1314,15 @@ object GraphQueries {
         SELECT s, c, CAST(1000000 // n_co AS BIGINT) FROM co),
       d0 AS (SELECT CAST(2 AS BIGINT) AS node, CAST(0 AS BIGINT)
                AS cost),
-      d1 AS (
-        SELECT node, MIN(cost) AS cost FROM (
-          SELECT e.dst AS node, d.cost + e.w AS cost
-          FROM d0 d JOIN ed e ON e.src = d.node
-          UNION ALL SELECT node, cost FROM d0) u
-        GROUP BY node),
-      d2 AS (
-        SELECT node, MIN(cost) AS cost FROM (
-          SELECT e.dst AS node, d.cost + e.w AS cost
-          FROM d1 d JOIN ed e ON e.src = d.node
-          UNION ALL SELECT node, cost FROM d1) u
-        GROUP BY node),
-      d3 AS (
-        SELECT node, MIN(cost) AS cost FROM (
-          SELECT e.dst AS node, d.cost + e.w AS cost
-          FROM d2 d JOIN ed e ON e.src = d.node
-          UNION ALL SELECT node, cost FROM d2) u
-        GROUP BY node),
-      d4 AS (
-        SELECT node, MIN(cost) AS cost FROM (
-          SELECT e.dst AS node, d.cost + e.w AS cost
-          FROM d3 d JOIN ed e ON e.src = d.node
-          UNION ALL SELECT node, cost FROM d3) u
-        GROUP BY node),
+      ${(1 to 4).map(relax).mkString(",")},
       top AS (
         SELECT node, cost,
                ROW_NUMBER() OVER (ORDER BY cost, node) AS rank
         FROM d4)
       SELECT CAST(rank AS BIGINT) AS rank, node, cost
       FROM top WHERE rank <= 25
-      ORDER BY rank"""))
+      ORDER BY rank"""
+    })
 
   val all: Seq[Q] =
     Seq(qGraphPagerank, qGraphPpr, qGraphHits, qGraphTriangles, qGraphBfs,

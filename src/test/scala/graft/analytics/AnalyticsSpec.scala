@@ -2026,6 +2026,72 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
     assert(cut === Map(-1L -> 3L, 0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
+  test("bfs kernel: hop distances equal a driver-side BFS on random graphs") {
+    // driver-side reference: level-synchronous BFS over an adjacency map
+    def hops(adj: Map[Long, Seq[Long]], src: Long): Map[Long, Int] = {
+      var dist = Map(src -> 0)
+      var frontier = Seq(src)
+      var d = 0
+      while (frontier.nonEmpty) {
+        d += 1
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        dist ++= frontier.map(_ -> d)
+      }
+      dist
+    }
+    for (seed <- Seq(3L, 17L, 41L)) {
+      val rnd = new scala.util.Random(seed)
+      // sparse bipartite graph: 12 customers (even ids), 8 suppliers (odd)
+      val eo = Seq.fill(16)((rnd.nextInt(12) * 2L, rnd.nextInt(8) * 2L + 1))
+        .distinct
+      val adj = (eo ++ eo.map(_.swap)).groupMap(_._1)(_._2)
+      val edges = (eo ++ eo.map(_.swap)).toDF("src", "dst")
+      val src = adj.keys.min
+      val ref = hops(adj, src)
+      val ecc = ref.values.max
+      for (maxHops <- Seq(2, 10)) {
+        val (visited, levels) = GraphQueries.bfs(edges,
+          Seq(src).toDF("node"), Nil, maxHops)
+        val got = visited.collect()
+          .map(r => r.getAs[Long]("node") -> r.getAs[Long]("dist").toInt).toMap
+        assert(got === ref.filter(_._2 <= maxHops),
+          s"graph seed $seed, maxHops $maxHops")
+        assert(levels === math.min(ecc, maxHops),
+          s"graph seed $seed, maxHops $maxHops: ecc $ecc, ran $levels")
+      }
+      // keyed: three sources traverse jointly, each its own BFS
+      val sources = adj.keys.toSeq.sorted.take(3)
+      val (visited, levels) = GraphQueries.bfs(edges,
+        sources.map(n => (n, n)).toDF("seed", "node"), Seq("seed"), 10)
+      val got = visited.collect().map(r => (r.getAs[Long]("seed"),
+        r.getAs[Long]("node")) -> r.getAs[Long]("dist").toInt).toMap
+      val refs = sources.map(s => s -> hops(adj, s))
+      assert(got === refs.flatMap { case (s, m) =>
+        m.map { case (n, d) => (s, n) -> d } }.toMap, s"graph seed $seed")
+      assert(levels === refs.map(_._2.values.max).max, s"graph seed $seed")
+    }
+  }
+
+  test("iterate: checkpointed steps keep the plan flat") {
+    val init = spark.range(5).toDF("x")
+    def run(n: Int) = GraphQueries.iterate(init, n) { (df, _) =>
+      df.select(($"x" + 1).as("x"))
+    }
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    val (one, _) = run(1)
+    val (twelve, steps) = run(12)
+    assert(steps === 12)
+    assert(twelve.as[Long].collect().sorted.toSeq === (12L to 16L))
+    assert(nodes(twelve) === nodes(one),
+      s"12-step plan:\n${twelve.queryExecution.analyzed}")
+    // the stop test sees each materialized step and ends the loop
+    val (_, stopped) = GraphQueries.iterate(init, 12,
+      until = (_, _, i) => i == 3)((df, _) => df)
+    assert(stopped === 3)
+  }
+
   test("kmeansTrainUntilConverged matches the fixed-horizon training") {
     def centsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] = {
       val row = df.head()

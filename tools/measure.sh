@@ -6,9 +6,14 @@
 # has no dependency on it.
 #
 # Usage: tools/measure.sh <outDir> <q1,q2,...> [reps] [cores] [sfDir]
+# CLASSES (default: this checkout's target/scala-2.13/classes) and
+# DRIVER_MEM (default 32g) override the class path and driver heap, so the
+# same script can time another checkout's build on a smaller host.
 set -e
 OUT="$1"; NAMES="$2"; REPS="${3:-3}"; CORES="${4:-32}"
 SFDIR="${5:-/root/testdata/sf0.1}"
+CLASSES="${CLASSES:-$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes}"
+DRIVER_MEM="${DRIVER_MEM:-32g}"
 mkdir -p "$OUT"
 cat > "$OUT/_measure.scala" <<EOF
 val names = "$NAMES".split(",").toSeq
@@ -38,8 +43,8 @@ EOF
 # EXTRA_CONFS: optional space-separated --conf k=v pairs for config A/Bs
 (cat "$OUT/_measure.scala"; echo :quit) | /opt/spark/bin/spark-shell \
   --master "local[$CORES]" \
-  --driver-class-path /root/repo/target/scala-2.13/classes \
-  --driver-memory 32g \
+  --driver-class-path "$CLASSES" \
+  --driver-memory "$DRIVER_MEM" \
   --conf spark.sql.shuffle.partitions="$CORES" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.session.timeZone=UTC \

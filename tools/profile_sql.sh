@@ -7,7 +7,12 @@
 # Usage: tools/profile_sql.sh <query> [cores] [sfDir]
 set -e
 NAME="$1"; CORES="${2:-32}"; SFDIR="${3:-/root/testdata/sf0.1}"
-cat > /tmp/_profile_sql.scala <<EOF
+# CLASSES and DRIVER_MEM as in tools/measure.sh; the probe script goes to
+# $TMPDIR (default /tmp).
+CLASSES="${CLASSES:-$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes}"
+DRIVER_MEM="${DRIVER_MEM:-32g}"
+SCRIPT="${TMPDIR:-/tmp}/_profile_sql.scala"
+cat > "$SCRIPT" <<EOF
 val n = "$NAME"
 val fn = graft.SparkEntry.queries(n)
 try { fn(spark, "/root/testdata/sf0.001").count() } catch { case _: Throwable => () }
@@ -35,10 +40,10 @@ store.executionsList().filterNot(e => before(e.executionId)).foreach { e =>
   }
 }
 EOF
-(cat /tmp/_profile_sql.scala; echo :quit) | /opt/spark/bin/spark-shell \
+(cat "$SCRIPT"; echo :quit) | /opt/spark/bin/spark-shell \
   --master "local[$CORES]" \
-  --driver-class-path /root/repo/target/scala-2.13/classes \
-  --driver-memory 32g \
+  --driver-class-path "$CLASSES" \
+  --driver-memory "$DRIVER_MEM" \
   --conf spark.sql.shuffle.partitions="$CORES" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.session.timeZone=UTC \
