@@ -914,9 +914,10 @@ object GraphQueries {
     doubled(und, "a", "b").localCheckpoint(true)
 
   /** `rounds` sweeps of argmax label propagation over a directed edge
-    * list (src, dst): every node adopts its neighbors' plurality
-    * label, ties to the smallest label (a total order, so every sweep
-    * is deterministic and cross-engine replayable). Each sweep is an
+    * list (src, dst) that holds each pair at most once: every node
+    * adopts its neighbors' plurality label, ties to the smallest label
+    * (a total order, so every sweep is deterministic and cross-engine
+    * replayable). Each sweep is an
     * [[iterate]] step — the label table feeds the next round's join
     * AND any downstream consumer, and flat leaves keep plan analysis
     * linear in rounds. Shared by [[qGraphLabelProp]] and
@@ -935,21 +936,19 @@ object GraphQueries {
       .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("t"))
       .select(col("src").as("node"), (-col("t.nl")).as("label"))
     // Sweep 1 against the IDENTITY labeling (every node its own label)
-    // needs no label join and no distinct-node scan: label(dst) = dst,
-    // so the neighbor-label counts are just the edge multiset grouped
-    // by (src, dst). Identical result; one exchange+distinct and one
-    // join cheaper than materializing l0 and joining it — so the
-    // loop's initial identity frame is never evaluated.
+    // needs no label join, no distinct-node scan and no count:
+    // label(dst) = dst, and each (src, dst) pair occurs once, so every
+    // neighbor label counts 1 and the tie rule picks min(dst) — one
+    // src-keyed aggregation. The loop's initial identity frame is
+    // never evaluated.
     val identity = edges.select(col("src").as("node"), col("src").as("label"))
     iterate(identity, rounds) { (labels, r) =>
-      argmax(
-        if (r == 1) edges.groupBy(col("src"), col("dst").as("label"))
-          .agg(count(lit(1)).as("n"))
-        else edges
-          .join(labels.select(col("node").as("dst"), col("label")),
-            Seq("dst"))
-          .groupBy(col("src"), col("label"))
-          .agg(count(lit(1)).as("n")))
+      if (r == 1)
+        edges.groupBy(col("src").as("node")).agg(min(col("dst")).as("label"))
+      else argmax(edges
+        .join(labels.select(col("node").as("dst"), col("label")), Seq("dst"))
+        .groupBy(col("src"), col("label"))
+        .agg(count(lit(1)).as("n")))
     }._1
   }
 

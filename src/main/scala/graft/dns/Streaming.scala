@@ -3,6 +3,7 @@ package graft.dns
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -254,6 +255,20 @@ object Streaming {
     * recomputed re-sends that partition's datagrams; downstream
     * [[dedupRecords]] absorbs the duplicates.
     *
+    * Session: every micro-batch runs under the session that called
+    * `start` (the one `envelopes` belongs to), not under the per-query
+    * clone Structured Streaming hands to `foreachBatch`. The clone
+    * carries a fresh session id, jobs carry their session's artifact
+    * state, and the executor keeps one class loader per session id and
+    * caches generated classes per class loader, so under the clone each
+    * new query (each AvailableNow drain, each restart) compiles its whole
+    * plan again. Under the launching session a new query reuses the
+    * classes an earlier one compiled. The batch frame's plan (an RDD
+    * over the incremental execution) is unchanged: source, offsets and
+    * checkpoint are the query's own. The batch's writes therefore plan
+    * under the launching session's SQL conf as it is when the batch
+    * runs, and use its artifacts (added jars and files).
+    *
     * Layout note: this partitioned layout is INCOMPATIBLE with
     * dead-letter directories written by the pre-round-4 append-mode
     * sink (batch_id was a data column in flat files there); point a
@@ -265,7 +280,8 @@ object Streaming {
     envelopes.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (frame: DataFrame, batchId: Long) =>
+        val batch = ExprBridge.onSession(frame, envelopes.sparkSession)
         val sc = batch.sparkSession.sparkContext
         val quarantined = sc.longAccumulator
         val rejected = sc.longAccumulator

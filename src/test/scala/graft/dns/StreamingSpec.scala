@@ -1,6 +1,7 @@
 package graft.dns
 
 import graft.SparkTestBase
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -56,6 +57,43 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       synchronized(plans.exists(_.contains(path)))
   }
 
+  /** A loopback syslog collector: keeps every datagram it receives, as
+    * text, until closed (its daemon thread blocks in `receive` until
+    * then, so a slow query start cannot time it out). */
+  private final class Collector {
+    private val socket =
+      new DatagramSocket(0, java.net.InetAddress.getByName("127.0.0.1"))
+    private val received = mutable.ArrayBuffer[String]()
+    private val thread = new Thread(() => {
+      val buf = new Array[Byte](65535)
+      try while (true) {
+        val p = new DatagramPacket(buf, buf.length)
+        socket.receive(p)
+        received.synchronized {
+          received += new String(p.getData, 0, p.getLength,
+            StandardCharsets.UTF_8)
+        }
+      } catch { case _: Exception => () }
+    })
+    thread.setDaemon(true)
+    thread.start()
+
+    def port: Int = socket.getLocalPort
+
+    /** What arrived once `n` datagrams have (or 10 s passed), and clears
+      * it. */
+    def take(n: Int): List[String] = {
+      val deadline = System.currentTimeMillis() + 10000
+      while (received.synchronized(received.size) < n &&
+        System.currentTimeMillis() < deadline) Thread.sleep(100)
+      received.synchronized {
+        try received.toList finally received.clear()
+      }
+    }
+
+    def close(): Unit = socket.close()
+  }
+
   /** The parquet part files directly under `dir`. */
   private def parquetFiles(dir: String): Seq[String] = {
     val files = Files.list(java.nio.file.Path.of(dir))
@@ -105,27 +143,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val inDir = Files.createTempDirectory("stream_in").toString
     val dlDir = Files.createTempDirectory("stream_dl").toString
     val ckDir = Files.createTempDirectory("stream_ck").toString
-    // registered (and the session started) before the collector's
-    // receive timeout starts running
+    // registered before the query starts, so every query its batch
+    // runs reports to it
     val scans = new BatchScans
     spark.listenerManager.register(scans)
-    // loopback syslog collector
-    val socket = new DatagramSocket(0, java.net.InetAddress.getByName("127.0.0.1"))
-    socket.setSoTimeout(15000)
-    val received = mutable.ArrayBuffer[String]()
-    val collector = new Thread(() => {
-      val buf = new Array[Byte](65535)
-      try while (true) {
-        val p = new DatagramPacket(buf, buf.length)
-        socket.receive(p)
-        received.synchronized {
-          received += new String(p.getData, 0, p.getLength,
-            StandardCharsets.UTF_8)
-        }
-      } catch { case _: Exception => () }
-    })
-    collector.setDaemon(true)
-    collector.start()
+    val collector = new Collector
 
     Files.writeString(java.nio.file.Path.of(inDir, "batch0.json"),
       envelope("f0", b64(record("stream.example.")), b64("!!!bad???")) +
@@ -135,7 +157,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
           .replace("\"f2\"", "7"))
     val q = Streaming.start(
       Streaming.envelopesFromJsonFiles(spark, inDir),
-      "127.0.0.1", socket.getLocalPort, dlDir, ckDir,
+      "127.0.0.1", collector.port, dlDir, ckDir,
       Trigger.AvailableNow())
     q.awaitTermination(60000)
     // listener events arrive in order: the rejected write is the last
@@ -152,11 +174,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .collect { case f: FileSourceScanExec => f.metrics("numOutputRows").value }
     assert(read === Seq(3L), "the spool must be read once")
     // two valid records × (1 query + 1 reply) = 4 datagrams
-    val deadline = System.currentTimeMillis() + 10000
-    while (received.synchronized(received.size) < 4 &&
-      System.currentTimeMillis() < deadline) Thread.sleep(100)
-    socket.close()
-    val lines = received.synchronized(received.toList)
+    val lines = collector.take(4)
+    collector.close()
     assert(lines.size === 4, s"got: $lines")
     assert(lines.distinct.size === 4, s"duplicated datagrams: $lines")
     assert(lines.forall(_.startsWith("<30>Oct 15 14:03:07 vpc-s route53resolver:")))
@@ -234,6 +253,49 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.select("reason").as[String].head() === "json")
   }
 
+  test("a new query reuses the classes an earlier drain compiled") {
+    val inDir = Files.createTempDirectory("reuse_in").toString
+    Files.writeString(java.nio.file.Path.of(inDir, "r0.json"),
+      envelope("u0", b64(record("reuse.example.")), b64("{broken")) +
+        "\n" + envelope("u1", b64(record("again.example."))) +
+        "\n" + envelope("u2", b64(record("rejected.example.")))
+          .replace("\"u2\"", "9"))
+    val collector = new Collector
+    // one AvailableNow drain of the spool by a new query (fresh
+    // checkpoint and dead-letter dirs): (classes compiled, input rows,
+    // datagrams, quarantine rows, rejected rows)
+    def drain() = {
+      val dlDir = Files.createTempDirectory("reuse_dl").toString
+      val ckDir = Files.createTempDirectory("reuse_ck").toString
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = Streaming.start(Streaming.envelopesFromJsonFiles(spark, inDir),
+        "127.0.0.1", collector.port, dlDir, ckDir, Trigger.AvailableNow())
+      q.awaitTermination(60000)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+      // two clean records × (1 query + 1 reply) = 4 datagrams
+      (compiled, q.lastProgress.numInputRows, collector.take(4).sorted,
+        spark.read.parquet(s"$dlDir/quarantine")
+          .select("requestId", "record_idx", "reason")
+          .as[(String, Int, String)].collect().toSeq,
+        spark.read.parquet(s"$dlDir/rejected")
+          .select("requestId", "reject_reason")
+          .as[(String, String)].collect().toSeq)
+    }
+    val (_, rows1, lines1, quarantined1, rejected1) = drain()
+    val (compiled, rows2, lines2, quarantined2, rejected2) = drain()
+    collector.close()
+    assert(compiled === 0,
+      "the second drain's plan was compiled by the first; a new query " +
+        "must reuse those classes, not compile them again")
+    assert(rows1 === 3L && rows2 === 3L, "each drain reads the 3 envelopes")
+    assert(lines1.size === 4, s"got: $lines1")
+    assert(lines2 === lines1)
+    assert(quarantined1 === Seq(("u0", 1, "json")))
+    assert(quarantined2 === quarantined1)
+    assert(rejected1 === Seq(("9", "requestId_type")))
+    assert(rejected2 === rejected1)
+  }
+
   test("envelope source seam selects connectors by config") {
     // "files": the environment default — a streaming envelope frame
     val dir = Files.createTempDirectory("seam_in").toString
@@ -261,28 +323,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val inDir = Files.createTempDirectory("restart_in").toString
     val dlDir = Files.createTempDirectory("restart_dl").toString
     val ckDir = Files.createTempDirectory("restart_ck").toString
-    val socket =
-      new DatagramSocket(0, java.net.InetAddress.getByName("127.0.0.1"))
-    socket.setSoTimeout(15000)
-    val received = mutable.ArrayBuffer[String]()
-    val collector = new Thread(() => {
-      val buf = new Array[Byte](65535)
-      try while (true) {
-        val p = new DatagramPacket(buf, buf.length)
-        socket.receive(p)
-        received.synchronized {
-          received += new String(p.getData, 0, p.getLength,
-            StandardCharsets.UTF_8)
-        }
-      } catch { case _: Exception => () }
-    })
-    collector.setDaemon(true)
-    collector.start()
+    val collector = new Collector
 
     def runOnce(): Unit = {
       val q = Streaming.start(
         Streaming.envelopesFromJsonFiles(spark, inDir),
-        "127.0.0.1", socket.getLocalPort, dlDir, ckDir,
+        "127.0.0.1", collector.port, dlDir, ckDir,
         Trigger.AvailableNow())
       q.awaitTermination(60000)
     }
@@ -292,11 +338,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     Files.writeString(java.nio.file.Path.of(inDir, "b.json"),
       envelope("c1", b64(record("second.example."))))
     runOnce() // same checkpoint: must process ONLY the new file
-    val deadline = System.currentTimeMillis() + 10000
-    while (received.synchronized(received.size) < 4 &&
-      System.currentTimeMillis() < deadline) Thread.sleep(100)
-    socket.close()
-    val lines = received.synchronized(received.toList)
+    val lines = collector.take(4)
+    collector.close()
     assert(lines.size === 4, s"got: $lines") // 2 records × (query+reply)
     assert(lines.count(_.contains("query: first.example.")) === 1,
       "restart must not re-emit the already-processed file")

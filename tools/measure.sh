@@ -2,8 +2,10 @@
 # Per-query measurement harness for optimization rounds: times N reps of
 # selected registered queries (Bench methodology: .count() action, AQE on,
 # shuffle.partitions = cores, warmup rep at sf0.001) and writes each query's
-# .explain("formatted") to a file. Dev tooling only — the shipped library
-# has no dependency on it.
+# .explain("formatted"), taken from the last timed rep's frame (graph
+# queries with eager loops run them while the frame is built, so a separate
+# build for the plan would run them once more), to a file. Dev tooling
+# only — the shipped library has no dependency on it.
 #
 # Usage: tools/measure.sh <outDir> <q1,q2,...> [reps] [cores] [sfDir]
 # CLASSES (default: this checkout's target/scala-2.13/classes) and
@@ -25,13 +27,16 @@ names.foreach { n =>
   val fn = qs(n)
   try { fn(spark, "/root/testdata/sf0.001").count() } catch { case _: Throwable => () }
   spark.catalog.clearCache()
-  val plan = fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
-  java.nio.file.Files.writeString(java.nio.file.Paths.get("$OUT", n + ".txt"), plan)
-  val ts = (1 to reps).map { _ =>
+  val ts = (1 to reps).map { rep =>
     spark.sparkContext.setJobDescription(n)
     val t0 = System.nanoTime()
-    fn(spark, sfDir).count()
+    val df = fn(spark, sfDir)
+    df.count()
     val dt = (System.nanoTime() - t0) / 1e9
+    if (rep == reps) {
+      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get("$OUT", n + ".txt"), plan)
+    }
     spark.catalog.clearCache(); System.gc()
     dt
   }.sorted
