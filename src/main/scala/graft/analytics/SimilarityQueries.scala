@@ -22,6 +22,13 @@ import org.apache.spark.sql.functions._
   * Cosines accumulate sequentially in double on both engines and are
   * rounded to 6 digits before any compare/rank, so oracle results are
   * bit-stable.
+  *
+  * Shared helpers (also called by [[VectorIndex]], [[TextIndex]] and
+  * [[TextQueries]]): [[emb]] and [[dot]] build the vectors,
+  * [[querySide]] the broadcast `(qid, qv, qnrm)` side, [[cosine]] the
+  * round-6 score, [[rankCentroids]] the in-row IVF centroid ranking,
+  * and [[topKPer]] every per-key ranked tail (`row_number` over the
+  * key, tie-break last, `rank <= k`).
   */
 object SimilarityQueries {
   import RelationalQueries.Q
@@ -35,22 +42,46 @@ object SimilarityQueries {
   private[analytics] def dot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.dot(a, b)
 
+  /** Cosine of `a` and `b` from their squared norms `na` and `nb`,
+    * rounded to 6 digits: the oracles' `ROUND(.. / (SQRT(..) *
+    * SQRT(..)), 6)`. */
+  private[analytics] def cosine(a: Column, b: Column, na: Column,
+      nb: Column): Column =
+    round(cosineRatio(a, b, na, nb), 6)
+
+  /** [[cosine]] before rounding: [[qSimCoreset]] rounds it at micro-unit
+    * scale instead (`ROUND(x * 1000000)` in its oracle), which a round-6
+    * value times 10^6 would not always equal. */
+  private def cosineRatio(a: Column, b: Column, na: Column,
+      nb: Column): Column =
+    dot(a, b) / (sqrt(na) * sqrt(nb))
+
+  /** The query side of a scan in [[emb]]'s shape: `(qid, qv, qnrm)`,
+    * then `extra`. */
+  private[analytics] def querySide(e: DataFrame, extra: Column*): DataFrame =
+    e.select(Seq(col("vec_id").as("qid"), col("v").as("qv"),
+      col("nrm").as("qnrm")) ++ extra: _*)
+
+  /** The ranked tail: `df` with a long `rank` column numbering each
+    * `keys` group from 1 under `order` (its tie-break last), cut to
+    * `rank <= k`. Callers select and order the result. */
+  private[analytics] def topKPer(df: DataFrame, keys: Seq[Column],
+      order: Seq[Column], k: Int, rank: String = "rank"): DataFrame =
+    df.withColumn(rank, row_number()
+        .over(Window.partitionBy(keys: _*).orderBy(order: _*)).cast("long"))
+      .filter(col(rank) <= k)
+
   /** Exact top-5 neighbors (by cosine) for query vectors vec_id < 20. */
   val qSimTopkBrute = Q(
     "q_sim_topk_brute",
     (s, dir) => {
       val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm"))
+      val q = querySide(e.filter(col("vec_id") < 20))
       val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("neighbor_id"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      topKPer(scored, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"), col("cos_sim"))
         .orderBy(col("qid"), col("rank"))
     },
@@ -98,65 +129,16 @@ object SimilarityQueries {
     * projection within ~1e-12 of zero could flip a sign bit if a
     * future DuckDB changed list_sum's accumulation order; the
     * hash-matched rounds would then fail visibly. */
-  private[analytics] def lshSigsSql(bitsN: Int, dim: Int = 64): String = {
-    val hx = "instr('0123456789abcdef', substr(md5(CAST(j AS VARCHAR) || '|' || CAST(d AS VARCHAR)), %d, 1)) - 1"
-    val digits = (1 to 6).map(p => s"(${hx.format(p)}) * ${1 << (4 * (6 - p))}")
-      .mkString("(", " + ", ")")
-    s"""
-      planes AS (
-        SELECT j, LIST(w ORDER BY d) AS wv FROM (
-          SELECT j, d,
-                 ($digits % 2000001 - 1000000) / 1000000.0 AS w
-          FROM generate_series(0, ${bitsN - 1}) tj(j)
-          CROSS JOIN generate_series(0, ${dim - 1}) td(d))
-        GROUP BY j),
+  private[analytics] def lshSigsSql(bitsN: Int, dim: Int = 64): String = s"""
+      ${lshPlanesSql(bitsN, dim)},
       sigs AS (
         SELECT e.vec_id,
-               CAST(SUM(CASE WHEN list_sum(list_transform(
-                        generate_series(1, len(e.v)),
-                        i -> e.v[i] * p.wv[i])) > 0
-                    THEN (CAST(1 AS BIGINT) << (${bitsN - 1} - p.j))
-                    ELSE 0 END) AS BIGINT) AS sig
+               ${lshBitsSql(s"${bitsN - 1} - p.j")} AS sig
         FROM e CROSS JOIN planes p
         WHERE len(e.v) = $dim
         GROUP BY e.vec_id)"""
-  }
 
-  /** Variable-width variant of [[lshSigsSql]] for oracles whose
-    * signature length is DERIVED IN-SQL from the corpus (the
-    * scale-adaptive geometry of
-    * [[DedupQueries.qDedupEmbeddingLsh]]): planes are generated up to
-    * `maxBits` and the `sigs` CTE reads the actual bit count from a
-    * prior `geo(bits)` CTE, placing bit j at position `bits - 1 - j`
-    * exactly like [[graft.functions.LshSignature]] (sig = sig<<1|bit
-    * over ascending j). Same md5-derived weights, same `len(e.v) =
-    * dim` guard semantics as [[lshSigsSql]]. */
-  private[analytics] def lshSigsSqlUpTo(maxBits: Int, dim: Int = 64): String = {
-    val hx = "instr('0123456789abcdef', substr(md5(CAST(j AS VARCHAR) || '|' || CAST(d AS VARCHAR)), %d, 1)) - 1"
-    val digits = (1 to 6).map(p => s"(${hx.format(p)}) * ${1 << (4 * (6 - p))}")
-      .mkString("(", " + ", ")")
-    s"""
-      planes AS (
-        SELECT j, LIST(w ORDER BY d) AS wv FROM (
-          SELECT j, d,
-                 ($digits % 2000001 - 1000000) / 1000000.0 AS w
-          FROM generate_series(0, ${maxBits - 1}) tj(j)
-          CROSS JOIN generate_series(0, ${dim - 1}) td(d))
-        GROUP BY j),
-      sigs AS (
-        SELECT e.vec_id,
-               CAST(SUM(CASE WHEN list_sum(list_transform(
-                        generate_series(1, len(e.v)),
-                        i -> e.v[i] * p.wv[i])) > 0
-                    THEN (CAST(1 AS BIGINT)
-                          << ((SELECT bits FROM geo) - 1 - p.j))
-                    ELSE 0 END) AS BIGINT) AS sig
-        FROM e CROSS JOIN planes p
-        WHERE p.j < (SELECT bits FROM geo) AND len(e.v) = $dim
-        GROUP BY e.vec_id)"""
-  }
-
-  /** Multi-long variant of [[lshSigsSqlUpTo]] mirroring
+  /** Multi-long variant of [[lshSigsSql]] mirroring
     * [[graft.functions.LshBandArray]]: instead of one packed `sigs`
     * long, emits a `bands(vec_id, band_idx, band_val)` CTE directly —
     * band i covers planes j ∈ [i·r, (i+1)·r), with plane j at bit
@@ -166,33 +148,41 @@ object SimilarityQueries {
     * engine side; planes are generated up to `maxPlanes` and the
     * b·r ≤ maxPlanes prefix is used. Same md5-derived weights and
     * `len(e.v) = dim` guard semantics as [[lshSigsSql]]. */
-  private[analytics] def lshBandsSqlUpTo(maxPlanes: Int, dim: Int = 64): String = {
-    val hx = "instr('0123456789abcdef', substr(md5(CAST(j AS VARCHAR) || '|' || CAST(d AS VARCHAR)), %d, 1)) - 1"
-    val digits = (1 to 6).map(p => s"(${hx.format(p)}) * ${1 << (4 * (6 - p))}")
-      .mkString("(", " + ", ")")
-    s"""
-      planes AS (
-        SELECT j, LIST(w ORDER BY d) AS wv FROM (
-          SELECT j, d,
-                 ($digits % 2000001 - 1000000) / 1000000.0 AS w
-          FROM generate_series(0, ${maxPlanes - 1}) tj(j)
-          CROSS JOIN generate_series(0, ${dim - 1}) td(d))
-        GROUP BY j),
+  private[analytics] def lshBandsSqlUpTo(maxPlanes: Int, dim: Int = 64): String = s"""
+      ${lshPlanesSql(maxPlanes, dim)},
       bands AS (
         SELECT e.vec_id,
                CAST(p.j // (SELECT r FROM geo) AS INTEGER) AS band_idx,
-               CAST(SUM(CASE WHEN list_sum(list_transform(
-                        generate_series(1, len(e.v)),
-                        i -> e.v[i] * p.wv[i])) > 0
-                    THEN (CAST(1 AS BIGINT) <<
-                          ((SELECT r FROM geo) - 1 -
-                           (p.j % (SELECT r FROM geo))))
-                    ELSE 0 END) AS BIGINT) AS band_val
+               ${lshBitsSql("(SELECT r FROM geo) - 1 - (p.j % (SELECT r FROM geo))")} AS band_val
         FROM e CROSS JOIN planes p
         WHERE p.j < (SELECT b FROM geo) * (SELECT r FROM geo)
           AND len(e.v) = $dim
         GROUP BY e.vec_id, p.j // (SELECT r FROM geo))"""
+
+  /** The `planes` CTE of the LSH oracles: planes 0..n-1, each a list of
+    * `dim` weights in [-1, 1] read from the first six hex digits of
+    * md5("j|d"), as `LshSignature.hyperplane` derives them. */
+  private def lshPlanesSql(n: Int, dim: Int): String = {
+    val hx = "instr('0123456789abcdef', substr(md5(CAST(j AS VARCHAR) || '|' || CAST(d AS VARCHAR)), %d, 1)) - 1"
+    val digits = (1 to 6).map(p => s"(${hx.format(p)}) * ${1 << (4 * (6 - p))}")
+      .mkString("(", " + ", ")")
+    s"""planes AS (
+        SELECT j, LIST(w ORDER BY d) AS wv FROM (
+          SELECT j, d,
+                 ($digits % 2000001 - 1000000) / 1000000.0 AS w
+          FROM generate_series(0, ${n - 1}) tj(j)
+          CROSS JOIN generate_series(0, ${dim - 1}) td(d))
+        GROUP BY j)"""
   }
+
+  /** Packs the sign bits of `e.v` projected on planes `p` into a BIGINT,
+    * plane p.j's bit at position `pos`. */
+  private def lshBitsSql(pos: String): String =
+    s"""CAST(SUM(CASE WHEN list_sum(list_transform(
+                        generate_series(1, len(e.v)),
+                        i -> e.v[i] * p.wv[i])) > 0
+                    THEN (CAST(1 AS BIGINT) << ($pos))
+                    ELSE 0 END) AS BIGINT)"""
 
   /** ANN top-5 via sign-LSH banding: the 16-bit signature splits into
     * 4 bands of 4 bits; a corpus vector is a candidate when ANY band
@@ -211,22 +201,17 @@ object SimilarityQueries {
       val bandCols = (0 until 4).map(i =>
         expr(s"shiftright(sig, ${i * 4}) & 15").as(s"band_$i"))
       val eb = e.select(e.columns.toIndexedSeq.map(col) ++ bandCols: _*)
-      val q = eb.filter(col("vec_id") < 20)
-        .select(Seq(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm")) ++
-          (0 until 4).map(i => col(s"band_$i").as(s"q_band_$i")): _*)
+      val q = querySide(eb.filter(col("vec_id") < 20),
+        (0 until 4).map(i => col(s"band_$i").as(s"q_band_$i")): _*)
       val anyBand = (0 until 4)
         .map(i => col(s"band_$i") === col(s"q_band_$i"))
         .reduce(_ || _)
       val cands = eb.join(broadcast(q),
           col("vec_id") =!= col("qid") && anyBand)
         .select(col("qid"), col("vec_id").as("neighbor_id"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      cands.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      topKPer(cands, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"), col("cos_sim"))
         .orderBy(col("qid"), col("rank"))
     },
@@ -305,16 +290,22 @@ object SimilarityQueries {
         col("nrm").as("cnrm"))
     val centArr = cents.agg(
       collect_list(struct(col("cid"), col("cv"), col("cnrm"))).as("cs"))
-    val scored16 = transform(col("cs"), c =>
-      struct(
-        round(dot(col("v"), c.getField("cv")) /
-          (sqrt(col("nrm")) * sqrt(c.getField("cnrm"))), 6).as("ccos"),
-        (-c.getField("cid")).as("tie"),
-        c.getField("cid").as("cid")))
     e.crossJoin(broadcast(centArr))
-      .withColumn("ranked16", array_sort(scored16))
+      .withColumn("ranked16", rankCentroids(col("cs")))
       .drop("cs")
   }
+
+  /** The row's `v`/`nrm` scored against every centroid of `cents`
+    * (array<struct<cid, cv, cnrm>>) and sorted ascending by
+    * (ccos, -cid, cid): see [[ivfRanked]] for why that order puts the
+    * assignment last. Shared with [[VectorIndex]]'s stored centroids. */
+  private[analytics] def rankCentroids(cents: Column): Column =
+    array_sort(transform(cents, c =>
+      struct(
+        cosine(col("v"), c.getField("cv"), col("nrm"), c.getField("cnrm"))
+          .as("ccos"),
+        (-c.getField("cid")).as("tie"),
+        c.getField("cid").as("cid"))))
 
   /** DuckDB mirror of [[ivfRanked]]'s centroid selection + assignment:
     * CTEs `cents`, `scored`, `ranked` (crank 1 = assignment) over a
@@ -363,17 +354,13 @@ object SimilarityQueries {
         .select(col("qid"), col("vec_id").as("neighbor_id"))
         .distinct()
       val scoredCand = cand
-        .join(e.select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm")), "qid")
+        .join(querySide(e), "qid")
         .join(e.select(col("vec_id").as("neighbor_id"), col("v"),
           col("nrm")), "neighbor_id")
         .select(col("qid"), col("neighbor_id"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-      val wq = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      scoredCand.withColumn("rank", row_number().over(wq).cast("long"))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      topKPer(scoredCand, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"), col("cos_sim"))
         .orderBy(col("qid"), col("rank"))
     },
@@ -482,10 +469,8 @@ object SimilarityQueries {
         .select(col("qid"), col("vec_id").as("neighbor_id"),
           graft.functions.VectorFunctions.adcScore(col("codes"), col("lut"))
             .as("adc_micro"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("adc_micro"), col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+      topKPer(scored, Seq(col("qid")),
+          Seq(col("adc_micro"), col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"),
           (col("adc_micro") / lit(1000000.0)).as("approx_l2"))
         .orderBy(col("qid"), col("rank"))
@@ -691,10 +676,8 @@ object SimilarityQueries {
         .select(col("qid"), col("neighbor_id"),
           graft.functions.VectorFunctions.adcScore(col("codes"), col("lut"))
             .as("adc_micro"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("adc_micro"), col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+      topKPer(scored, Seq(col("qid")),
+          Seq(col("adc_micro"), col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"),
           (col("adc_micro") / lit(1000000.0)).as("approx_l2"))
         .orderBy(col("qid"), col("rank"))
@@ -831,10 +814,8 @@ object SimilarityQueries {
       val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("neighbor_id"),
           dot(col("qq8"), col("q8")).cast("long").as("score"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+      topKPer(scored, Seq(col("qid")),
+          Seq(col("score").desc, col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"), col("score"))
         .orderBy(col("qid"), col("rank"))
     },
@@ -1101,11 +1082,8 @@ object SimilarityQueries {
         .select(col("qid"), col("neighbor_id"),
           expr("""aggregate(zip_with(qvm, vm, (a, b) -> (a - b) * (a - b)),
                   cast(0 as bigint), (acc, x) -> acc + x)""").as("d"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("d"), col("neighbor_id"))
-      val result = cand
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+      val result = topKPer(cand, Seq(col("qid")),
+          Seq(col("d"), col("neighbor_id")), 5)
         .select(col("qid"), col("rank"), col("neighbor_id"),
           col("d").as("l2_micro2"))
         .orderBy(col("qid"), col("rank"))
@@ -1152,7 +1130,7 @@ object SimilarityQueries {
     * Scale shape: the arms never materialize a corpus×corpus
     * relation — the vector arm broadcasts the 8-query side and the
     * lexical arm broadcasts the 24-term table, so both are narrow
-    * corpus passes feeding per-qid top-30 windows; the fusion join
+    * corpus passes feeding per-qid top-30 [[topKPer]] tails; the fusion join
     * then touches only ≤ 8×60 candidate rows. Adding a third arm
     * (e.g. [[qSimIvfPqRerank]]'s compressed index at corpus scale) is
     * the same full-outer pattern.
@@ -1164,25 +1142,18 @@ object SimilarityQueries {
     "q_sim_hybrid_rrf",
     (s, dir) => {
       val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm"))
+      val q = querySide(e.filter(col("vec_id") < 8))
       val cos = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("doc_id"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cs"))
-      val vw = Window.partitionBy(col("qid"))
-        .orderBy(col("cs").desc, col("doc_id"))
-      val vecArm = cos.withColumn("rank_vec", row_number().over(vw).cast("long"))
-        .filter(col("rank_vec") <= 30)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cs"))
+      val vecArm = topKPer(cos, Seq(col("qid")),
+          Seq(col("cs").desc, col("doc_id")), 30, "rank_vec")
         .select(col("qid"), col("doc_id"), col("rank_vec"))
       val (lexPd0, lexHandles) = TextQueries.bm25PerDoc(s, dir)
       val lexPd = lexPd0
         .filter(col("qid") < 8 && col("doc_id") =!= col("qid"))
-      val lw = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("doc_id"))
-      val lexArm = lexPd.withColumn("rank_lex", row_number().over(lw).cast("long"))
-        .filter(col("rank_lex") <= 30)
+      val lexArm = topKPer(lexPd, Seq(col("qid")),
+          Seq(col("score").desc, col("doc_id")), 30, "rank_lex")
         .select(col("qid"), col("doc_id"), col("rank_lex"))
       val zero = lit(0).cast("decimal(25,6)")
       val fused = vecArm.join(lexArm, Seq("qid", "doc_id"), "full_outer")
@@ -1191,11 +1162,8 @@ object SimilarityQueries {
               .cast("decimal(25,6)"), zero) +
             coalesce(round(lit(1.0) / (lit(60) + col("rank_lex")), 6)
               .cast("decimal(25,6)"), zero)).cast("double").as("rrf"))
-      val fw = Window.partitionBy(col("qid"))
-        .orderBy(col("rrf").desc, col("doc_id"))
-      val result = fused
-        .withColumn("rank", row_number().over(fw).cast("long"))
-        .filter(col("rank") <= 10)
+      val result = topKPer(fused, Seq(col("qid")),
+          Seq(col("rrf").desc, col("doc_id")), 10)
         .select(col("qid"), col("rank"), col("doc_id"),
           col("rank_vec"), col("rank_lex"), col("rrf"))
         .orderBy(col("qid"), col("rank"))
@@ -1264,18 +1232,14 @@ object SimilarityQueries {
     "q_sim_hard_negatives",
     (s, dir) => {
       val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-          col("v").as("qv"), col("nrm").as("qnrm"))
+      val q = querySide(e.filter(col("vec_id") < 20),
+        col("label").as("qlabel"))
       val scored = e.join(broadcast(q), col("label") =!= col("qlabel"))
         .select(col("qid"), col("qlabel"), col("vec_id").as("neighbor_id"),
           col("label").as("neighbor_label"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      topKPer(scored, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("neighbor_id")), 5)
         .select(col("qid"), col("qlabel"), col("rank"), col("neighbor_id"),
           col("neighbor_label"), col("cos_sim"))
         .orderBy(col("qid"), col("rank"))
@@ -1443,23 +1407,18 @@ object SimilarityQueries {
     * [[qSimLshTopk]]; this is the exact subgraph those approximate
     * builds are validated against, [[qSimRecallEval]] style). The
     * sample broadcasts (|sample|·dim doubles), each corpus-side
-    * partition scores its share, the per-node top-5 window partitions
+    * partition scores its share, the per-node top-5 [[topKPer]] partitions
     * by node, and the mutual reduction is a self-join of the
     * (|sample|·5)-row edge list on both endpoints. */
   val qSimKnnGraph = Q(
     "q_sim_knn_graph",
     (s, dir) => {
       val n = emb(s, dir).filter(col("vec_id") % 4 === 0)
-      val q = n.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-      val scored = n.join(broadcast(q), col("vec_id") =!= col("qid"))
+      val scored = n.join(broadcast(querySide(n)), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("nbr"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("nbr"))
-      val edges = scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      val edges = topKPer(scored, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("nbr")), 5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val mutual = edges.as("a").join(edges.as("b"),
           col("a.qid") === col("b.nbr") && col("a.nbr") === col("b.qid"),
@@ -1527,7 +1486,7 @@ object SimilarityQueries {
     * Scale shape: the greedy loop is INHERENTLY sequential in k, so
     * the right distribution is per-query dataflow: each of the 4
     * selection rounds is an anti-join (drop selected) + a bounded
-    * max-sim aggregation + a qid-partitioned argmax window over
+    * max-sim aggregation + a qid-partitioned [[topKPer]] argmax over
     * (|queries|·20)-row frames — thousands of queries run one
     * selection step in one pass. The candidate pool and its pairwise
     * sim table (≤ 20·19 rows per query) persist once; each round's
@@ -1538,17 +1497,13 @@ object SimilarityQueries {
     (s, dir) => {
       import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm"))
+      val q = querySide(e.filter(col("vec_id") < 20))
       val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("cid"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("rel"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("rel").desc, col("cid"))
-      val cand = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 20).select(col("qid"), col("cid"), col("rel"))
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("rel"))
+      val byRel = Seq(col("rel").desc, col("cid"))
+      val cand = topKPer(scored, Seq(col("qid")), byRel, 20, "rn")
+        .select(col("qid"), col("cid"), col("rel"))
         .persist(MEMORY_AND_DISK)
       val sims = cand.select(col("qid"), col("cid").as("a"))
         .join(cand.select(col("qid"), col("cid").as("b")), Seq("qid"))
@@ -1558,11 +1513,9 @@ object SimilarityQueries {
         .join(e.select(col("vec_id").as("b"), col("v").as("bv"),
           col("nrm").as("bnrm")), Seq("b"))
         .select(col("qid"), col("a"), col("b"),
-          round(dot(col("av"), col("bv")) /
-            (sqrt(col("anrm")) * sqrt(col("bnrm"))), 6).as("sim"))
+          cosine(col("av"), col("bv"), col("anrm"), col("bnrm")).as("sim"))
         .persist(MEMORY_AND_DISK)
-      var sel = cand.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      var sel = topKPer(cand, Seq(col("qid")), byRel, 1, "rn")
         .select(col("qid"), col("cid"), col("rel"), lit(1L).as("sel_rank"))
         .localCheckpoint(true)
       for (t <- 2 to 5) {
@@ -1572,11 +1525,9 @@ object SimilarityQueries {
             Seq("qid", "b"))
           .groupBy(col("qid"), col("a")).agg(max(col("sim")).as("ms"))
           .select(col("qid"), col("a").as("cid"), col("ms"))
-        val wp = Window.partitionBy(col("qid"))
-          .orderBy((lit(0.7) * col("rel") - lit(0.3) * col("ms")).desc,
-            col("cid"))
-        val pick = rem.join(ms, Seq("qid", "cid"))
-          .withColumn("rn", row_number().over(wp)).filter(col("rn") === 1)
+        val pick = topKPer(rem.join(ms, Seq("qid", "cid")), Seq(col("qid")),
+            Seq((lit(0.7) * col("rel") - lit(0.3) * col("ms")).desc,
+              col("cid")), 1, "rn")
           .select(col("qid"), col("cid"), col("rel"),
             lit(t.toLong).as("sel_rank"))
         sel = sel.unionByName(pick).localCheckpoint(true)
@@ -1812,11 +1763,8 @@ object SimilarityQueries {
         .agg(sum(expr("""cast(round((cast(c as double) / n) *
           ln(cast(c as double) * n / (cast(nc as double) * nl)), 9)
           as decimal(25,9))""")).as("mi"))
-      val wTop = Window.partitionBy(col("cid"))
-        .orderBy(col("c").desc, col("label"))
-      val maj = cells
-        .withColumn("rk", row_number().over(wTop))
-        .filter(col("rk") === 1)
+      val maj = topKPer(cells, Seq(col("cid")),
+          Seq(col("c").desc, col("label")), 1, "rk")
         .select(col("cid"), col("label").as("majority_label"),
           col("c").as("majority_n"))
       val scalars = maj.agg(sum(col("majority_n")).as("sum_maj"))
@@ -1897,23 +1845,18 @@ object SimilarityQueries {
     * tie-breaks.
     *
     * Scale shape: sample broadcast + per-partition scoring + one
-    * per-vector top-5 window (the kNN-graph plan), then a bounded
+    * per-vector top-5 [[topKPer]] (the kNN-graph plan), then a bounded
     * TakeOrdered(20); at corpus scale the candidate generation swaps
     * to the LSH/IVF bucketed paths exactly as the kNN graph does. */
   val qSimOod = Q(
     "q_sim_ood",
     (s, dir) => {
       val n = emb(s, dir).filter(col("vec_id") % 4 === 0)
-      val q = n.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("label").as("qlabel"))
+      val q = querySide(n, col("label").as("qlabel"))
       val scored = n.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("qlabel"), col("vec_id").as("nbr"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("nbr"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      topKPer(scored, Seq(col("qid")), Seq(col("cos_sim").desc, col("nbr")), 5)
         .groupBy(col("qid"), col("qlabel"))
         .agg(round(
           sum(expr("cast(cos_sim as decimal(10,6))")).cast("double")
@@ -2049,7 +1992,7 @@ object SimilarityQueries {
     * Scale shape: the corpus never shuffles — the 20-query × 4-width
     * frame broadcasts into ONE narrow corpus scan (bounded-block
     * BNLJ, the [[qSimTopkBrute]] pattern), per-(width, query) top-5
-    * is a partitioned window over candidate rows, and the per-width
+    * is a partitioned [[topKPer]] over candidate rows, and the per-width
     * rollup is bounded-frame work. Prefix dots cost Σdᵢ ≈ 2× one
     * full-width pass. */
   val qSimMatryoshka = Q(
@@ -2065,16 +2008,12 @@ object SimilarityQueries {
         .select(col("qid"), col("dim"),
           slice(col("qv"), lit(1), col("dim")).as("qv"))
         .withColumn("qnrm", dot(col("qv"), col("qv")))
+      val vd = slice(col("v"), lit(1), col("dim"))
       val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("dim"), col("qid"), col("vec_id").as("neighbor_id"),
-          round(dot(col("qv"), slice(col("v"), lit(1), col("dim"))) /
-            (sqrt(col("qnrm")) *
-              sqrt(dot(slice(col("v"), lit(1), col("dim")),
-                slice(col("v"), lit(1), col("dim"))))), 6).as("cos_sim"))
-      val w = Window.partitionBy(col("dim"), col("qid"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      val top5 = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+          cosine(col("qv"), vd, col("qnrm"), dot(vd, vd)).as("cos_sim"))
+      val top5 = topKPer(scored, Seq(col("dim"), col("qid")),
+          Seq(col("cos_sim").desc, col("neighbor_id")), 5)
         .groupBy(col("dim"), col("qid"))
         .agg(collect_set(col("neighbor_id")).as("ids"))
       val truth = top5.filter(col("dim") === 64)
@@ -2145,30 +2084,26 @@ object SimilarityQueries {
     *
     * Scale shape: the [[qSimTopkBrute]] bounded-block envelope (20
     * broadcast queries × one narrow corpus scan, per-query top-10
-    * window), plus a bounded label-count join for IDCG. */
+    * [[topKPer]]), plus a bounded label-count join for IDCG. */
   val qSimNdcg = Q(
     "q_sim_ndcg",
     (s, dir) => {
       val wtab = "array(1000000L, 630930L, 500000L, 430677L, " +
         "386853L, 356207L, 333333L, 315465L, 301030L, 289065L)"
       val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-          col("v").as("qv"), col("nrm").as("qnrm"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      val hits = e.join(broadcast(q), col("vec_id") =!= col("qid"))
+      val q = querySide(e.filter(col("vec_id") < 20),
+        col("label").as("qlabel"))
+      val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("qlabel"), col("vec_id").as("neighbor_id"),
           col("label"),
-          round(dot(col("qv"), col("v")) /
-            (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+          cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+      val hits = topKPer(scored, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("neighbor_id")), 10)
         .groupBy(col("qid"), col("qlabel"))
         .agg(sum(when(col("label") === col("qlabel"), lit(1L))
             .otherwise(lit(0L))).as("n_rel"),
           sum(when(col("label") === col("qlabel"),
-            expr(s"element_at($wtab, rank)")).otherwise(lit(0L)))
+            expr(s"element_at($wtab, int(rank))")).otherwise(lit(0L)))
             .as("dcg_micro"))
       val cls = e.groupBy(col("label").as("qlabel"))
         .agg(count(lit(1)).as("cs"))
@@ -2274,9 +2209,8 @@ object SimilarityQueries {
       var out = Vector((1L, firstRow.getLong(0), -1000000L))
       for (step <- 2 to 10) {
         val sims = selVecs.map { case (sv, snrm) =>
-          round(dot(col("v"), typedLit(sv)) /
-            (sqrt(col("nrm")) * sqrt(lit(snrm))) * 1000000)
-            .cast("long")
+          round(cosineRatio(col("v"), typedLit(sv), col("nrm"), lit(snrm))
+            * 1000000).cast("long")
         }
         val next = e.filter(!col("vec_id").isInCollection(selIds))
           .select(col("vec_id"), col("v"), col("nrm"),
@@ -2347,7 +2281,7 @@ object SimilarityQueries {
     * Scale shape: centroids are one (label, dim) rollup (bounded:
     * labels × 64 rows, broadcast); scoring joins the exploded corpus
     * against that bounded table on dim (10 candidates per term), one
-    * vec-keyed aggregate + ranking window; the confusion rollup is
+    * vec-keyed aggregate + [[topKPer]] argmin; the confusion rollup is
     * bounded. No corpus self-join anywhere. */
   val qSimCentroidEval = Q(
     "q_sim_centroid_eval",
@@ -2367,10 +2301,7 @@ object SimilarityQueries {
         .groupBy(col("vec_id"), col("label"), col("clabel"))
         .agg(sum((col("xm") - col("cm")) * (col("xm") - col("cm")))
           .as("d2"))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("d2"), col("clabel"))
-      d2.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
+      topKPer(d2, Seq(col("vec_id")), Seq(col("d2"), col("clabel")), 1, "rk")
         .groupBy(col("label"), col("clabel").as("predicted"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("label"), col("predicted"))

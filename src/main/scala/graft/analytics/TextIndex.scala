@@ -156,7 +156,6 @@ object TextIndex {
     * shares the inline query's DuckDB oracle verbatim. */
   def search(s: SparkSession, store: String, queries: DataFrame,
       topk: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // one generation resolve for the whole search (see StoreMeta)
     val gt = StoreMeta.current(s, store)
     val stats = s.table(gt("stats"))
@@ -174,10 +173,8 @@ object TextIndex {
           .cast("decimal(25,6)").as("ts"))
     val perDoc = scored.groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("ts")).cast("double").as("score"))
-    val rw = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("doc_id"))
-    perDoc.withColumn("rank", row_number().over(rw).cast("long"))
-      .filter(col("rank") <= topk)
+    SimilarityQueries.topKPer(perDoc, Seq(col("qid")),
+        Seq(col("score").desc, col("doc_id")), topk)
       .select(col("qid"), col("rank"), col("doc_id"), col("score"))
       .orderBy(col("qid"), col("rank"))
   }

@@ -872,11 +872,8 @@ object TextQueries {
     "q_text_bm25",
     (s, dir) => {
       val (perDoc, handles) = bm25PerDoc(s, dir)
-      val rw = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("doc_id"))
-      val result = perDoc
-        .withColumn("rank", row_number().over(rw).cast("long"))
-        .filter(col("rank") <= 10)
+      val result = SimilarityQueries.topKPer(perDoc, Seq(col("qid")),
+          Seq(col("score").desc, col("doc_id")), 10)
         .select(col("qid"), col("rank"), col("doc_id"), col("score"))
         .orderBy(col("qid"), col("rank"))
       QueryScopedCache.releaseAfter(result, handles)
@@ -1009,11 +1006,8 @@ object TextQueries {
           round(col("dot").cast("double") /
             (sqrt(col("qnrm").cast("double")) *
               sqrt(col("nrm").cast("double"))), 6).as("cos_sim"))
-      val rw = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("doc_id"))
-      val result = scored
-        .withColumn("rank", row_number().over(rw).cast("long"))
-        .filter(col("rank") <= 5)
+      val result = SimilarityQueries.topKPer(scored, Seq(col("qid")),
+          Seq(col("cos_sim").desc, col("doc_id")), 5)
         .select(col("qid"), col("rank"), col("doc_id"), col("cos_sim"))
         .orderBy(col("qid"), col("rank"))
       QueryScopedCache.releaseAfter(result, Seq(tf, wgt))
@@ -1369,7 +1363,7 @@ object TextQueries {
     *
     * Scale shape: tf is one (doc, term) aggregate; df is one term
     * aggregate broadcast back onto it (|vocab| rows); the top-3 is a
-    * doc-partitioned window — partitioned ranking, never global. */
+    * doc-partitioned [[SimilarityQueries.topKPer]] — never global. */
   val qTextKeywords = Q(
     "q_text_keywords",
     (s, dir) => {
@@ -1379,11 +1373,8 @@ object TextQueries {
         .agg(count(lit(1)).as("tf"))
       val df = tf.groupBy(col("w"))
         .agg(count(lit(1)).as("df"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tf").desc, col("df").asc, col("w").asc)
-      tf.join(df, "w")
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
+      SimilarityQueries.topKPer(tf.join(df, "w"), Seq(col("doc_id")),
+          Seq(col("tf").desc, col("df").asc, col("w").asc), 3)
         .select(col("doc_id"), col("rank"), col("w").as("keyword"),
           col("tf"), col("df"))
         .orderBy(col("doc_id"), col("rank"))

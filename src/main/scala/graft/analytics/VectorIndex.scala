@@ -150,19 +150,12 @@ object VectorIndex {
 
   /** Rank the stored centroid array per row of `e` (ascending by
     * (ccos, -cid): last element = assignment, tail = probe list) —
-    * [[SimilarityQueries.ivfRanked]]'s scoring against a stored
-    * single-row centroid table instead of an inline sample. */
-  private def rankCentroids(e: DataFrame, ivf: DataFrame): DataFrame = {
-    val scored = transform(col("cents"), c =>
-      struct(
-        round(SimilarityQueries.dot(col("v"), c.getField("cv")) /
-          (sqrt(col("nrm")) * sqrt(c.getField("cnrm"))), 6).as("ccos"),
-        (-c.getField("cid")).as("tie"),
-        c.getField("cid").as("cid")))
+    * [[SimilarityQueries.rankCentroids]] against a stored single-row
+    * centroid table instead of an inline sample. */
+  private def rankCentroids(e: DataFrame, ivf: DataFrame): DataFrame =
     e.crossJoin(broadcast(ivf))
-      .withColumn("ranked", array_sort(scored))
+      .withColumn("ranked", SimilarityQueries.rankCentroids(col("cents")))
       .drop("cents")
-  }
 
   /** ANN top-k for `queries` (vec_id, v, nrm) against a previously
     * [[ingest]]ed index. Output (qid, rank, neighbor_id, approx_l2) —
@@ -174,17 +167,12 @@ object VectorIndex {
     * excluded from its own results (self-exclusion, matching the
     * inline query). */
   def search(s: SparkSession, store: String, queries: DataFrame,
-      nprobe: Int = 4, topk: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_micro"), col("neighbor_id"))
-    adcScored(s, store, queries, nprobe)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topk)
+      nprobe: Int = 4, topk: Int = 5): DataFrame =
+    SimilarityQueries.topKPer(adcScored(s, store, queries, nprobe),
+        Seq(col("qid")), Seq(col("adc_micro"), col("neighbor_id")), topk)
       .select(col("qid"), col("rank"), col("neighbor_id"),
         (col("adc_micro") / lit(1000000.0)).as("approx_l2"))
       .orderBy(col("qid"), col("rank"))
-  }
 
   /** The ADC stage shared by [[search]] and [[rerank]]: every probed
     * candidate with its 32-lookup approximate distance, un-ranked —
@@ -243,26 +231,18 @@ object VectorIndex {
   def rerank(s: SparkSession, store: String, queries: DataFrame,
       originals: DataFrame, r: Int = 50, nprobe: Int = 4,
       topk: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wa = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_micro"), col("neighbor_id"))
-    val topR = adcScored(s, store, queries, nprobe)
-      .withColumn("arank", row_number().over(wa))
-      .filter(col("arank") <= r)
+    import SimilarityQueries.{cosine, querySide, topKPer}
+    val topR = topKPer(adcScored(s, store, queries, nprobe), Seq(col("qid")),
+        Seq(col("adc_micro"), col("neighbor_id")), r, "arank")
       .select(col("qid"), col("neighbor_id"))
-    val q = queries.select(col("vec_id").as("qid"), col("v").as("qv"),
-      col("nrm").as("qnrm"))
     val exact = broadcast(topR)
       .join(originals.select(col("vec_id").as("neighbor_id"), col("v"),
         col("nrm")), "neighbor_id")
-      .join(broadcast(q), "qid")
+      .join(broadcast(querySide(queries)), "qid")
       .select(col("qid"), col("neighbor_id"),
-        round(SimilarityQueries.dot(col("qv"), col("v")) /
-          (sqrt(col("qnrm")) * sqrt(col("nrm"))), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topk)
+        cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos_sim"))
+    topKPer(exact, Seq(col("qid")),
+        Seq(col("cos_sim").desc, col("neighbor_id")), topk)
       .select(col("qid"), col("rank"), col("neighbor_id"), col("cos_sim"))
       .orderBy(col("qid"), col("rank"))
   }

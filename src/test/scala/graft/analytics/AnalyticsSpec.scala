@@ -58,6 +58,35 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("topKPer: each key's first k rows by (score, id), ranked from 1") {
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      // three score values make ties the rule, so the id tie-break
+      // decides most places; key 0 has one row and key 1 two, fewer
+      // than every k below except 1
+      val sizes = Seq(1, 2) ++ Seq.fill(5)(3 + rnd.nextInt(20))
+      val rows = sizes.zipWithIndex.flatMap { case (n, key) =>
+        rnd.shuffle((0L until 40L).toList).take(n)
+          .map(id => (key.toLong, id, rnd.nextInt(3).toDouble))
+      }
+      val df = rows.toDF("key", "id", "score")
+      for (k <- Seq(1, 3, 7); desc <- Seq(false, true)) {
+        val score = if (desc) col("score").desc else col("score")
+        val ranked = SimilarityQueries.topKPer(df, Seq(col("key")),
+          Seq(score, col("id")), k, "r")
+        assert(ranked.schema("r").dataType ===
+          org.apache.spark.sql.types.LongType)
+        val got = ranked.select($"key", $"r", $"id")
+          .as[(Long, Long, Long)].collect().toSeq.sorted
+        val want = rows.groupBy(_._1).toSeq.flatMap { case (key, g) =>
+          g.sortBy(t => (if (desc) -t._3 else t._3, t._2)).take(k)
+            .zipWithIndex.map { case (t, i) => (key, i + 1L, t._2) }
+        }.sorted
+        assert(got === want, s"seed $seed, k $k, desc $desc")
+      }
+    }
+  }
+
   test("lsh ann: recall >= 0.25 vs brute force while pruning >= 30%") {
     val brute = SimilarityQueries.qSimTopkBrute.run(spark, sf)
       .select("qid", "neighbor_id").collect()
