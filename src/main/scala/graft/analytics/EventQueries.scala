@@ -1727,7 +1727,7 @@ object EventQueries {
     *
     * Scale shape: one user-keyed exchange + one ordered scan;
     * output order rides the same sort. The streaming twin is
-    * flatMapGroupsWithState with the same O(1) per-key state. */
+    * a keyed fold with the same O(1) per-key state. */
   val qEventsThrottle = Q(
     "q_events_throttle",
     (s, dir) => {
@@ -1822,7 +1822,7 @@ object EventQueries {
     * [[qEventsThrottle]] proof discipline).
     *
     * Scale shape: one user-keyed exchange + one ordered scan; the
-    * streaming twin is flatMapGroupsWithState with the same six-long
+    * streaming twin is a keyed fold with the same six-long
     * state. Recursion depth in the oracle is max events/user —
     * bounded at the gate SFs; the ENGINE's cost never depends on it. */
   val qEventsLedger = Q(

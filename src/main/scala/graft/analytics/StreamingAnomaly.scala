@@ -1,7 +1,7 @@
 package graft.analytics
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.KeyedFold
 
 /** Streaming spike detection — the incremental twin of
   * [[EventQueries.qEventsAnomaly]]: the batch query scores each hourly
@@ -37,29 +37,26 @@ object StreamingAnomaly {
     * cross-checks it against the batch window query. */
   def monitor(counts: Dataset[HourCount]): Dataset[AnomalyFlag] = {
     import counts.sparkSession.implicits._
-    counts.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Seq[Long], AnomalyFlag](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, it: Iterator[HourCount], state: GroupState[Seq[Long]]) =>
-          var ring = state.getOption.getOrElse(Seq.empty[Long])
-          val out = it.toSeq.sortBy(_.bucket_us).flatMap { hc =>
-            val emitted =
-              if (ring.size == 24) {
-                // the batch query's exact integer algebra, verbatim:
-                // |n − s1/m| > 2σ cross-multiplied to BIGINTs
-                val m = 24L
-                val s1 = ring.sum
-                val s2 = ring.iterator.map(x => x * x).sum
-                val lhs = (m * hc.n - s1) * (m * hc.n - s1) * (m - 1)
-                val rhs = 4L * m * (m * s2 - s1 * s1)
-                Seq(AnomalyFlag(et, hc.bucket_us, hc.n,
-                  s1 * 1000000L / m, lhs > rhs))
-              } else Nil
-            ring = (ring :+ hc.n).takeRight(24)
-            emitted
-          }
-          state.update(ring)
-          out.iterator
-      }
+    KeyedFold(counts)(_.event_type, Some(Ordering.by(_.bucket_us))) {
+      (et, it, state: Option[Seq[Long]]) =>
+        var ring = state.getOrElse(Seq.empty[Long])
+        val out = it.flatMap { hc =>
+          val emitted =
+            if (ring.size == 24) {
+              // the batch query's exact integer algebra, verbatim:
+              // |n − s1/m| > 2σ cross-multiplied to BIGINTs
+              val m = 24L
+              val s1 = ring.sum
+              val s2 = ring.iterator.map(x => x * x).sum
+              val lhs = (m * hc.n - s1) * (m * hc.n - s1) * (m - 1)
+              val rhs = 4L * m * (m * s2 - s1 * s1)
+              Seq(AnomalyFlag(et, hc.bucket_us, hc.n,
+                s1 * 1000000L / m, lhs > rhs))
+            } else Nil
+          ring = (ring :+ hc.n).takeRight(24)
+          emitted
+        }.toList
+        (Some(ring), out.iterator)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming multi-touch attribution — the incremental twin of
   * [[EventQueries.qEventsAttribution]]: the batch query resolves each
@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * attribution row emitted the moment the purchase arrives. The
   * running first/last touch is exactly the O(1) per-key state the
   * batch window carries implicitly — here it lives in a
-  * `flatMapGroupsWithState` per-user state cell and survives
+  * [[graft.operators.KeyedFold]] per-user state cell and survives
   * micro-batch boundaries and checkpoint restarts.
   *
   * Scale shape: state per user is ONE small case class (two touch
@@ -51,35 +51,32 @@ object StreamingAttribution {
     * cross-checks it against the batch window query. */
   def attribute(events: Dataset[EventIn]): Dataset[Attribution] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchState, Attribution](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[EventIn], state: GroupState[TouchState]) =>
-          var st = state.getOption.orNull
-          val out = it.toSeq.sortBy(e => (e.ts_us, e.event_id)).flatMap { e =>
-            val emitted =
-              if (e.event_type == "purchase") {
-                val row =
-                  if (st == null)
-                    Attribution(e.event_id, user, e.ts_us, 0L,
-                      None, None, None, None)
-                  else
-                    Attribution(e.event_id, user, e.ts_us, st.n_touches,
-                      Some(st.first_touch), Some(st.first_ts_us),
-                      Some(st.last_touch), Some(st.last_ts_us))
-                Seq(row)
-              } else Nil
-            if (touchTypes(e.event_type))
-              st =
+    KeyedFold(events)(_.user_id, Some(Ordering.by(e => (e.ts_us, e.event_id)))) {
+      (user, it, state: Option[TouchState]) =>
+        var st = state.orNull
+        val out = it.flatMap { e =>
+          val emitted =
+            if (e.event_type == "purchase") {
+              val row =
                 if (st == null)
-                  TouchState(e.event_type, e.ts_us, e.event_type, e.ts_us, 1L)
+                  Attribution(e.event_id, user, e.ts_us, 0L,
+                    None, None, None, None)
                 else
-                  st.copy(last_touch = e.event_type, last_ts_us = e.ts_us,
-                    n_touches = st.n_touches + 1L)
-            emitted
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+                  Attribution(e.event_id, user, e.ts_us, st.n_touches,
+                    Some(st.first_touch), Some(st.first_ts_us),
+                    Some(st.last_touch), Some(st.last_ts_us))
+              Seq(row)
+            } else Nil
+          if (touchTypes(e.event_type))
+            st =
+              if (st == null)
+                TouchState(e.event_type, e.ts_us, e.event_type, e.ts_us, 1L)
+              else
+                st.copy(last_touch = e.event_type, last_ts_us = e.ts_us,
+                  n_touches = st.n_touches + 1L)
+          emitted
+        }.toList
+        (Option(st), out.iterator)
+    }
   }
 }

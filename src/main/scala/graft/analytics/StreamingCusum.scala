@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming CUSUM level-shift monitor — the incremental twin of
   * [[TsQueries.qTsCusum]]: the batch query scans the zero-filled
@@ -45,7 +45,18 @@ object StreamingCusum {
   case class CusumState(lastUs: Long, cum: Long, bestAbs: Long,
       bestUs: Long, bestCum: Long)
 
-  private val HourUs = 3600000000L
+  private[analytics] val HourUs = 3600000000L
+
+  /** The zero-filled hourly walk CUSUM and [[StreamingSeasonal]]
+    * share: (hour, count) for every hour after the cursor `lastUs` up
+    * to the bucket's own hour — the bucket's count there, 0 in the gap
+    * hours. A fresh key (`lastUs == Long.MinValue`) starts at the
+    * bucket itself; a bucket at or before the cursor walks no hour. */
+  private[analytics] def walkHours(lastUs: Long, bucketUs: Long,
+      x: Long): Iterator[(Long, Long)] =
+    Iterator.iterate(if (lastUs == Long.MinValue) bucketUs else lastUs + HourUs)(
+      _ + HourUs).takeWhile(_ <= bucketUs)
+      .map(t => (t, if (t == bucketUs) x else 0L))
 
   /** Score a stream of closed hourly buckets against per-key
     * reference levels (keys without a reference are ignored). Works
@@ -54,36 +65,25 @@ object StreamingCusum {
   def monitor(buckets: Dataset[HourCount],
       refs: Map[String, CusumRef]): Dataset[CusumPoint] = {
     import buckets.sparkSession.implicits._
-    buckets.groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, it: Iterator[HourCount], state: GroupState[CusumState]) =>
-          refs.get(et) match {
-            case None => Iterator.empty
-            case Some(CusumRef(nRef, totRef)) =>
-              var st = state.getOption
-                .getOrElse(CusumState(Long.MinValue, 0L, -1L, Long.MinValue, 0L))
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[CusumPoint]
-              it.toSeq.sortBy(_.bucket_us).foreach { hc =>
-                val from =
-                  if (st.lastUs == Long.MinValue) hc.bucket_us
-                  else st.lastUs + HourUs
-                var t = from
-                while (t <= hc.bucket_us) {
-                  val x = if (t == hc.bucket_us) hc.x else 0L
-                  val cum = st.cum + nRef * x - totRef
-                  val abs = math.abs(cum)
-                  st =
-                    if (abs > st.bestAbs) CusumState(t, cum, abs, t, cum)
-                    else CusumState(t, cum, st.bestAbs, st.bestUs, st.bestCum)
-                  out += CusumPoint(et, t, x, cum, st.bestUs, st.bestCum)
-                  t += HourUs
-                }
+    KeyedFold(buckets)(_.event_type, Some(Ordering.by(_.bucket_us))) {
+      (et, it, state: Option[CusumState]) =>
+        refs.get(et) match {
+          case None => (state, Iterator.empty)
+          case Some(CusumRef(nRef, totRef)) =>
+            var st = state
+              .getOrElse(CusumState(Long.MinValue, 0L, -1L, Long.MinValue, 0L))
+            val out = it.flatMap { hc =>
+              walkHours(st.lastUs, hc.bucket_us, hc.x).map { case (t, x) =>
+                val cum = st.cum + nRef * x - totRef
+                val abs = math.abs(cum)
+                st =
+                  if (abs > st.bestAbs) CusumState(t, cum, abs, t, cum)
+                  else CusumState(t, cum, st.bestAbs, st.bestUs, st.bestCum)
+                CusumPoint(et, t, x, cum, st.bestUs, st.bestCum)
               }
-              state.update(st)
-              out.iterator
-          }
-      }
+            }.toList
+            (Some(st), out.iterator)
+        }
+    }
   }
 }

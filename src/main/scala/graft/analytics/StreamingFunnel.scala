@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming funnel progression — the incremental twin of
   * [[EventQueries.qEventsFunnel]]: the batch query resolves each
@@ -37,29 +37,26 @@ object StreamingFunnel {
     * batch aggregate. */
   def progress(events: Dataset[EventIn]): Dataset[StageCrossed] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, StageCrossed](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[EventIn], state: GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          val out = it.toSeq.sortBy(e => (e.ts_us, e.event_id)).flatMap { e =>
-            (e.event_type, st) match {
-              case ("view", FunnelState(-1L, _, _)) =>
-                st = st.copy(t1 = e.ts_us)
-                Seq(StageCrossed(user, 1, e.ts_us))
-              case ("click", FunnelState(t1, -1L, _))
-                  if t1 >= 0L && e.ts_us > t1 =>
-                st = st.copy(t2 = e.ts_us)
-                Seq(StageCrossed(user, 2, e.ts_us))
-              case ("purchase", FunnelState(_, t2, -1L))
-                  if t2 >= 0L && e.ts_us > t2 =>
-                st = st.copy(t3 = e.ts_us)
-                Seq(StageCrossed(user, 3, e.ts_us))
-              case _ => Nil
-            }
+    KeyedFold(events)(_.user_id, Some(Ordering.by(e => (e.ts_us, e.event_id)))) {
+      (user, it, state: Option[FunnelState]) =>
+        var st = state.getOrElse(FunnelState(-1L, -1L, -1L))
+        val out = it.flatMap { e =>
+          (e.event_type, st) match {
+            case ("view", FunnelState(-1L, _, _)) =>
+              st = st.copy(t1 = e.ts_us)
+              Seq(StageCrossed(user, 1, e.ts_us))
+            case ("click", FunnelState(t1, -1L, _))
+                if t1 >= 0L && e.ts_us > t1 =>
+              st = st.copy(t2 = e.ts_us)
+              Seq(StageCrossed(user, 2, e.ts_us))
+            case ("purchase", FunnelState(_, t2, -1L))
+                if t2 >= 0L && e.ts_us > t2 =>
+              st = st.copy(t3 = e.ts_us)
+              Seq(StageCrossed(user, 3, e.ts_us))
+            case _ => Nil
           }
-          state.update(st)
-          out.iterator
-      }
+        }.toList
+        (Some(st), out.iterator)
+    }
   }
 }

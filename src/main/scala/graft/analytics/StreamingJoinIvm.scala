@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming JOIN-view maintenance — the incremental twin of
   * [[RelationalQueries.qAggJoinIvm]]: the batch query merges the
@@ -55,38 +55,33 @@ object StreamingJoinIvm {
 
   def monitor(evs: Dataset[JoinCdc]): Dataset[ViewDelta] = {
     import evs.sparkSession.implicits._
-    evs.groupByKey(_.orderkey)
-      .flatMapGroupsWithState[JoinState, ViewDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[JoinCdc], state: GroupState[JoinState]) =>
-          var st = state.getOption.getOrElse(JoinState(0L, 0L, 0L, 0L))
-          // per-custkey-touched accumulation: a batch that moves the
-          // order between customers must emit BOTH sides of the
-          // transfer, which a single (dn, dc) pair cannot represent
-          val d = scala.collection.mutable.LinkedHashMap
-            .empty[Long, (Long, Long)]
-          def add(ck: Long, n: Long, c: Long): Unit = if (n != 0L || c != 0L) {
-            val (pn, pc) = d.getOrElse(ck, (0L, 0L))
-            d(ck) = (pn + n, pc + c)
-          }
-          it.foreach { r =>
-            if (r.kind == "O") {
-              // before/after step delta: debit o·L from the customer
-              // the view currently credits, credit o'·L to the event's
-              add(st.custkey, -st.o * st.ln, -st.o * st.lcents)
-              st = st.copy(o = st.o + r.sign, custkey = r.custkey)
-              add(st.custkey, st.o * st.ln, st.o * st.lcents)
-            } else {
-              add(st.custkey, st.o * r.sign, st.o * r.sign * r.cents)
-              st = st.copy(ln = st.ln + r.sign,
-                lcents = st.lcents + r.sign * r.cents)
-            }
-          }
-          state.update(st)
-          d.iterator.collect {
-            case (ck, (dn, dc)) if dn != 0L || dc != 0L =>
-              ViewDelta(ck, dn, dc)
-          }
+    KeyedFold(evs)(_.orderkey) { (_, it, state: Option[JoinState]) =>
+      var st = state.getOrElse(JoinState(0L, 0L, 0L, 0L))
+      // per-custkey-touched accumulation: a batch that moves the
+      // order between customers must emit BOTH sides of the
+      // transfer, which a single (dn, dc) pair cannot represent
+      val d = scala.collection.mutable.LinkedHashMap
+        .empty[Long, (Long, Long)]
+      def add(ck: Long, n: Long, c: Long): Unit = if (n != 0L || c != 0L) {
+        val (pn, pc) = d.getOrElse(ck, (0L, 0L))
+        d(ck) = (pn + n, pc + c)
       }
+      it.foreach { r =>
+        if (r.kind == "O") {
+          // before/after step delta: debit o·L from the customer
+          // the view currently credits, credit o'·L to the event's
+          add(st.custkey, -st.o * st.ln, -st.o * st.lcents)
+          st = st.copy(o = st.o + r.sign, custkey = r.custkey)
+          add(st.custkey, st.o * st.ln, st.o * st.lcents)
+        } else {
+          add(st.custkey, st.o * r.sign, st.o * r.sign * r.cents)
+          st = st.copy(ln = st.ln + r.sign,
+            lcents = st.lcents + r.sign * r.cents)
+        }
+      }
+      (Some(st), d.iterator.collect {
+        case (ck, (dn, dc)) if dn != 0L || dc != 0L => ViewDelta(ck, dn, dc)
+      })
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming saturating balance — the incremental twin of
   * [[EventQueries.qEventsLedger]]: the batch query walks each user's
@@ -33,22 +33,18 @@ object StreamingLedger {
   def monitor(evs: Dataset[LedgerIn], cap: Long = 5000L,
       start: Long = 2500L): Dataset[LedgerOut] = {
     import evs.sparkSession.implicits._
-    evs.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LedgerState, LedgerOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (u: Long, it: Iterator[LedgerIn], state: GroupState[LedgerState]) =>
-          var st = state.getOption.getOrElse(
-            LedgerState(start, 0L, 0L, 0L, 0L))
-          it.toSeq.sortBy(e => (e.tsu, e.event_id)).foreach { r =>
-            val raw = st.b + r.d
-            val cl = math.max(0L, math.min(cap, raw))
-            st = LedgerState(cl, st.n + 1L,
-              st.fc + (if (raw < 0L) 1L else 0L),
-              st.cc + (if (raw > cap) 1L else 0L),
-              st.ab + math.abs(raw - cl))
-          }
-          state.update(st)
-          Iterator.single(LedgerOut(u, st.n, st.b, st.fc, st.cc, st.ab))
-      }
+    KeyedFold(evs)(_.user_id, Some(Ordering.by(e => (e.tsu, e.event_id)))) {
+      (u, it, state: Option[LedgerState]) =>
+        val st = it.foldLeft(state.getOrElse(
+            LedgerState(start, 0L, 0L, 0L, 0L))) { (st, r) =>
+          val raw = st.b + r.d
+          val cl = math.max(0L, math.min(cap, raw))
+          LedgerState(cl, st.n + 1L,
+            st.fc + (if (raw < 0L) 1L else 0L),
+            st.cc + (if (raw > cap) 1L else 0L),
+            st.ab + math.abs(raw - cl))
+        }
+        (Some(st), Iterator.single(LedgerOut(u, st.n, st.b, st.fc, st.cc, st.ab)))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming growth accounting — the incremental twin of
   * [[EventQueries.qEventsLifecycle]]: the batch query classifies every
@@ -50,28 +50,24 @@ object StreamingLifecycle {
     * micro-batch; state survives across batches. */
   def classify(events: Dataset[EventIn]): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, Transition](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[EventIn], state: GroupState[Long]) =>
-          var last = state.getOption.getOrElse(-1L)
-          val out = it.toSeq.sortBy(e => (e.ts_us, e.event_id))
-            .flatMap { e =>
-              val w = weekStartUs(e.ts_us)
-              if (last < 0L) {
-                last = w; Seq(Transition(user, w, "new"))
-              } else if (w <= last) Nil
-              else if (w == last + WeekUs) {
-                last = w; Seq(Transition(user, w, "retained"))
-              } else {
-                val churnWeek = last + WeekUs
-                last = w
-                Seq(Transition(user, churnWeek, "churned"),
-                  Transition(user, w, "resurrected"))
-              }
-            }
-          state.update(last)
-          out.iterator
-      }
+    KeyedFold(events)(_.user_id, Some(Ordering.by(e => (e.ts_us, e.event_id)))) {
+      (user, it, state: Option[Long]) =>
+        var last = state.getOrElse(-1L)
+        val out = it.flatMap { e =>
+          val w = weekStartUs(e.ts_us)
+          if (last < 0L) {
+            last = w; Seq(Transition(user, w, "new"))
+          } else if (w <= last) Nil
+          else if (w == last + WeekUs) {
+            last = w; Seq(Transition(user, w, "retained"))
+          } else {
+            val churnWeek = last + WeekUs
+            last = w
+            Seq(Transition(user, churnWeek, "churned"),
+              Transition(user, w, "resurrected"))
+          }
+        }.toList
+        (Some(last), out.iterator)
+    }
   }
 }

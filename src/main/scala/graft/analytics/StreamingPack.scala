@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sequence packing — the incremental twin of
   * [[PrepQueries.qPrepPack]]: the batch query turns a CLOSED corpus
@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * crawl that never closes needs the same manifest emitted
   * continuously as documents arrive. The global cursor (every doc's
   * stream offset) is exactly the kind of unbounded running state
-  * Structured Streaming's `flatMapGroupsWithState` owns: each LANE
-  * (parallel shard-writer) keeps one Long — the next free token
-  * offset — and every micro-batch appends its docs to the lane's
+  * Structured Streaming's keyed state ([[graft.operators.KeyedFold]])
+  * owns: each LANE (parallel shard-writer) keeps one Long — the next
+  * free token offset — and every micro-batch appends its docs to the lane's
   * stream, emitting the (block, doc, token-range) slices it can
   * already determine. Emission is append-only and final: a slice,
   * once emitted, never revises, because the cursor only moves forward.
@@ -62,18 +62,15 @@ object StreamingPack {
   def pack(docs: Dataset[DocTokens],
       blockSize: Long = 2048L): Dataset[BlockSlice] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.lane)
-      .flatMapGroupsWithState[Long, BlockSlice](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (lane: Int, it: Iterator[DocTokens], state: GroupState[Long]) =>
-          var g = state.getOption.getOrElse(0L)
-          val out = it.toSeq.sortBy(_.doc_id).flatMap { d =>
-            val start = g
-            g = start + d.n_tok + 1 // one separator token after each doc
-            sliceDoc(lane, d.doc_id, start, d.n_tok, blockSize)
-          }
-          state.update(g)
-          out.iterator
-      }
+    KeyedFold(docs)(_.lane, Some(Ordering.by(_.doc_id))) {
+      (lane, it, state: Option[Long]) =>
+        var g = state.getOrElse(0L)
+        val out = it.flatMap { d =>
+          val start = g
+          g = start + d.n_tok + 1 // one separator token after each doc
+          sliceDoc(lane, d.doc_id, start, d.n_tok, blockSize)
+        }.toList
+        (Some(g), out.iterator)
+    }
   }
 }

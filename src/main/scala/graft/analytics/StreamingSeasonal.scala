@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming seasonally-adjusted anomaly monitor — the incremental
   * twin of [[TsQueries.qTsAnomalySeasonal]]: the batch query flags
@@ -41,8 +41,6 @@ object StreamingSeasonal {
   case class SeasonalFlag(event_type: String, bucket_us: Long, x: Long,
       resid_milli: Long)
 
-  private val HourUs = 3600000000L
-
   /** Flag a stream of closed hourly buckets against per-key profiles
     * (keys without a profile are ignored). Works on a static Dataset
     * too, which is how the spec cross-checks it against the batch
@@ -50,43 +48,32 @@ object StreamingSeasonal {
   def monitor(buckets: Dataset[HourCount],
       profiles: Map[String, SeasonalProfile]): Dataset[SeasonalFlag] = {
     import buckets.sparkSession.implicits._
-    buckets.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Long, SeasonalFlag](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, it: Iterator[HourCount], state: GroupState[Long]) =>
-          profiles.get(et) match {
-            case None => Iterator.empty
-            case Some(p) =>
-              var lastUs = state.getOption.getOrElse(Long.MinValue)
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[SeasonalFlag]
-              it.toSeq.sortBy(_.bucket_us).foreach { hc =>
-                val from =
-                  if (lastUs == Long.MinValue) hc.bucket_us
-                  else lastUs + HourUs
-                var t = from
-                while (t <= hc.bucket_us) {
-                  val x = if (t == hc.bucket_us) hc.x else 0L
-                  val hod = (t / HourUs) % 24
-                  p.meanMilliByHod.get(hod).foreach { mean =>
-                    val resid = x * 1000L - mean
-                    if (resid * resid * p.n > 9L * p.ssr)
-                      out += SeasonalFlag(et, t, x, resid)
-                  }
-                  t += HourUs
-                }
-                // monotonic cursor: a bucket at or before the cursor
-                // (out-of-order ACROSS micro-batches — in-batch order
-                // is handled by the sort above) is DROPPED, never
-                // rewinds the cursor — a rewind would re-zero-fill and
-                // re-flag hours already processed (duplicate output).
-                // Matches [[StreamingCusum]], whose cursor only ever
-                // advances inside the fill loop.
-                lastUs = math.max(lastUs, hc.bucket_us)
-              }
-              state.update(lastUs)
-              out.iterator
-          }
-      }
+    import StreamingCusum.{HourUs, walkHours}
+    KeyedFold(buckets)(_.event_type, Some(Ordering.by(_.bucket_us))) {
+      (et, it, state: Option[Long]) =>
+        profiles.get(et) match {
+          case None => (state, Iterator.empty)
+          case Some(p) =>
+            var lastUs = state.getOrElse(Long.MinValue)
+            val out = it.flatMap { hc =>
+              val flags = walkHours(lastUs, hc.bucket_us, hc.x).flatMap {
+                case (t, x) =>
+                  p.meanMilliByHod.get((t / HourUs) % 24)
+                    .map(mean => SeasonalFlag(et, t, x, x * 1000L - mean))
+                    .filter(f => f.resid_milli * f.resid_milli * p.n > 9L * p.ssr)
+              }.toList
+              // monotonic cursor: a bucket at or before the cursor
+              // (out-of-order ACROSS micro-batches — in-batch order
+              // is handled by the fold's sort) is DROPPED, never
+              // rewinds the cursor — a rewind would re-zero-fill and
+              // re-flag hours already processed (duplicate output).
+              // Matches [[StreamingCusum]], whose cursor only ever
+              // advances inside the fill loop.
+              lastUs = math.max(lastUs, hc.bucket_us)
+              flags
+            }.toList
+            (Some(lastUs), out.iterator)
+        }
+    }
   }
 }

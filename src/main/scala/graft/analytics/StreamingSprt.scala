@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sequential test — the live form of
   * [[RelationalQueries.qStatsSprt]], which is where an SPRT belongs
@@ -38,30 +38,26 @@ object StreamingSprt {
 
   def monitor(obs: Dataset[SprtObs]): Dataset[SprtStatus] = {
     import obs.sparkSession.implicits._
-    obs.groupByKey(_.event_type)
-      .flatMapGroupsWithState[SprtState, SprtStatus](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, it: Iterator[SprtObs], state: GroupState[SprtState]) =>
-          var st = state.getOption.getOrElse(SprtState(0L, 0L, -1L, 0L))
-          it.toSeq.sortBy(o => (o.tsu, o.event_id)).foreach { o =>
+    KeyedFold(obs)(_.event_type, Some(Ordering.by(o => (o.tsu, o.event_id)))) {
+      (et, it, state: Option[SprtState]) =>
+        val st = it.foldLeft(state.getOrElse(SprtState(0L, 0L, -1L, 0L))) {
+          (st, o) =>
             val n = st.n + 1L
             val s = st.s + o.succ
-            st =
-              if (st.stopN >= 0L) SprtState(n, s, st.stopN, st.stopLlr)
-              else {
-                val llr = s * WIN + (n - s) * LOSS
-                if (llr >= UP || llr <= LO) SprtState(n, s, n, llr)
-                else SprtState(n, s, -1L, 0L)
-              }
-          }
-          state.update(st)
-          val stopped = st.stopN >= 0L
-          val llr = if (stopped) st.stopLlr
-                    else st.s * WIN + (st.n - st.s) * LOSS
-          val dec = if (llr >= UP) "H1"
-                    else if (llr <= LO) "H0" else "continue"
-          Iterator.single(SprtStatus(et, st.n, stopped,
-            if (stopped) st.stopN else st.n, llr, dec))
-      }
+            if (st.stopN >= 0L) SprtState(n, s, st.stopN, st.stopLlr)
+            else {
+              val llr = s * WIN + (n - s) * LOSS
+              if (llr >= UP || llr <= LO) SprtState(n, s, n, llr)
+              else SprtState(n, s, -1L, 0L)
+            }
+        }
+        val stopped = st.stopN >= 0L
+        val llr = if (stopped) st.stopLlr
+                  else st.s * WIN + (st.n - st.s) * LOSS
+        val dec = if (llr >= UP) "H1"
+                  else if (llr <= LO) "H0" else "continue"
+        (Some(st), Iterator.single(SprtStatus(et, st.n, stopped,
+          if (stopped) st.stopN else st.n, llr, dec)))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.analytics
 
+import graft.operators.KeyedFold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming rate limiter — the incremental twin
   * [[EventQueries.qEventsThrottle]]'s scaladoc promises: the batch
@@ -28,24 +28,20 @@ object StreamingThrottle {
   def monitor(evs: Dataset[ThrottleIn],
       minGapUs: Long = 86400000000L): Dataset[ThrottleKept] = {
     import evs.sparkSession.implicits._
-    evs.groupByKey(_.user_id)
-      .flatMapGroupsWithState[ThrottleState, ThrottleKept](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (u: Long, it: Iterator[ThrottleIn],
-            state: GroupState[ThrottleState]) =>
-          var st = state.getOption.orNull
-          val out = it.toSeq.sortBy(e => (e.tsu, e.event_id)).flatMap { r =>
-            if (st == null) {
-              st = ThrottleState(r.tsu, 1L)
-              Some(ThrottleKept(u, r.event_id, r.tsu, 1L, None))
-            } else if (r.tsu >= st.lastKept + minGapUs) {
-              val gap = (r.tsu - st.lastKept) / 1000000L
-              st = ThrottleState(r.tsu, st.rank + 1L)
-              Some(ThrottleKept(u, r.event_id, r.tsu, st.rank, Some(gap)))
-            } else None
-          }
-          state.update(st)
-          out.iterator
-      }
+    KeyedFold(evs)(_.user_id, Some(Ordering.by(e => (e.tsu, e.event_id)))) {
+      (u, it, state: Option[ThrottleState]) =>
+        var st = state.orNull
+        val out = it.flatMap { r =>
+          if (st == null) {
+            st = ThrottleState(r.tsu, 1L)
+            Some(ThrottleKept(u, r.event_id, r.tsu, 1L, None))
+          } else if (r.tsu >= st.lastKept + minGapUs) {
+            val gap = (r.tsu - st.lastKept) / 1000000L
+            st = ThrottleState(r.tsu, st.rank + 1L)
+            Some(ThrottleKept(u, r.event_id, r.tsu, st.rank, Some(gap)))
+          } else None
+        }.toList
+        (Option(st), out.iterator)
+    }
   }
 }

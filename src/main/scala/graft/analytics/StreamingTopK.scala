@@ -1,8 +1,8 @@
 package graft.analytics
 
-import graft.operators.SpaceSaving
+import graft.operators.{KeyedFold, SpaceSaving}
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import scala.collection.mutable
 
 /** Streaming heavy hitters — the incremental twin of the SpaceSaving
@@ -34,18 +34,13 @@ object StreamingTopK {
       : Dataset[TopKRow] = {
     import obs.sparkSession.implicits._
     val ss = new SpaceSaving(capacity)
-    obs.groupByKey(_.group)
-      .flatMapGroupsWithState[Map[String, Long], TopKRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[KeyObs],
-         state: GroupState[Map[String, Long]]) =>
-          val buf = mutable.Map(
-            state.getOption.getOrElse(Map.empty[String, Long]).toSeq: _*)
-          it.foreach(o => ss.reduce(buf, o.key))
-          state.update(buf.toMap)
-          buf.toSeq.sortBy { case (key, v) => (-v, key) }.take(k)
-            .zipWithIndex.iterator
-            .map { case ((key, v), i) => TopKRow(g, i + 1, key, v) }
-      }
+    KeyedFold(obs)(_.group, mode = OutputMode.Update) {
+      (g, it, state: Option[Map[String, Long]]) =>
+        val buf = mutable.Map(state.getOrElse(Map.empty[String, Long]).toSeq: _*)
+        it.foreach(o => ss.reduce(buf, o.key))
+        (Some(buf.toMap), buf.toSeq.sortBy { case (key, v) => (-v, key) }
+          .take(k).zipWithIndex.iterator
+          .map { case ((key, v), i) => TopKRow(g, i + 1, key, v) })
+    }
   }
 }

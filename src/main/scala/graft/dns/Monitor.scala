@@ -1,31 +1,25 @@
 package graft.dns
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import graft.operators.KeyedFold
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-
 
 /** Per-client response-code monitoring over the DNS stream — the SIEM
   * question downstream consumers of these logs actually ask: a client
   * suddenly resolving many NXDOMAINs is the classic DGA-malware /
   * exfiltration beacon signal.
   *
-  * Built on the arbitrary-state API's OTHER primitive, complementing
-  * [[Sessions.SessionProcessor]] (ValueState + event-time timers):
-  * a `MapState[rcode, count]` per client — one map entry per (active
-  * client, distinct rcode; the rcode alphabet is ~10 values).
+  * A keyed fold ([[graft.operators.KeyedFold]]) over a
+  * `Map[rcode, count]` state per client — one map entry per (active
+  * client, distinct rcode; the rcode alphabet is ~10 values). The
+  * counts are order-free, so no in-batch order is imposed, and they
+  * survive micro-batch boundaries and checkpointed query restarts on
+  * the default state store.
   *
-  * State TTL: the API bounds idle-client state with a per-state TTL
-  * (`TTLConfig(duration)` instead of `TTLConfig.NONE` in `init` —
-  * a one-line swap). TTL forces `TimeMode.ProcessingTime`, and a
-  * ProcessingTime-mode operator reports "another batch needed" on
-  * every trigger (TTL eviction bookkeeping), so the query re-batches
-  * continuously under the default trigger and `Trigger.AvailableNow`
-  * NEVER terminates — fine under a production rate-limited trigger
-  * (`Trigger.ProcessingTime(interval)`), hostile to drain-and-stop
-  * harnesses. The operator therefore ships in `TimeMode.None` and a
-  * deployment that wants TTL opts in with the interval trigger it
-  * would run anyway.
+  * State bound: one map per client that ever queried, kept for the
+  * life of the query — there is no idle-client expiry. The fold needs
+  * no particular state store and no time mode, so every trigger works,
+  * `Trigger.AvailableNow` included.
   *
   * Emission contract (deterministic, testable): an alert row is
   * emitted for a client each micro-batch in which its NXDOMAIN
@@ -38,44 +32,24 @@ object Monitor {
   final case class RcodeAlert(
       srcaddr: String, nxdomain: Long, total: Long)
 
-  final class RcodeProcessor(threshold: Long)
-      extends StatefulProcessor[String, (String, String), RcodeAlert] {
-    @transient private var counts: MapState[String, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[String, Long]("rcode_counts",
-        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[(String, String)],
-        timers: TimerValues): Iterator[RcodeAlert] = {
-      rows.foreach { case (_, rcode) =>
-        val cur = if (counts.containsKey(rcode)) counts.getValue(rcode) else 0L
-        counts.updateValue(rcode, cur + 1L)
-      }
-      val nx =
-        if (counts.containsKey("NXDOMAIN")) counts.getValue("NXDOMAIN") else 0L
-      if (nx >= threshold) {
-        var total = 0L
-        counts.values().foreach(total += _)
-        Iterator.single(RcodeAlert(key, nx, total))
-      } else Iterator.empty
-    }
-  }
-
   /** NXDOMAIN burst alerts over clean decoded records
-    * (`Pipeline.decodedRecords` filtered to `reason IS NULL`).
-    * Requires the RocksDB state store provider, like every
-    * transformWithState operator. */
+    * (`Pipeline.decodedRecords` filtered to `reason IS NULL`). */
   def nxdomainAlerts(cleanRecords: DataFrame,
       threshold: Long): Dataset[RcodeAlert] = {
     val spark = cleanRecords.sparkSession
     import spark.implicits._
-    Decode.projectDnsFields(cleanRecords)
+    val rcodes = Decode.projectDnsFields(cleanRecords)
       .select(col("srcaddr"), col("rcode"))
       .as[(String, String)]
-      .groupByKey(_._1)
-      .transformWithState(new RcodeProcessor(threshold),
-        TimeMode.None(), OutputMode.Append())
+    KeyedFold(rcodes)(_._1) { (key, it, state: Option[Map[String, Long]]) =>
+      val counts = it.foldLeft(state.getOrElse(Map.empty[String, Long])) {
+        case (m, (_, rcode)) => m.updated(rcode, m.getOrElse(rcode, 0L) + 1L)
+      }
+      val nx = counts.getOrElse("NXDOMAIN", 0L)
+      val alerts =
+        if (nx < threshold) Iterator.empty
+        else Iterator.single(RcodeAlert(key, nx, counts.values.sum))
+      (Some(counts), alerts)
+    }
   }
 }

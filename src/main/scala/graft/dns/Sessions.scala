@@ -1,14 +1,14 @@
 package graft.dns
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import graft.operators.KeyedFold
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import java.sql.Timestamp
 
-/** Per-client sessionization over the DNS stream — the custom-state
-  * streaming operator family (KeyValueGroupedDataset.
-  * flatMapGroupsWithState) plus the built-in `session_window`
-  * equivalent for the plain gap-session case.
+/** Per-client sessionization over the DNS stream — a gap-session fold
+  * on the keyed-fold kernel ([[graft.operators.KeyedFold]]) plus the
+  * built-in `session_window` equivalent for the plain gap-session
+  * case.
   *
   * State is bounded by watermark + event-time timeout: a session closes
   * when the gap elapses (relative to the event-time watermark), emits
@@ -26,135 +26,41 @@ object Sessions {
   /** Public: the state encoder's generated code instantiates it. */
   final case class SessionState(start: Long, last: Long, n: Long)
 
-  /** The gap-session fold shared by BOTH sessionizers: feed sorted
-    * event times into the open session, closing it whenever the gap
-    * elapses. One definition makes the two APIs' agreement structural
-    * (the spec's equivalence check can then only catch harness bugs,
-    * not silent divergence of copied logic). Returns the open session
-    * after the batch and the sessions closed within it, in order. */
-  private def foldSessions(key: String, sortedTimes: Array[Long],
-      open: Option[SessionState], gapMs: Long)
-    : (Option[SessionState], List[SessionUpdate]) = {
-    var closed = List.empty[SessionUpdate]
-    var cur = open
-    sortedTimes.foreach { t =>
-      cur match {
-        case Some(s) if t - s.last <= gapMs =>
-          cur = Some(s.copy(last = math.max(s.last, t), n = s.n + 1))
-        case Some(s) =>
-          closed ::= SessionUpdate(
-            key, new Timestamp(s.start), new Timestamp(s.last), s.n)
-          cur = Some(SessionState(t, t, 1))
-        case None =>
-          cur = Some(SessionState(t, t, 1))
-      }
-    }
-    (cur, closed.reverse)
-  }
+  private def closed(key: String, s: SessionState): SessionUpdate =
+    SessionUpdate(key, new Timestamp(s.start), new Timestamp(s.last), s.n)
 
   /** Gap-based sessions via custom state. Input: clean decoded records
-    * (Pipeline.decodedRecords filtered to reason IS NULL). */
+    * (Pipeline.decodedRecords filtered to reason IS NULL). Each batch
+    * feeds a client's event times, in order, into its open session,
+    * closing it whenever the gap elapses; the open session's deadline
+    * is its last event + the gap. */
   def sessionize(cleanRecords: DataFrame, gapSeconds: Long,
       watermarkDelay: String = "10 minutes"): Dataset[SessionUpdate] = {
     val spark = cleanRecords.sparkSession
     import spark.implicits._
     val gapMs = gapSeconds * 1000L
-
-    val keyed = Decode.projectDnsFields(cleanRecords)
+    val events = Decode.projectDnsFields(cleanRecords)
       .withWatermark("query_ts", watermarkDelay)
       .select(col("srcaddr"), col("query_ts"))
       .as[(String, Timestamp)]
-      .groupByKey(_._1)
-
-    keyed.flatMapGroupsWithState[SessionState, SessionUpdate](
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: String, events: Iterator[(String, Timestamp)],
-       state: GroupState[SessionState]) =>
-        if (state.hasTimedOut) {
-          val s = state.get
-          state.remove()
-          Iterator.single(SessionUpdate(
-            key, new Timestamp(s.start), new Timestamp(s.last), s.n))
-        } else {
-          val times = events.map(_._2.getTime).toArray.sorted
-          val (cur, closed) = foldSessions(key, times, state.getOption, gapMs)
-          cur.foreach { s =>
-            state.update(s)
-            state.setTimeoutTimestamp(s.last + gapMs)
+    KeyedFold(events)(_._1, Some(Ordering.by(_._2.getTime)),
+        expiry = Some(KeyedFold.Expiry[String, SessionState, SessionUpdate](
+          s => Some(s.last + gapMs),
+          (key, s) => Iterator.single(closed(key, s))))) {
+      (key, it, open: Option[SessionState]) =>
+        var cur = open
+        val done = it.map(_._2.getTime).flatMap { t =>
+          cur match {
+            case Some(s) if t - s.last <= gapMs =>
+              cur = Some(s.copy(last = math.max(s.last, t), n = s.n + 1))
+              None
+            case prev =>
+              cur = Some(SessionState(t, t, 1))
+              prev.map(closed(key, _))
           }
-          closed.iterator
-        }
+        }.toList
+        (cur, done.iterator)
     }
-  }
-
-  /** The same gap-session semantics on Spark 4's arbitrary-state API
-    * (`transformWithState`): a `ValueState` holds the open session and
-    * an explicit event-time TIMER (registered at `last + gap`, deleted
-    * and re-registered on extension) closes it when the watermark
-    * passes — timers replace the old API's single implicit timeout and
-    * compose with additional state variables (the API's point: one
-    * processor can hold value/list/map state with per-state TTL).
-    * Identical output to [[sessionize]] — SessionsSpec runs both on
-    * the same stream and compares. State is one entry + one timer per
-    * active client; both are freed on close, so the 100 TB posture
-    * matches [[sessionize]]. */
-  final class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[String, (String, Timestamp), SessionUpdate] {
-    @transient private var sess: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[SessionState]("session",
-        Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[(String, Timestamp)],
-        timers: TimerValues): Iterator[SessionUpdate] = {
-      val times = rows.map(_._2.getTime).toArray.sorted
-      val open = if (sess.exists()) Some(sess.get()) else None
-      val prevDeadline = open.map(_.last + gapMs)
-      val (cur, closed) = foldSessions(key, times, open, gapMs)
-      cur.foreach { s =>
-        sess.update(s)
-        val deadline = s.last + gapMs
-        if (!prevDeadline.contains(deadline)) {
-          prevDeadline.foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(deadline)
-        }
-      }
-      closed.iterator
-    }
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[SessionUpdate] = {
-      if (!sess.exists()) return Iterator.empty
-      val s = sess.get()
-      // a stale timer from before an in-batch extension: ignore (the
-      // live deadline's timer is still registered)
-      if (expired.getExpiryTimeInMs() < s.last + gapMs) Iterator.empty
-      else {
-        sess.clear()
-        Iterator.single(SessionUpdate(
-          key, new Timestamp(s.start), new Timestamp(s.last), s.n))
-      }
-    }
-  }
-
-  /** [[sessionize]] on the transformWithState API. Requires the
-    * RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`) — the only backend the
-    * arbitrary-state operator supports. */
-  def sessionizeTws(cleanRecords: DataFrame, gapSeconds: Long,
-      watermarkDelay: String = "10 minutes"): Dataset[SessionUpdate] = {
-    val spark = cleanRecords.sparkSession
-    import spark.implicits._
-    Decode.projectDnsFields(cleanRecords)
-      .withWatermark("query_ts", watermarkDelay)
-      .select(col("srcaddr"), col("query_ts"))
-      .as[(String, Timestamp)]
-      .groupByKey(_._1)
-      .transformWithState(new SessionProcessor(gapSeconds * 1000L),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Same sessions via the built-in `session_window` — the

@@ -1,7 +1,10 @@
 package graft.analytics
 
+import java.sql.Timestamp
+
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
@@ -9,10 +12,16 @@ import scala.collection.mutable
   * must equal the batch last-writer-wins over the same events, emission
   * must be compacted (one row per changed key per batch), late/replayed
   * events must not regress state, and state must survive a checkpoint
-  * restart. */
+  * restart. Every event carries one timestamp, 5 s after the epoch:
+  * inside the default 10 s watermark delay, so the watermark never
+  * advances — no event is late, no tombstone expires, and no no-data
+  * batch shifts the batch ids the compaction check reads. */
 class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
-  import StreamingCdc.{ChangeEvent, CurrentRow}
+  import StreamingCdc.{CurrentRow, TimedChangeEvent}
+
+  private val horizon = java.time.Duration.ofHours(1)
+  private val ts0 = 5000L
 
   /** Batch reference: fold the events in APPLIED order (batches
     * concatenated, seq-sorted within each batch) under the operator's
@@ -21,7 +30,7 @@ class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
     * value in the tombstone. Mirrors the documented semantics
     * including cross-batch late-drop (a late upsert arriving after a
     * higher-seq delete is DROPPED, not merged). */
-  private def reference(applied: Seq[ChangeEvent]): Map[Long, CurrentRow] = {
+  private def reference(applied: Seq[TimedChangeEvent]): Map[Long, CurrentRow] = {
     val st = mutable.Map[Long, (Long, Double, Boolean)]()
     applied.foreach { e =>
       val (seq, v, _) = st.getOrElse(e.k, (Long.MinValue, 0.0, true))
@@ -38,8 +47,12 @@ class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
     val in = MemoryStream[(Long, Long, String, Double)]
     val emitted = mutable.ArrayBuffer[(Long, CurrentRow)]()
     var batchId = 0L
+    // local val, not the spec's field: the map closure must not capture
+    // the (non-serializable) ScalaTest suite
+    val t0 = ts0
     val q = StreamingCdc.materialize(
-        in.toDS().map { case (k, s, o, v) => ChangeEvent(k, s, o, v) })
+        in.toDS().map { case (k, s, o, v) =>
+          TimedChangeEvent(k, s, o, v, new Timestamp(t0)) }, horizon)
       .writeStream.outputMode("append").foreachBatch {
         (df: org.apache.spark.sql.Dataset[CurrentRow], bid: Long) =>
           emitted.synchronized { emitted ++= df.collect().map(bid -> _) }
@@ -59,8 +72,8 @@ class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
     Seq(b1, b2, b3).foreach { b => in.addData(b); q.processAllAvailable() }
     q.stop()
     // reference replays in APPLIED order: per batch, seq-sorted
-    val applied = Seq(b1, b2, b3).flatMap(
-      _.map { case (k, s, o, v) => ChangeEvent(k, s, o, v) }.sortBy(_.seq))
+    val applied = Seq(b1, b2, b3).flatMap(_.map { case (k, s, o, v) =>
+      TimedChangeEvent(k, s, o, v, new Timestamp(ts0)) }.sortBy(_.seq))
     val want = reference(applied)
     // latest emission per key == batch reference
     val got = emitted.synchronized {
@@ -101,17 +114,20 @@ class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
       // the transport's monotone offsets rule out anyway); shuffling
       // makes late stragglers arrive across batch boundaries naturally
       val seqs = rnd.shuffle((1 to 40).toList)
-      val events = seqs.map(sq => ChangeEvent(
+      val events = seqs.map(sq => TimedChangeEvent(
         k = rnd.nextInt(6).toLong,
         seq = sq.toLong,
         op = if (rnd.nextInt(4) == 0) "D" else "U",
-        value = rnd.nextInt(100).toDouble))
+        value = rnd.nextInt(100).toDouble,
+        ts = new Timestamp(ts0)))
       val batches = events.grouped(
         math.max(1, events.length / nBatches)).toSeq
       val in = MemoryStream[(Long, Long, String, Double)]
       val emitted = mutable.ArrayBuffer[CurrentRow]()
+      val t0 = ts0
       val q = StreamingCdc.materialize(
-          in.toDS().map { case (k, s, o, v) => ChangeEvent(k, s, o, v) })
+          in.toDS().map { case (k, s, o, v) =>
+            TimedChangeEvent(k, s, o, v, new Timestamp(t0)) }, horizon)
         .writeStream.outputMode("append").foreachBatch {
           (df: org.apache.spark.sql.Dataset[CurrentRow], _: Long) =>
             emitted.synchronized { emitted ++= df.collect() }
@@ -138,8 +154,9 @@ class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
     def runOnce(): Unit = {
       val src = spark.readStream
         .schema("k BIGINT, seq BIGINT, op STRING, value DOUBLE")
-        .json(inDir.toString).as[ChangeEvent]
-      val q = StreamingCdc.materialize(src)
+        .json(inDir.toString)
+        .withColumn("ts", lit(new Timestamp(ts0))).as[TimedChangeEvent]
+      val q = StreamingCdc.materialize(src, horizon)
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch {

@@ -15,7 +15,7 @@ import scala.collection.mutable
 class StreamingCdcTwsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
   import StreamingCdc.CurrentRow
-  import StreamingCdcTws.TimedChangeEvent
+  import StreamingCdc.TimedChangeEvent
 
   private val providerKey = "spark.sql.streaming.stateStore.providerClass"
   private val rocksDb =
@@ -39,7 +39,7 @@ class StreamingCdcTwsSpec extends AnyFunSuite with SparkTestBase {
     val base = 1700000000000L
     val in = MemoryStream[(Long, Long, String, Double, Long)]
     val out = mutable.ArrayBuffer[CurrentRow]()
-    val q = StreamingCdcTws.materialize(
+    val q = StreamingCdc.materialize(
         in.toDS().map { case (k, s, o, v, sec) =>
           TimedChangeEvent(k, s, o, v, new Timestamp(base + sec * 1000L)) },
         horizon, watermarkDelay = "0 seconds")

@@ -65,54 +65,6 @@ class SessionsSpec extends AnyFunSuite with SparkTestBase {
       ("2023-10-15 14:05:00.0", "2023-10-15 14:05:00.0", 1L)))
   }
 
-  test("transformWithState sessionizer agrees with flatMapGroupsWithState") {
-    // Same input protocol as the fMGWS test: an in-batch gap close plus
-    // a watermark-driven timer close. The arbitrary-state operator only
-    // runs on the RocksDB provider; restore the default after.
-    implicit val sc = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[String]
-      val clean = Pipeline.decodedRecords(
-        Pipeline.parseEnvelopes(stream.toDS())).filter(col("reason").isNull)
-      val sessions = Sessions.sessionizeTws(clean, gapSeconds = 60,
-        watermarkDelay = "0 seconds")
-      val collected = mutable.ArrayBuffer[Sessions.SessionUpdate]()
-      val q = sessions.writeStream.foreachBatch {
-        (df: org.apache.spark.sql.Dataset[Sessions.SessionUpdate], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-      }.start()
-      stream.addData(envelope("t0",
-        record("10.0.0.1", "2023-10-15T14:00:00Z"),
-        record("10.0.0.1", "2023-10-15T14:00:30Z"),
-        record("10.0.0.1", "2023-10-15T14:05:00Z")))
-      q.processAllAvailable()
-      stream.addData(envelope("t1", record("10.0.0.9", "2023-10-15T15:00:00Z")))
-      q.processAllAvailable()
-      stream.addData(envelope("t2", record("10.0.0.9", "2023-10-15T16:00:00Z")))
-      q.processAllAvailable()
-      q.stop()
-      val byStart = collected.synchronized {
-        collected.filter(_.srcaddr == "10.0.0.1")
-          .sortBy(_.session_start.getTime)
-      }
-      // identical output to the flatMapGroupsWithState path's test
-      assert(byStart.map(s => (s.session_start.toString,
-        s.session_end.toString, s.n_queries)) === Seq(
-        ("2023-10-15 14:00:00.0", "2023-10-15 14:00:30.0", 2L),
-        ("2023-10-15 14:05:00.0", "2023-10-15 14:05:00.0", 1L)))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("nxdomain monitor: MapState counts cross batches, threshold gates alerts") {
     implicit val sc = spark.sqlContext
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
