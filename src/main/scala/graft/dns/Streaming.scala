@@ -1,12 +1,16 @@
 package graft.dns
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
 import java.net.{DatagramPacket, DatagramSocket, InetAddress}
 import java.nio.charset.StandardCharsets
@@ -178,43 +182,60 @@ object Streaming {
     }
 
     /** Sends the lines of every clean row of a [[Pipeline.routed]]
-      * frame from inside the scan that computes it, and passes on the
-      * other rows — quarantined records and rejected envelopes —
-      * without their (null) `lines`, adding each to `quarantined` or
-      * `rejected` as it goes. Nothing is sent or counted until an action
-      * runs the returned frame; each computation of a partition sends
-      * its lines and adds its counts again, so the counts are
-      * at-least-once: a retry can raise a count but never make a zero
-      * count non-zero. */
+      * frame from inside the pass over its internal rows that computes
+      * it, and passes on the other rows — quarantined records and
+      * rejected envelopes — without `lines`, adding each to
+      * `quarantined` or `rejected` as it goes. Nothing is sent or
+      * counted until an action runs the returned RDD; each computation
+      * of a partition sends its lines and adds its counts again, so the
+      * counts are at-least-once: a retry can raise a count but never
+      * make a zero count non-zero. */
     private[dns] def sendRouted(routed: DataFrame, host: String,
         port: Int, quarantined: LongAccumulator,
-        rejected: LongAccumulator): DataFrame = {
+        rejected: LongAccumulator): RDD[InternalRow] = {
+      val fields = routed.schema.fields
       val lines = routed.schema.fieldIndex("lines")
       val reason = routed.schema.fieldIndex("reason")
       val rejectReason = routed.schema.fieldIndex("reject_reason")
-      val side = StructType(routed.schema.filterNot(_.name == "lines"))
-      routed.mapPartitions { (rows: Iterator[Row]) =>
+      val sideColumns = fields.indices.filter(_ != lines)
+        .map(i => BoundReference(i, fields(i).dataType, fields(i).nullable))
+      routed.queryExecution.toRdd.mapPartitions { rows =>
         val out = new Datagrams(host, port, 30, appendNul = true)
         TaskContext.get().addTaskCompletionListener[Unit](_ => out.close())
+        val side = UnsafeProjection.create(sideColumns)
         rows.filter { r =>
-          if (!r.isNullAt(lines)) r.getSeq[String](lines).foreach(out.send)
-          else if (!r.isNullAt(rejectReason)) rejected.add(1)
+          if (!r.isNullAt(lines)) {
+            val ls = r.getArray(lines)
+            var i = 0
+            while (i < ls.numElements()) { out.send(ls.getUTF8String(i)); i += 1 }
+          } else if (!r.isNullAt(rejectReason)) rejected.add(1)
           else if (!r.isNullAt(reason)) quarantined.add(1)
           r.isNullAt(lines)
-        }.map(r => Row.fromSeq(r.toSeq.patch(lines, Nil, 1)))
-      }(Encoders.row(side))
+        }.map(r => side(r).copy(): InternalRow)
+      }
     }
 
-    /** One partition's socket and framing. */
+    /** One partition's socket and framing: `<pri>`, the line's UTF-8
+      * bytes and the NUL, copied into one buffer (grown when a line
+      * needs more) and sent through one reused packet. */
     private final class Datagrams(host: String, port: Int, priority: Int,
         appendNul: Boolean) {
       private val socket = new DatagramSocket()
-      private val addr = InetAddress.getByName(host)
-      private val nul = if (appendNul) "\u0000" else ""
-      def send(line: String): Unit = {
-        val payload = s"<$priority>$line$nul".getBytes(StandardCharsets.UTF_8)
-        socket.send(new DatagramPacket(payload, payload.length, addr, port))
+      private val prefix = s"<$priority>".getBytes(StandardCharsets.UTF_8)
+      private var buf = java.util.Arrays.copyOf(prefix, 1024)
+      private val packet =
+        new DatagramPacket(buf, 0, InetAddress.getByName(host), port)
+      def send(line: UTF8String): Unit = {
+        val end = prefix.length + line.numBytes
+        val length = if (appendNul) end + 1 else end
+        if (length > buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.max(length, 2 * buf.length))
+        line.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + prefix.length)
+        if (appendNul) buf(end) = 0
+        packet.setData(buf, 0, length)
+        socket.send(packet)
       }
+      def send(line: String): Unit = send(UTF8String.fromString(line))
       def close(): Unit = socket.close()
     }
   }
@@ -222,21 +243,25 @@ object Streaming {
   /** Full streaming job: envelope stream → pipeline → UDP lines +
     * parquet dead-letter/rejects, with checkpointed progress.
     *
-    * One scan per micro-batch: the batch's [[Pipeline.routed]] frame is
-    * computed once, by a `noop` action. Inside that scan
-    * [[UdpSyslogSink]] sends each clean record's lines, and passes on,
-    * counted by kind, only the side rows (poison records and rejected
-    * envelopes), which are persisted until the batch is written. A
-    * dead-letter output is written only when its count is non-zero, as
-    * one parquet file (`coalesce(1)` over the cache), so a clean batch
-    * runs one Spark job and writes nothing, and a batch with dead
-    * letters adds one single-task write per non-empty output, however
-    * many partitions it scanned; a batch of nothing but poison writes
-    * all its quarantine rows in that one task. The counts are only
-    * compared with zero: a retried task adds its rows again, which
+    * The stream is routed once per query: [[Pipeline.routed]] is applied
+    * to `envelopes` before `writeStream`, so its projection is analyzed
+    * when the query starts, and each micro-batch arrives as routed rows.
+    *
+    * One pass per micro-batch: one RDD action runs
+    * [[UdpSyslogSink.sendRouted]] over the batch's internal rows. It
+    * sends each clean record's lines, and passes on, counted by kind,
+    * only the side rows (poison records and rejected envelopes), which
+    * are kept as an RDD block (MEMORY_AND_DISK) until the batch is
+    * written. A dead-letter output is written only when its count is
+    * non-zero, as one parquet file (`coalesce(1)` over those blocks), so
+    * a clean batch runs one Spark job and writes nothing, and a batch
+    * with dead letters adds one single-task write per non-empty output,
+    * however many partitions it scanned; a batch of nothing but poison
+    * writes all its quarantine rows in that one task. The counts are
+    * only compared with zero: a retried task adds its rows again, which
     * cannot make a zero count non-zero, and a replayed batch reads the
     * same offsets, so it makes the same write decisions. The spool is
-    * read once and each envelope parsed once; no cache holds the clean
+    * read once and each envelope parsed once; nothing holds the clean
     * records.
     *
     * The parquet side outputs are IDEMPOTENT under replay: each batch
@@ -251,23 +276,22 @@ object Streaming {
     * does not exist until some batch has written one.
     *
     * The UDP wire is at-least-once and fire-and-forget: a replayed
-    * batch, a retried task, or a side-row cache block lost and
-    * recomputed re-sends that partition's datagrams; downstream
-    * [[dedupRecords]] absorbs the duplicates.
+    * batch, a retried task, or a side-row block lost and recomputed
+    * re-sends that partition's datagrams; downstream [[dedupRecords]]
+    * absorbs the duplicates.
     *
-    * Session: every micro-batch runs under the session that called
-    * `start` (the one `envelopes` belongs to), not under the per-query
-    * clone Structured Streaming hands to `foreachBatch`. The clone
-    * carries a fresh session id, jobs carry their session's artifact
-    * state, and the executor keeps one class loader per session id and
-    * caches generated classes per class loader, so under the clone each
-    * new query (each AvailableNow drain, each restart) compiles its whole
-    * plan again. Under the launching session a new query reuses the
-    * classes an earlier one compiled. The batch frame's plan (an RDD
-    * over the incremental execution) is unchanged: source, offsets and
-    * checkpoint are the query's own. The batch's writes therefore plan
-    * under the launching session's SQL conf as it is when the batch
-    * runs, and use its artifacts (added jars and files).
+    * Session: every micro-batch runs under the artifacts of the session
+    * that called `start` (the one `envelopes` belongs to), not those of
+    * the per-query clone Structured Streaming runs the batch under. The
+    * clone carries a fresh session id, jobs carry their session's
+    * artifact state, and the executor keeps one class loader per session
+    * id and caches generated classes per class loader, so under the
+    * clone each new query (each AvailableNow drain, each restart)
+    * compiles its whole plan again. Under the launching session's
+    * artifacts a new query reuses the classes an earlier one compiled.
+    * The dead-letter writes are frames of the launching session, so they
+    * plan under its SQL conf as it is when the batch runs, and use its
+    * artifacts (added jars and files).
     *
     * Layout note: this partitioned layout is INCOMPATIBLE with
     * dead-letter directories written by the pre-round-4 append-mode
@@ -276,32 +300,35 @@ object Streaming {
     * parquet partition discovery loudly. */
   def start(envelopes: DataFrame, syslogHost: String, syslogPort: Int,
       deadLetterDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    envelopes.writeStream
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val session = envelopes.sparkSession
+    val routed = Pipeline.routed(envelopes)
+    val sideSchema = routed.drop("lines").schema
+    routed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (frame: DataFrame, batchId: Long) =>
-        val batch = ExprBridge.onSession(frame, envelopes.sparkSession)
-        val sc = batch.sparkSession.sparkContext
-        val quarantined = sc.longAccumulator
-        val rejected = sc.longAccumulator
-        val side = UdpSyslogSink.sendRouted(Pipeline.routed(batch),
-          syslogHost, syslogPort, quarantined, rejected)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        def deadLetters(n: LongAccumulator, kind: String, keep: Column,
-            cols: String*): Unit =
-          if (n.value > 0)
-            side.filter(keep).select(cols.map(col): _*).coalesce(1)
-              .write.mode("overwrite")
-              .parquet(s"$deadLetterDir/$kind/batch_id=$batchId")
-        try {
-          side.write.format("noop").mode("overwrite").save()
-          deadLetters(quarantined, "quarantine", col("reason").isNotNull,
-            "requestId", "record_idx", "data", "reason")
-          deadLetters(rejected, "rejected", col("reject_reason").isNotNull,
-            "requestId", "reject_reason")
-        } finally side.unpersist(blocking = false)
-        ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        ExprBridge.withArtifacts(session) {
+          val quarantined = session.sparkContext.longAccumulator
+          val rejected = session.sparkContext.longAccumulator
+          val side = UdpSyslogSink.sendRouted(batch, syslogHost, syslogPort,
+            quarantined, rejected).persist(StorageLevel.MEMORY_AND_DISK)
+          def deadLetters(n: LongAccumulator, kind: String, keep: Column,
+              cols: String*): Unit =
+            if (n.value > 0)
+              ExprBridge.frame(session, side, sideSchema).filter(keep)
+                .select(cols.map(col): _*).coalesce(1)
+                .write.mode("overwrite")
+                .parquet(s"$deadLetterDir/$kind/batch_id=$batchId")
+          try {
+            side.count()
+            deadLetters(quarantined, "quarantine", col("reason").isNotNull,
+              "requestId", "record_idx", "data", "reason")
+            deadLetters(rejected, "rejected", col("reject_reason").isNotNull,
+              "requestId", "reject_reason")
+          } finally side.unpersist(blocking = false)
+        }
       }
       .start()
+  }
 }

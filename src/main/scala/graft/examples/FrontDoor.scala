@@ -11,8 +11,10 @@ import java.util.concurrent.atomic.AtomicLong
 /** Example HTTP front door replicating the reference's ingest transport
   * (app/app.py:60-105): `POST /endpoint` accepts one Firehose delivery
   * envelope per request, validates it with the SAME type-strict gate
-  * the Spark pipeline uses ([[DnsValidation.envelopeReason]] — one
-  * validator, both surfaces), answers with the Firehose HTTP-endpoint
+  * the Spark pipeline uses ([[DnsValidation.envelopeRequestId]], the
+  * gate behind [[DnsValidation.envelopeReason]] — one validator, both
+  * surfaces — whose one parse also yields the ack's requestId), answers
+  * with the Firehose HTTP-endpoint
   * response contract, and spools accepted bodies as files for the
   * Structured Streaming file source
   * ([[graft.dns.Streaming.envelopeSource]] with `format="files"`).
@@ -84,13 +86,12 @@ object FrontDoor {
     }
     val body = new String(ex.getRequestBody.readAllBytes(),
       StandardCharsets.UTF_8)
-    DnsValidation.envelopeReason(body) match {
-      case null =>
-        val requestId = mapper.readTree(body).get("requestId").asText()
+    DnsValidation.envelopeRequestId(body) match {
+      case Right(requestId) =>
         spool(spoolDir, body)
         respond(ex, 200,
           s"""{"requestId": ${mapper.writeValueAsString(requestId)}, "timestamp": $now}""")
-      case reason =>
+      case Left(reason) =>
         respond(ex, 400,
           s"""{"requestId": "unknown", "timestamp": $now, "errorMessage": "Invalid data format: $reason"}""")
     }

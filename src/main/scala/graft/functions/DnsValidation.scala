@@ -222,16 +222,19 @@ object DnsValidation {
     * passes per draft-7 "integer" — including integral floats beyond
     * Long range like 1e30, which Python's float.is_integer() accepts;
     * bool/null/string/Infinity fail); `maxLength` counts Unicode code
-    * points, as Python's len does. */
-  def envelopeReason(json: String): String = {
-    val b = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    envelopeReason(b, b.length)
-  }
-
-  /** Zero-decode variant for the expression hot path. */
+    * points, as Python's len does. Zero-decode: reads the expression
+    * hot path's bytes as they are. */
   def envelopeReason(json: UTF8String): String = {
     val b = json.getBytes
-    envelopeReason(b, b.length)
+    envelope(b, b.length).fold(identity, _ => null)
+  }
+
+  /** The same gate over a request body, in one parse: the violated
+    * constraint of [[envelopeReason]] on the left, or, for a valid
+    * envelope, its `requestId` on the right. */
+  def envelopeRequestId(json: String): Either[String, String] = {
+    val b = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    envelope(b, b.length).map(_.get("requestId").asText())
   }
 
   /** Draft-7 "integer": any integral number node, including floats
@@ -244,34 +247,35 @@ object DnsValidation {
       catch { case _: NumberFormatException => false }
     })
 
-  private def envelopeReason(bytes: Array[Byte], len: Int): String = {
-    if (nonUtf8JsonPrefix(bytes, len)) return "json"
+  /** The valid envelope's tree, or the constraint it violates. */
+  private def envelope(bytes: Array[Byte], len: Int): Either[String, JsonNode] = {
+    if (nonUtf8JsonPrefix(bytes, len)) return Left("json")
     val root: JsonNode =
       try mapper.readTree(bytes, 0, len)
-      catch { case _: Exception => return "json" }
-    if (root == null || root.isMissingNode) return "json"
-    if (!root.isObject) return "envelope_type"
+      catch { case _: Exception => return Left("json") }
+    if (root == null || root.isMissingNode) return Left("json")
+    if (!root.isObject) return Left("envelope_type")
     val rid = root.get("requestId")
-    if (rid == null) return "requestId_missing"
-    if (!rid.isTextual) return "requestId_type"
+    if (rid == null) return Left("requestId_missing")
+    if (!rid.isTextual) return Left("requestId_type")
     val ts = root.get("timestamp")
     if (ts != null && !isJsonInteger(ts))
-      return "timestamp_type"
+      return Left("timestamp_type")
     val recs = root.get("records")
-    if (recs == null) return "records_missing"
-    if (!recs.isArray) return "records_type"
-    if (recs.size() < 1) return "records_empty"
-    if (recs.size() > 10000) return "records_over_max"
+    if (recs == null) return Left("records_missing")
+    if (!recs.isArray) return Left("records_type")
+    if (recs.size() < 1) return Left("records_empty")
+    if (recs.size() > 10000) return Left("records_over_max")
     val it = recs.elements()
     while (it.hasNext) {
       val r = it.next()
-      if (!r.isObject) return "record_type"
+      if (!r.isObject) return Left("record_type")
       val d = r.get("data")
-      if (d == null || !d.isTextual) return "data_invalid"
+      if (d == null || !d.isTextual) return Left("data_invalid")
       val s = d.asText()
-      if (s.codePointCount(0, s.length) > 1365336) return "data_invalid"
+      if (s.codePointCount(0, s.length) > 1365336) return Left("data_invalid")
     }
-    null
+    Right(root)
   }
 }
 

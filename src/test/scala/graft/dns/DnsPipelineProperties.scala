@@ -3,8 +3,10 @@ package graft.dns
 import graft.SparkTestBase
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.propBoolean
+import org.apache.spark.sql.Dataset
+import java.net.{DatagramPacket, DatagramSocket, InetAddress, SocketTimeoutException}
 import java.nio.charset.StandardCharsets
-import java.util.Base64
+import java.util.{Base64, HexFormat}
 
 /** SURVEY.md §5.2 property tests, against a faithful Scala port of the
   * reference's validators:
@@ -96,16 +98,17 @@ object DnsPipelineProperties extends Properties("DnsPipeline")
     TestRecord(render(mutated), stillValid, nAns)
   }
 
-  private def run(records: Seq[String]): Pipeline.Outputs = {
-    val env =
+  /** One envelope of `records` as a raw-JSON dataset. */
+  private def envelope(records: Seq[String]): Dataset[String] = {
+    val sp = spark
+    import sp.implicits._
+    spark.createDataset(Seq(
       s"""{"requestId":"prop","records":[${
-        records.map(r => s"""{"data":"${b64(r)}"}""").mkString(",")}]}"""
-    Pipeline.processJson {
-      val sp = spark
-      import sp.implicits._
-      spark.createDataset(Seq(env))
-    }
+        records.map(r => s"""{"data":"${b64(r)}"}""").mkString(",")}]}"""))
   }
+
+  private def run(records: Seq[String]): Pipeline.Outputs =
+    Pipeline.processJson(envelope(records))
 
   propertyWithSeed("accepts iff reference validator accepts; " +
     "line count = sum(1+|answers|); lines are total", None) =
@@ -137,6 +140,70 @@ object DnsPipelineProperties extends Properties("DnsPipeline")
       val mixed = run(valid.map(_.json) ++ poison).lines
         .select("record_idx", "line_idx", "line").collect().map(_.toString)
       (clean.toSeq == mixed.toSeq) :| "valid records' lines must be identical"
+    }
+
+  /** A valid record whose query name is `qname` + ".example.". */
+  private def named(qname: Gen[String]): Gen[String] = for {
+    r <- validRecord
+    q <- qname
+  } yield render(r.map {
+    case ("query_name", _) => ("query_name", quote(q + ".example."))
+    case kv => kv
+  })
+
+  /** Query names mixing ASCII with 2-, 3- and 4-byte UTF-8 characters. */
+  private val utf8Name: Gen[String] =
+    Gen.listOf(Gen.oneOf("a", "\u00fc", "\u65e5\u672c", "\ud83d\ude00"))
+      .map(_.mkString + "\u00fc\u65e5\ud83d\ude00")
+
+  /** Hex of each datagram `send` sends to a loopback socket, sorted:
+    * the `n` it is expected to send, and any that follow within 200 ms. */
+  private def datagrams(n: Int)(send: Int => Unit): Seq[String] = {
+    val socket = new DatagramSocket(0, InetAddress.getLoopbackAddress)
+    try {
+      socket.setReceiveBufferSize(1 << 20)
+      socket.setSoTimeout(10000)
+      send(socket.getLocalPort)
+      val buf = new Array[Byte](65535)
+      def next(): String = {
+        val p = new DatagramPacket(buf, buf.length)
+        socket.receive(p)
+        HexFormat.of().formatHex(p.getData, 0, p.getLength)
+      }
+      val expected = Seq.fill(n)(next())
+      socket.setSoTimeout(200)
+      val extra = Iterator.continually(
+        try Some(next()) catch { case _: SocketTimeoutException => None })
+        .takeWhile(_.isDefined).flatten.toSeq
+      (expected ++ extra).sorted
+    } finally socket.close()
+  }
+
+  propertyWithSeed("datagrams are <30>, the line's UTF-8 bytes and a NUL",
+      None) =
+    // the last record's lines outgrow the sink's initial 1 KiB buffer
+    Prop.forAllNoShrink(Gen.listOfN(3, named(utf8Name)),
+        named(utf8Name.map(_ + "\u00fc" * 600))) { (short, long) =>
+      val recs = short :+ long
+      val sp = spark
+      import sp.implicits._
+      val lines = run(recs).lines.select("line").as[String].collect().toSeq
+      val want = lines.map(l => HexFormat.of().formatHex(
+        s"<30>$l\u0000".getBytes(StandardCharsets.UTF_8))).sorted
+      val counts = spark.sparkContext.longAccumulator
+      val routed = datagrams(want.size) { port =>
+        Streaming.UdpSyslogSink.sendRouted(
+          Pipeline.routed(Pipeline.parseEnvelopes(envelope(recs))),
+          "127.0.0.1", port, counts, counts).count()
+      }
+      val sent = datagrams(want.size) { port =>
+        Streaming.UdpSyslogSink.send(lines.toDS(), "127.0.0.1", port)
+      }
+      (lines.size >= 4) :| s"${lines.size} lines for 4 valid records" &&
+      lines.exists(_.getBytes(StandardCharsets.UTF_8).length > 1024) :|
+        "no line outgrows the buffer" &&
+      (routed == want) :| "sendRouted's datagrams differ from the framing" &&
+      (sent == want) :| "send's datagrams differ from the framing"
     }
 
   override def overrideParameters(p: org.scalacheck.Test.Parameters) =

@@ -2,9 +2,8 @@ package graft.dns
 
 import graft.SparkTestBase
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
@@ -23,36 +22,29 @@ import scala.jdk.CollectionConverters._
 class StreamingSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  /** Counts the scans of a foreachBatch input (the micro-batch's
-    * envelope rows) that the session's queries executed, looking
-    * through AQE wrappers and into cached plans. A cached plan's scan is
-    * one object however many queries read the cache, so it counts once;
-    * a query that re-reads the batch brings a scan of its own. */
-  private final class BatchScans extends QueryExecutionListener {
-    // by identity: plans are case classes, and two scans of one batch
-    // are equal as values
-    private val ran = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[RDDScanExec, java.lang.Boolean]())
+  /** Watches what a micro-batch ran: the plans of the session's
+    * queries, and the stages that read the spool — those in which a
+    * task added rows to a file scan's output-row metric. A stage that
+    * reads the batch's side rows from their blocks computes no scan, so
+    * it adds nothing; a job that reads the batch again brings a stage
+    * that does. */
+  private final class BatchScans extends SparkListener
+      with QueryExecutionListener {
+    private val updated = mutable.Set[(Int, Long)]() // (stage, metric id)
     private val plans = mutable.Buffer[String]()
 
-    private def scans(plan: SparkPlan): Seq[RDDScanExec] = plan match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
-      case s: RDDScanExec => Seq(s)
-      case p => p.children.flatMap(scans)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      e.taskInfo.accumulables.filter(_.update.exists(_ != 0L))
+        .foreach(a => updated += ((e.stageId, a.id)))
     }
-
     override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
-      synchronized {
-        plans += qe.executedPlan.toString
-        scans(qe.executedPlan).filter(s =>
-          s.output.exists(_.name == "envelope_strict_reason") &&
-            s.metrics("numOutputRows").value > 0).foreach(ran.add)
-      }
+      synchronized { plans += qe.executedPlan.toString }
     override def onFailure(name: String, qe: QueryExecution,
         e: Exception): Unit = ()
 
-    def executed: Int = synchronized(ran.size)
+    /** How many stages added to one of `metrics`. */
+    def stagesUpdating(metrics: Set[Long]): Int =
+      synchronized(updated.collect { case (s, m) if metrics(m) => s }.size)
     def sawWriteTo(path: String): Boolean =
       synchronized(plans.exists(_.contains(path)))
   }
@@ -143,10 +135,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val inDir = Files.createTempDirectory("stream_in").toString
     val dlDir = Files.createTempDirectory("stream_dl").toString
     val ckDir = Files.createTempDirectory("stream_ck").toString
-    // registered before the query starts, so every query its batch
-    // runs reports to it
+    // registered before the query starts, so every query and stage its
+    // batch runs reports to it
     val scans = new BatchScans
     spark.listenerManager.register(scans)
+    spark.sparkContext.addSparkListener(scans)
     val collector = new Collector
 
     Files.writeString(java.nio.file.Path.of(inDir, "batch0.json"),
@@ -160,18 +153,21 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "127.0.0.1", collector.port, dlDir, ckDir,
       Trigger.AvailableNow())
     q.awaitTermination(60000)
-    // listener events arrive in order: the rejected write is the last
+    // listener events arrive in order, through one queue: the rejected
+    // write is the last
     val seen = System.currentTimeMillis() + 10000
     while (!scans.sawWriteTo(s"$dlDir/rejected") &&
       System.currentTimeMillis() < seen) Thread.sleep(50)
     spark.listenerManager.unregister(scans)
+    spark.sparkContext.removeSparkListener(scans)
     assert(scans.sawWriteTo(s"$dlDir/rejected"))
-    assert(scans.executed === 1,
+    val spool = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan
+      .collect { case f: FileSourceScanExec => f.metrics("numOutputRows") }
+    assert(scans.stagesUpdating(spool.map(_.id).toSet) === 1,
       "a micro-batch must scan its input once, not once per output")
     // and that scan read each of the 3 input documents once
-    val read = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-      .lastExecution.executedPlan
-      .collect { case f: FileSourceScanExec => f.metrics("numOutputRows").value }
+    val read = spool.map(_.value)
     assert(read === Seq(3L), "the spool must be read once")
     // two valid records × (1 query + 1 reply) = 4 datagrams
     val lines = collector.take(4)
