@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{CdcChunks, DnsRecordValidity, DotProduct, EnvelopeValidity, WordShingles}
+import graft.dns.{DnsRecordValidity, EnvelopeValidity}
+import graft.functions.{CdcChunks, DotProduct, WordShingles}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}

@@ -2040,8 +2040,6 @@ object EventQueries {
   val qEventsBots = Q(
     "q_events_bots",
     (s, dir) => {
-      val wSeq = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val gaps = ev(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"),
           unix_micros(col("ts")).as("tsu"))

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * contract; `all` concatenates into RelationalQueries.all via
   * StatsQueries, so the surface and count pin are unchanged. */
 object RankStatsQueries {
-  import RelationalQueries.{Q, dsum, t}
+  import RelationalQueries.{Q, t}
 
   /** Spearman rank correlation per return flag — the robust dual of
     * [[qStatsCorr]]: Pearson's r computed on the RANKS of quantity

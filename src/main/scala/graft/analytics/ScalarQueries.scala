@@ -1,9 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Scalar expression families (string/date/math/regex/conditional/null/array/bitwise/interval) split out of RelationalQueries in round 10.
   *
@@ -12,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
   * parquet); `all` concatenates into RelationalQueries.all, so the
   * registry surface and count pin are unchanged by the split. */
 object ScalarQueries {
-  import RelationalQueries.{Q, dsum, t}
+  import RelationalQueries.{Q, t}
 
   /** String family: upper/lower/length/substr/replace/concat. */
   val qScalarString = Q(

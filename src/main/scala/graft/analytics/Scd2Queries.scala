@@ -1,10 +1,9 @@
 package graft.analytics
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** SCD2 warehouse family (build/incremental/lookup/audit) split out of RelationalQueries in round 10.
   *

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
   * parquet); `all` concatenates into RelationalQueries.all, so the
   * registry surface and count pin are unchanged by the split. */
 object StatsQueries {
-  import RelationalQueries.{Q, dsum, t}
+  import RelationalQueries.{Q, t}
 
   /** Column profiling / data-quality audit over `orders`: per-column
     * null count, approximate-free exact distinct count, and min/max

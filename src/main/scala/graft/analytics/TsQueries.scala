@@ -1,9 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Time-series family (gapfill/EWMA/Holt/OHLC/ACF/xcorr/CUSUM/seasonality/anomaly/forecast/completeness/drawdown/LTTB) split out of RelationalQueries in round 10.
   *
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * parquet); `all` concatenates into RelationalQueries.all, so the
   * registry surface and count pin are unchanged by the split. */
 object TsQueries {
-  import RelationalQueries.{Q, dsum, t}
+  import RelationalQueries.{Q, t}
 
   /** Input rows for the Holt smoother's typed scan. */
   private[analytics] case class HoltIn(g: String, x: Long, y: Long)

@@ -1,24 +1,21 @@
 package graft.dns
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.graftbridge.ExprBridge
 
-/** Ops 3–8 of SURVEY.md §2: record unnest, strict base64 + UTF-8 decode,
-  * JSON parse, structural validation, timestamp parse — entirely as
-  * null-safe `Column` expressions (zero UDFs) so Catalyst keeps the whole
+/** Ops 3–8 of SURVEY.md §2: record unnest, then base64 + UTF-8 decode,
+  * JSON parse, structural validation and timestamp parse as the one
+  * native expression [[DnsRecordParse]], so Catalyst keeps the whole
   * chain in one narrow stage.
   *
   * Strictness parity with the reference's per-record `try/except`
-  * (app/app.py:219-263): Python *raises* where Spark built-ins are
-  * lenient, so each lenient builtin is paired with an explicit validity
-  * predicate, and every record carries a `reason` column
-  * (null = clean) instead of throwing. That reproduces the reference's
-  * "one poison record never fails its batch" semantics (op 17) while
-  * upgrading silent drops to a quarantinable side output.
+  * (app/app.py:219-263): where Python raises, the record carries a
+  * `reason` column (null = clean) instead of throwing. That reproduces
+  * the reference's "one poison record never fails its batch" semantics
+  * (op 17) while upgrading silent drops to a quarantinable side output.
   */
 object Decode {
-
 
   /** Explode `records[]` (op 3, app/app.py:219-220): 1 envelope → N
     * record rows, keeping (requestId, record_idx) as the stable record
@@ -32,26 +29,15 @@ object Decode {
       .select(col("requestId"), col("timestamp"), col("record_idx"),
         col("record").getField("data").as("data"))
 
-  /** The expensive half: strict decode + ONE parse per record (both
-    * native single-pass expressions). The decoded `payload` text is an
-    * intermediate — `reason` is folded in here and `payload` dropped,
-    * so no later projection carries a second full copy of every
-    * record's text. */
+  /** Ops 4–8 in one expression per record: `dns` is [[DnsRecordParse]]
+    * of `data`, and `reason` (null = clean) and `query_ts` are read out
+    * of it. */
   def parseRecords(records: DataFrame): DataFrame =
     records
-      .withColumn("payload",
-        graft.functions.DnsFunctions.strictBase64Utf8(col("data")))
       .withColumn("dns",
-        graft.functions.DnsFunctions.parseRecord(col("payload")))
-      .withColumn(
-        "reason",
-        when(col("payload").isNull, lit("base64"))
-          .otherwise(col("dns").getField("reason")))
-      .drop("payload")
-
-  /** The cheap half: query_ts as a plain field read. */
-  def decorate(parsed: DataFrame): DataFrame =
-    parsed.withColumn("query_ts", col("dns").getField("query_ts"))
+        ExprBridge.column(DnsRecordParse(ExprBridge.expression(col("data")))))
+      .withColumn("reason", col("dns").getField("reason"))
+      .withColumn("query_ts", col("dns").getField("query_ts"))
 
   /** Record construction (op 7, app/app.py:234-249): project the 14
     * validated fields out of the one-pass parse struct — every column

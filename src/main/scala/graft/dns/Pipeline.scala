@@ -2,6 +2,7 @@ package graft.dns
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExprBridge
 
 /** End-to-end batch composition of the reference pipeline
   * (SURVEY.md §3 entry point 1): envelope documents in → BIND9 lines +
@@ -44,7 +45,7 @@ object Pipeline {
   def parseEnvelopes(raw: Dataset[String]): DataFrame =
     raw.toDF("json").select(
       from_json(col("json"), Schemas.envelopeSchema).as("env"),
-      graft.functions.DnsFunctions.envelopeValidityReason(col("json"))
+      ExprBridge.column(EnvelopeValidity(ExprBridge.expression(col("json"))))
         .as("envelope_strict_reason"))
       .select(col("env.*"), col("envelope_strict_reason"))
 
@@ -89,7 +90,7 @@ object Pipeline {
     * output of a batch uses [[process]], which shares one [[routed]]
     * frame between them. */
   def decodedRecords(envelopes: DataFrame): DataFrame =
-    Decode.decorate(Decode.parseRecords(Decode.explodeRecords(envelopes)))
+    Decode.parseRecords(Decode.explodeRecords(envelopes))
 
   /** Adds `lines`, the BIND9 line array of each row where `clean` holds
     * (null elsewhere). The shared line prefix is projected first, so it
@@ -137,7 +138,7 @@ object Pipeline {
       .select(col("requestId"), col("reject_reason"),
         col("pos").as("record_idx"), col("col").getField("data").as("data"))
     val accepted = col("reject_reason").isNull
-    val decoded = Decode.decorate(Decode.parseRecords(records))
+    val decoded = Decode.parseRecords(records)
       .withColumn("reason", when(accepted, col("reason")))
     withLines(decoded, accepted && col("reason").isNull)
       .select(col("requestId"), col("record_idx"), col("lines"),

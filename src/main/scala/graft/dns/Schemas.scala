@@ -6,8 +6,9 @@ import org.apache.spark.sql.types._
   * (SURVEY.md §1.2): the Kinesis Firehose HTTP-endpoint delivery envelope
   * (reference: app/app.py:35-58, jsonschema) and the decoded Route53
   * Resolver query-log record (reference: app/app.py:175-217, hand-rolled
-  * type table). Declared, never inferred — `from_json` / `variant_get`
-  * always receive these explicitly.
+  * type table). Declared, never inferred: `from_json` reads envelopes
+  * with [[envelopeSchema]], and the record codec ([[DnsRecordParse]])
+  * builds its row type from [[dnsRecordSchema]].
   */
 object Schemas {
 
@@ -32,8 +33,9 @@ object Schemas {
     * the exact types the reference enforces (app/app.py:177-192).
     * `srcport` is a STRING there (app/app.py:189) — a JSON number fails
     * the reference's isinstance check, which is why ingest-side
-    * validation runs on a VariantType value (see [[Decode]]), not on
-    * this struct: `from_json` silently coerces numbers to strings. */
+    * validation checks the JSON tree's node types (see
+    * [[DnsValidation]]) rather than `from_json` into this struct, which
+    * silently coerces numbers to strings. */
   val dnsRecordSchema: StructType = StructType(Seq(
     StructField("version", StringType),
     StructField("account_id", StringType),

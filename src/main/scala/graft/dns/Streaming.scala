@@ -27,8 +27,9 @@ import java.nio.charset.StandardCharsets
   * Sink: the reference emits one UDP datagram per formatted line via
   * SysLogHandler with no formatter, facility daemon, level info →
   * PRI `<30>` (app/app.py:17-32). [[UdpSyslogSink]] reproduces that:
-  * one socket per partition, one datagram per line, config via options
-  * instead of hard-coded constants. Dead-letter records and rejected
+  * one socket per partition, one datagram per line; the host and port
+  * are parameters, the `<30>` PRI and the trailing NUL are fixed, as in
+  * the reference. Dead-letter records and rejected
   * envelopes land in parquet side outputs instead of the reference's
   * log-and-drop — same keep-going semantics, auditable.
   *
@@ -166,17 +167,15 @@ object Streaming {
         col("n_queries"))
 
   /** UDP syslog emitter: one socket per partition, one datagram per
-    * line, framed exactly as Python's SysLogHandler does: `<pri>` PRI
-    * prefix AND a trailing NUL byte (SysLogHandler's append_nul=True
-    * default) — consumers that key on the NUL terminator parse both
-    * producers identically. `appendNul = false` opts out for
-    * receivers that treat NUL as payload. Static object so the
-    * closure serializes cleanly to executors. */
+    * line, framed exactly as Python's SysLogHandler does: the `<30>`
+    * PRI prefix (facility daemon, level info) AND a trailing NUL byte
+    * (SysLogHandler's append_nul=True default) — consumers that key on
+    * the NUL terminator parse both producers identically. Static
+    * object so the closure serializes cleanly to executors. */
   object UdpSyslogSink extends Serializable {
-    def send(lines: Dataset[String], host: String, port: Int,
-        priority: Int = 30, appendNul: Boolean = true): Unit = {
+    def send(lines: Dataset[String], host: String, port: Int): Unit = {
       lines.foreachPartition { (it: Iterator[String]) =>
-        val out = new Datagrams(host, port, priority, appendNul)
+        val out = new Datagrams(host, port)
         try it.foreach(out.send) finally out.close()
       }
     }
@@ -200,7 +199,7 @@ object Streaming {
       val sideColumns = fields.indices.filter(_ != lines)
         .map(i => BoundReference(i, fields(i).dataType, fields(i).nullable))
       routed.queryExecution.toRdd.mapPartitions { rows =>
-        val out = new Datagrams(host, port, 30, appendNul = true)
+        val out = new Datagrams(host, port)
         TaskContext.get().addTaskCompletionListener[Unit](_ => out.close())
         val side = UnsafeProjection.create(sideColumns)
         rows.filter { r =>
@@ -215,24 +214,22 @@ object Streaming {
       }
     }
 
-    /** One partition's socket and framing: `<pri>`, the line's UTF-8
+    /** One partition's socket and framing: `<30>`, the line's UTF-8
       * bytes and the NUL, copied into one buffer (grown when a line
       * needs more) and sent through one reused packet. */
-    private final class Datagrams(host: String, port: Int, priority: Int,
-        appendNul: Boolean) {
+    private final class Datagrams(host: String, port: Int) {
       private val socket = new DatagramSocket()
-      private val prefix = s"<$priority>".getBytes(StandardCharsets.UTF_8)
+      private val prefix = "<30>".getBytes(StandardCharsets.US_ASCII)
       private var buf = java.util.Arrays.copyOf(prefix, 1024)
       private val packet =
         new DatagramPacket(buf, 0, InetAddress.getByName(host), port)
       def send(line: UTF8String): Unit = {
         val end = prefix.length + line.numBytes
-        val length = if (appendNul) end + 1 else end
-        if (length > buf.length)
-          buf = java.util.Arrays.copyOf(buf, math.max(length, 2 * buf.length))
+        if (end + 1 > buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.max(end + 1, 2 * buf.length))
         line.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + prefix.length)
-        if (appendNul) buf(end) = 0
-        packet.setData(buf, 0, length)
+        buf(end) = 0
+        packet.setData(buf, 0, end + 1)
         socket.send(packet)
       }
       def send(line: String): Unit = send(UTF8String.fromString(line))

@@ -2,7 +2,7 @@ package graft.examples
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.functions.DnsValidation
+import graft.dns.DnsValidation
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}

@@ -1516,7 +1516,6 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
     // boundary-adversarial data: values exactly ON band multiples,
     // duplicated values (peers), values whose probe lands exactly on a
     // boundary, empty previous bands, and negatives.
-    import org.apache.spark.sql.expressions.{Window => W}
     val crafted = Seq(0.0, 1000.0, 1000.0, 2000.0, 1999.99, 2000.01,
       999.99, 1.0, -1000.0, -0.01, 5000.0, 7000.0, 6999.0, 6000.0)
     val rnd = new scala.util.Random(13)

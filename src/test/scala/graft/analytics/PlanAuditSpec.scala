@@ -703,4 +703,26 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"dns path must not shuffle:\n$plan")
   }
+
+  test("the dns pipeline decodes and parses each record once") {
+    import org.apache.spark.sql.catalyst.expressions.UnBase64
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import spark.implicits._
+    // A deterministic parse would be cloned by CollapseProject into
+    // every field read; the optimized plan must keep exactly one.
+    def count(plan: LogicalPlan)(p: PartialFunction[Any, Unit]): Int =
+      plan.collectWithSubqueries { case n => n.expressions }.flatten
+        .map(_.collect { case e if p.isDefinedAt(e) => e }.size).sum
+    val raw = Seq("""{"requestId":"r","records":[{"data":"e30="}]}""").toDS()
+    val plans = Seq(
+      "routed" -> graft.dns.Pipeline.routed(graft.dns.Pipeline.parseEnvelopes(raw)),
+      "q_dns_pipeline_full" -> SparkEntry.queries("q_dns_pipeline_full")(spark, sf))
+      .map { case (name, df) => name -> df.queryExecution.optimizedPlan }
+    for ((name, plan) <- plans) {
+      assert(count(plan) { case _: graft.dns.DnsRecordParse => } === 1,
+        s"$name must parse each record once:\n$plan")
+      assert(count(plan) { case _: UnBase64 => } === 0,
+        s"$name must not decode base64 outside the parse:\n$plan")
+    }
+  }
 }

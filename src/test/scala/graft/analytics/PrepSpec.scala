@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * properties a pipeline author relies on, beyond the cell-exact
   * oracle gate (which pins the values). */
 class PrepSpec extends AnyFunSuite with SparkTestBase {
-  import spark.implicits._
 
   private val sf = "/root/testdata/sf0.01"
 

@@ -47,7 +47,6 @@ class StreamingCdcSpec extends AnyFunSuite with SparkTestBase {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(Long, Long, String, Double)]
     val emitted = mutable.ArrayBuffer[(Long, CurrentRow)]()
-    var batchId = 0L
     // local val, not the spec's field: the map closure must not capture
     // the (non-serializable) ScalaTest suite
     val t0 = ts0

@@ -2,7 +2,6 @@ package graft.analytics
 
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 import scala.collection.mutable

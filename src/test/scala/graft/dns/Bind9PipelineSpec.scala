@@ -119,6 +119,40 @@ class Bind9PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(soleReason(run(envelope("r", Seq(badUtf8)))) === "base64")
   }
 
+  test("record base64 is read as CPython's b64decode(data).decode('utf-8')") {
+    // Decodes generated with python3 (3.11.7):
+    // base64.b64decode(s).decode('utf-8'), then json.loads.
+    val decodesToNonJson = Seq(
+      "QUJD=",    // 'ABC': a pad at quad position 0 is ignored
+      "QQ==QQ==", // 'A': the first pad run that ends a quad ends the input
+      "QQ===",    // 'A'
+      "QQ=A=",    // 'A\x00': a lone pad at position 2 waits for a second
+      "=",        // '': json.loads('') raises
+      "====")     // ''
+    val raises = Seq(
+      "Q\u00e9Q==", // ValueError: str.encode('ascii') fails
+      "QUJ\u00e9D")
+    for (d <- decodesToNonJson)
+      assert(soleReason(run(envelope("r", Seq(d)))) === "json", d)
+    for (d <- raises)
+      assert(soleReason(run(envelope("r", Seq(d)))) === "base64", d)
+    // so a valid record with a trailing pad is emitted, and one with a
+    // non-ASCII character inside its base64 is dropped
+    val data = b64(happyRecord)
+    assert(run(envelope("r", Seq(data + "="))).lines.count() === 3)
+    assert(soleReason(run(envelope("r",
+      Seq(data.take(8) + "\u00e9" + data.drop(8))))) === "base64")
+  }
+
+  test("decodedRecords reads a null data as base64") {
+    import org.apache.spark.sql.functions._
+    val env = spark.range(1).select(
+      lit("r").as("requestId"), lit(1L).as("timestamp"),
+      array(struct(lit(null).cast("string").as("data"))).as("records"))
+    assert(Pipeline.decodedRecords(env).select("reason").as[String]
+      .collect().toSeq === Seq("base64"))
+  }
+
   test("drop reason: malformed json") {
     assert(soleReason(run(envelope("r", Seq(b64("{nope"))))) === "json")
   }

@@ -142,6 +142,50 @@ object DnsPipelineProperties extends Properties("DnsPipeline")
       (clean.toSeq == mixed.toSeq) :| "valid records' lines must be identical"
     }
 
+  /** One envelope whose records' `data` are `datas` as given. */
+  private def runData(datas: Seq[String]): Pipeline.Outputs = {
+    val sp = spark
+    import sp.implicits._
+    val recs = datas.map(d => s"""{"data":"${d.replace("\n", "\\n")}"}""")
+    Pipeline.processJson(spark.createDataset(Seq(
+      s"""{"requestId":"prop","records":[${recs.mkString(",")}]}""")))
+  }
+
+  /** `c` inserted into a string at a position drawn here. */
+  private def insert(c: Gen[String]): Gen[String => String] = for {
+    at <- Gen.choose(0, 1 << 20)
+    s <- c
+  } yield (d: String) => {
+    val i = at % (d.length + 1)
+    d.take(i) + s + d.drop(i)
+  }
+
+  /** What CPython's non-strict b64decode skips: bytes outside the
+    * alphabet, and pads once a quad is complete. */
+  private val asciiJunk: Gen[String => String] = Gen.oneOf(
+    insert(Gen.oneOf(" ", "\n", "!")),
+    Gen.choose(1, 4).map(n => (d: String) => d + "=" * n))
+
+  propertyWithSeed("base64 as CPython reads it: ASCII junk or a pad run " +
+    "changes no line, a non-ASCII character drops the record", None) =
+    Prop.forAllNoShrink(Gen.listOfN(3, validTestRecord),
+        Gen.listOfN(3, asciiJunk),
+        insert(Gen.oneOf("\u00e9", "\u65e5", "\ud83d\ude00"))) {
+      (valid, junk, nonAscii) =>
+      def lines(out: Pipeline.Outputs) = out.lines
+        .select("record_idx", "line_idx", "line").collect().map(_.toString).toSeq
+      val datas = valid.map(r => b64(r.json))
+      val junked = datas.zip(junk).map { case (d, j) => j(d) }
+      val clean = lines(runData(datas))
+      val poisoned = runData(junked.updated(1, nonAscii(junked(1))))
+      val quarantined = poisoned.quarantine.select("record_idx", "reason")
+        .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+      (lines(runData(junked)) == clean) :| "junk changed the lines" &&
+      (quarantined == Seq((1, "base64"))) :| s"quarantined $quarantined" &&
+      (lines(poisoned) == clean.filterNot(_.startsWith("[1,"))) :|
+        "the other records' lines changed"
+    }
+
   /** A valid record whose query name is `qname` + ".example.". */
   private def named(qname: Gen[String]): Gen[String] = for {
     r <- validRecord
