@@ -13,9 +13,10 @@ import java.time.format.DateTimeFormatter
 
 /** The scaffold of the codec's expressions: one string child, handed to
   * [[evalUtf8]] as a `UTF8String`. Not null-propagating: a null child
-  * reaches `evalUtf8` as null and gets a verdict of its own, because
-  * each expression reads a null RESULT as "valid". So the generated
-  * code is written out here rather than by `nullSafeCodeGen`. */
+  * reaches `evalUtf8` as null and gets a verdict of its own (a null
+  * `data` is a `base64` drop, a null document reads `json`), where a
+  * null result would read as valid. So the generated code is written
+  * out here rather than by `nullSafeCodeGen`. */
 sealed abstract class Utf8Codec extends UnaryExpression {
 
   def evalUtf8(s: UTF8String): AnyRef
