@@ -1,5 +1,6 @@
 package graft.dns
 
+import graft.sources.SpoolSource
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -20,9 +21,10 @@ import java.nio.charset.StandardCharsets
   *
   * Source: each input document is one Firehose envelope = one delivery
   * (the reference's POST body, app/app.py:60-81). In production the
-  * same transforms hang off a Kinesis connector stream; the file/memory
-  * sources here exercise identical plans (no Kinesis connector jar
-  * ships in /opt/spark/jars — checked).
+  * same transforms hang off a Kinesis connector stream; the spool source
+  * ([[graft.sources.SpoolSource]], one envelope per line of each spooled
+  * file, read with `java.nio`) and MemoryStream here exercise identical
+  * plans (no Kinesis connector jar ships with Spark's jars).
   *
   * Sink: the reference emits one UDP datagram per formatted line via
   * SysLogHandler with no formatter, facility daemon, level info →
@@ -40,15 +42,17 @@ import java.nio.charset.StandardCharsets
   */
 object Streaming {
 
-  /** One-envelope-per-line file source (JSON text documents). */
+  /** The envelope spool: one envelope per line of each file in the local
+    * directory `path`, read by [[graft.sources.SpoolSource]] in name
+    * order, at most `maxFilesPerTrigger` files per micro-batch. */
   def envelopesFromJsonFiles(spark: SparkSession, path: String,
       maxFilesPerTrigger: Int = 16): DataFrame = {
     import spark.implicits._
     Pipeline.parseEnvelopes(
-      spark.readStream
+      spark.readStream.format(classOf[SpoolSource].getName)
+        .option("path", path)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .text(path)
-        .select(col("value")).as[String])
+        .load().as[String])
   }
 
   /** Config-selected envelope source: the deployment seam. The same
@@ -56,12 +60,19 @@ object Streaming {
     * production points `format` at "kinesis" (with the connector jar
     * on the classpath; none ships in this environment) and the
     * connector's options here, with zero code edits; this container's
-    * tests use the file source and MemoryStream, which exercise
+    * tests use the spool source and MemoryStream, which exercise
     * identical plans.
     *
-    * @param format        "files" (line-delimited JSON envelopes at
-    *                      options("path")) or any streaming DataSource
-    *                      name ("kinesis", "socket", "rate", ...)
+    * @param format        "files" (the spool: one JSON envelope per line
+    *                      of each file in the local directory
+    *                      options("path"), read as
+    *                      [[envelopesFromJsonFiles]] reads it; a path
+    *                      with a scheme other than `file` is refused,
+    *                      and a Hadoop file system is read through the
+    *                      connector arm with format "text" and
+    *                      payloadColumn "value") or any streaming
+    *                      DataSource name ("kinesis", "socket", "rate",
+    *                      ...)
     * @param options       passed to the reader verbatim (for "files":
     *                      `path`, optional `maxFilesPerTrigger`)
     * @param payloadColumn connector sources only: the column carrying

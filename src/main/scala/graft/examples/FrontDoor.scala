@@ -6,7 +6,7 @@ import graft.dns.DnsValidation
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** Example HTTP front door replicating the reference's ingest transport
   * (app/app.py:60-105): `POST /endpoint` accepts one Firehose delivery
@@ -16,21 +16,20 @@ import java.util.concurrent.atomic.AtomicLong
   * surfaces — whose one parse also yields the ack's requestId), answers
   * with the Firehose HTTP-endpoint
   * response contract, and spools accepted bodies as files for the
-  * Structured Streaming file source
-  * ([[graft.dns.Streaming.envelopeSource]] with `format="files"`).
+  * spool source ([[graft.sources.SpoolSource]], which
+  * [[graft.dns.Streaming.envelopeSource]] reads with `format="files"`).
   * `GET /health` mirrors app/app.py:265-267.
   *
   * JDK-only (`com.sun.net.httpserver`) so the example adds no
   * dependency; the engine never depends on this package. The reference
   * acks 200 BEFORE processing completes (app/app.py:96-102,
   * at-most-once) — the spool-then-stream split reproduces that ack
-  * timing while the checkpointed file source upgrades the processing
+  * timing while the checkpointed spool source upgrades the processing
   * side to at-least-once.
   */
 object FrontDoor {
 
   private val mapper = new ObjectMapper()
-  private val seq = new AtomicLong()
 
   final case class Server(http: HttpServer, spoolDir: Path,
       pool: java.util.concurrent.ExecutorService) {
@@ -40,7 +39,8 @@ object FrontDoor {
 
   /** Start the front door on `port` (0 = ephemeral), spooling accepted
     * envelopes into `spoolDir` (one file per delivery, atomic rename so
-    * the streaming file source never lists a partial write).
+    * the spool source never lists a partial write). One server per
+    * spool directory: its names are in order only among themselves.
     *
     * Thread-per-request, like the reference's `app.run(threaded=True)`
     * (app/app.py:279) — the JDK server's DEFAULT executor handles
@@ -51,7 +51,8 @@ object FrontDoor {
     val http = HttpServer.create(new InetSocketAddress(port), 0)
     val pool = java.util.concurrent.Executors.newCachedThreadPool()
     http.setExecutor(pool)
-    http.createContext("/endpoint", (ex: HttpExchange) => handle(ex, spoolDir))
+    val spool = new Spool(spoolDir)
+    http.createContext("/endpoint", (ex: HttpExchange) => handle(ex, spool))
     http.createContext("/health", (ex: HttpExchange) => {
       val body = """{"status": "healthy"}""".getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -71,7 +72,7 @@ object FrontDoor {
     * verbatim), 200 `{requestId, timestamp}` on acceptance, 400
     * `{requestId: "unknown", timestamp, errorMessage}` on any schema
     * violation. */
-  private def handle(ex: HttpExchange, spoolDir: Path): Unit = {
+  private def handle(ex: HttpExchange, spool: Spool): Unit = {
     val now = System.currentTimeMillis()
     if (ex.getRequestMethod != "POST") {
       respond(ex, 405, s"""{"error": "method not allowed"}""")
@@ -88,7 +89,7 @@ object FrontDoor {
       StandardCharsets.UTF_8)
     DnsValidation.envelopeRequestId(body) match {
       case Right(requestId) =>
-        spool(spoolDir, body)
+        spool.write(body)
         respond(ex, 200,
           s"""{"requestId": ${mapper.writeValueAsString(requestId)}, "timestamp": $now}""")
       case Left(reason) =>
@@ -105,19 +106,40 @@ object FrontDoor {
     ex.close()
   }
 
-  /** One envelope document per file; write-then-rename so the file
-    * source's directory listing only ever sees complete documents.
-    * The name carries a UUID: a bare counter would reset on server
-    * restart and the atomic rename would silently overwrite a not-yet-
-    * processed spool file. */
-  private def spool(spoolDir: Path, body: String): Unit = {
-    val n = seq.incrementAndGet()
-    val tmp = Files.createTempFile(spoolDir, ".spool", ".tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp,
-      spoolDir.resolve(
-        s"envelope-$n-${java.util.UUID.randomUUID().toString.take(8)}.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+  /** One envelope document per file, named `spool-<n>.json` with `n`
+    * zero-padded to 19 digits, so names sort in the order they were
+    * spooled. The spool source reads files in name order and never
+    * reads a name at or before the last one it admitted, so a name must
+    * become visible only after every smaller one: each body is written
+    * to a hidden temp file, and the number is taken and the file renamed
+    * under one lock. A server resumes after the highest number in its
+    * spool, and no lower than the clock in microseconds, so a restart
+    * after the processed files were removed still names new files after
+    * them. The `spool-` prefix sorts after the `envelope-<n>-<uuid>`
+    * names of earlier versions, so a spool holding some of those stays
+    * in order. */
+  private final class Spool(dir: Path) {
+    private var seq = {
+      val names = Files.list(dir)
+      try names.iterator().asScala.map(_.getFileName.toString)
+        .collect { case Spool.Name(n) => n.toLong }
+        .foldLeft(System.currentTimeMillis() * 1000)(math.max)
+      finally names.close()
+    }
+
+    def write(body: String): Unit = {
+      val tmp = Files.createTempFile(dir, ".spool", ".tmp")
+      Files.writeString(tmp, body)
+      synchronized {
+        seq += 1
+        Files.move(tmp, dir.resolve(f"spool-$seq%019d.json"),
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+    }
+  }
+
+  private object Spool {
+    val Name = """spool-(\d{19})\.json""".r
   }
 
   /** End-to-end example job: front door on `--port`, pipeline reading

@@ -3,7 +3,8 @@ package graft.dns
 import graft.SparkTestBase
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
@@ -17,14 +18,14 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Streaming-layer specs: micro-batch semantics over MemoryStream, the
-  * real file source end-to-end (UDP datagrams received on loopback +
+  * spool source end-to-end (UDP datagrams received on loopback +
   * parquet dead-letter), and the watermarked windowed aggregation. */
 class StreamingSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   /** Watches what a micro-batch ran: the plans of the session's
     * queries, and the stages that read the spool — those in which a
-    * task added rows to a file scan's output-row metric. A stage that
+    * task added rows to the spool scan's output-row metric. A stage that
     * reads the batch's side rows from their blocks computes no scan, so
     * it adds nothing; a job that reads the batch again brings a stage
     * that does. */
@@ -163,7 +164,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(scans.sawWriteTo(s"$dlDir/rejected"))
     val spool = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
       .lastExecution.executedPlan
-      .collect { case f: FileSourceScanExec => f.metrics("numOutputRows") }
+      .collect { case s: MicroBatchScanExec => s.metrics("numOutputRows") }
     assert(scans.stagesUpdating(spool.map(_.id).toSet) === 1,
       "a micro-batch must scan its input once, not once per output")
     // and that scan read each of the 3 input documents once
